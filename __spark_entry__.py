@@ -43,6 +43,13 @@ from ingestprocessstoreinnrt_spark.operators import (
     windows,
 )
 
+# registry order: queries() and oracle_sql() merge the modules' dicts
+# in this order before _ordered() sorts them
+_MODULES = (bi, entity, profile, dedup, similarity, textops, multimodal,
+            ml, windows, skew, asof, sketch, cdc, graph, timeseries, layout,
+            quality, funnel, curation, incremental, basket, jsonops, dss,
+            bloom)
+
 # smoke entry targets sf0.001 per the driver contract; overridable for
 # consistency with catalog.TESTDATA_ROOT's env-driven default
 _SMOKE_SF_DIR = os.environ.get(
@@ -134,10 +141,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from ingestprocessstoreinnrt_spark import planmemo
 
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for mod in (bi, entity, profile, dedup, similarity, textops,
-                multimodal, ml, windows, skew, asof, sketch, cdc, graph,
-                timeseries, layout, quality, funnel, curation, incremental,
-                basket, jsonops, dss, bloom):
+    for mod in _MODULES:
         out.update(mod.QUERIES)
     return planmemo.memoize_pure(_ordered(out))
 
@@ -147,10 +151,7 @@ def oracle_sql_plain() -> dict[str, str]:
     operator modules publish them (no materialization folding) — the
     plain side of the mat-twin pin test."""
     out: dict[str, str] = {}
-    for mod in (bi, entity, profile, dedup, similarity, textops,
-                multimodal, ml, windows, skew, asof, sketch, cdc, graph,
-                timeseries, layout, quality, funnel, curation, incremental,
-                basket, jsonops, dss, bloom):
+    for mod in _MODULES:
         out.update(mod.ORACLE)
     return _ordered(out)
 
@@ -191,6 +192,6 @@ def oracle_sql_mat() -> dict[str, list[str]]:
     driver contract (duckdb.sql on such a string returns the LAST
     statement's result)."""
     out: dict[str, list[str]] = {}
-    for mod in (dedup, basket):
+    for mod in _MODULES:
         out.update(getattr(mod, "ORACLE_MAT", {}))
     return out

@@ -230,6 +230,7 @@ def main() -> None:
     # quiet baseline — a momentary dip is not a quiet box.
     load_5m = round(os.getloadavg()[1], 2)
     import __spark_entry__ as e
+    from ingestprocessstoreinnrt_spark import planmemo
     from ingestprocessstoreinnrt_spark.operators import artifacts as _artifacts
     from ingestprocessstoreinnrt_spark.session import get_spark
 
@@ -344,7 +345,7 @@ def main() -> None:
         families_kept = sorted(fam_order)
 
     def sweep_family(members: list[str]) -> dict[str, tuple[float, float]]:
-        """Run one family cold (cache + family memos cleared first).
+        """Run one family cold (cache + every session memo cleared first).
         Each query runs TWICE back-to-back: (cold, warm) — warm rides
         every cache/memo its own cold run populated, so cross-round
         diffs compare warm (plans only) while family cache-attribution
@@ -352,15 +353,7 @@ def main() -> None:
         order moved first-touch costs between rounds and manufactured
         phantom 2-6x 'regressions' that were all sub-second warm)."""
         spark.catalog.clearCache()
-        from ingestprocessstoreinnrt_spark import planmemo as _pm
-        from ingestprocessstoreinnrt_spark.operators import basket as _bk
-        from ingestprocessstoreinnrt_spark.operators import curation as _cu
-        from ingestprocessstoreinnrt_spark.operators import dedup as _dd
-
-        _dd._LSH_PAIRS_MEMO.clear()  # family-cold includes the memos
-        _cu._BPE_MEMO.clear()
-        _bk._PAIR_MEMO.clear()
-        _pm.clear()  # plan memo: cold rebuilds + re-registers caches
+        planmemo.clear()
         out: dict[str, tuple[float, float]] = {}
         for name in members:
             try:

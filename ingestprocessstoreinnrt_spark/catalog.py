@@ -15,6 +15,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .planmemo import session_memo
+
 TESTDATA_ROOT = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 TABLES = (
@@ -46,34 +48,23 @@ _TS_COLS = {
 }
 
 
-# Logical-plan memo: building a parquet DataFrame costs ~100 ms of file
-# listing + footer schema reads, and a 40-query session re-loads the same
-# immutable table dozens of times.  Keyed per Spark application so a new
-# session (the driver's fresh process) always re-lists; the memo'd object
-# is an immutable logical plan whose execution stays fully lazy.
-_LOAD_MEMO: dict = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The table's parquet DataFrame, memoized per session: building
+    one costs ~100 ms of file listing + footer schema reads, and a
+    40-query session re-loads the same immutable table dozens of times.
+    The memoized object is a logical plan whose execution stays lazy."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     # Callers (the test driver included) may hand us a session built
     # without our defaults; both knobs are runtime-settable, so make
-    # every load self-sufficient.  Set on every call (not just memo
-    # misses): a sibling session sharing the JVM app shares the memo but
-    # not the SQL conf.
+    # every load self-sufficient — on hits too.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, os.path.abspath(sf_dir), name)
-    got = _LOAD_MEMO.get(key)
+    memo = session_memo(spark, "load_table")
+    key = (os.path.abspath(sf_dir), name)
+    got = memo.get(key)
     if got is not None:
         return got
-    # miss: evict entries from other applications — their DataFrames pin
-    # stopped SparkSessions and would otherwise accumulate forever in
-    # long-lived processes that restart sessions (the test suite does)
-    for k in [k for k in _LOAD_MEMO if k[0] != app_id]:
-        del _LOAD_MEMO[k]
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     for col in _TS_COLS.get(name, ()):
         dt = dict(df.dtypes).get(col)
@@ -81,7 +72,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn(col, F.expr(f"timestamp_micros({col} DIV 1000)"))
         elif dt == "timestamp_ntz":  # NTZ slipped through (pre-set reader conf)
             df = df.withColumn(col, F.col(col).cast("timestamp"))
-    _LOAD_MEMO[key] = df
+    memo[key] = df
     return df
 
 

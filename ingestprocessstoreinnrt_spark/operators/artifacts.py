@@ -1,49 +1,45 @@
-"""Persisted per-corpus operator artifacts (pair frames, signature
-indexes) — the dedup-family twin of ml.py's centroid disk cache.
+"""Persisted per-corpus fitted indexes: parquet frames (dedup and
+basket pair frames, signature indexes) via `corpus_artifact`, and small
+JSON values (ml.py's centroid lists and PQ codebooks) via
+`json_artifact`.  Both go through one key, one atomic publish, one
+prune and one set of `STATS` counters.
 
-A verified near-dup pair frame or a banded-signature index is a FITTED
-INDEX: a pure function of the corpus contents that a production dedup
-service builds once and maintains next to the data (exactly what
-`dedup_incremental` models — its docstring describes the persisted
-band/token tables an ingest job appends to).  Rebuilding such an index
-from raw text on every session start is the 100 TB anti-pattern: the
-r11 sf10 sweep spent 1502 s of dedup-family cold time (half the whole
-sweep's cold budget) re-tokenizing, re-signing, and re-joining a corpus
-that had not changed since the previous sweep (VERDICT r11 item 4).
+Such an index is a pure function of the corpus contents that a
+production service builds once and maintains next to the data.
+Rebuilding it on every session start is the 100 TB anti-pattern: the
+r11 sf10 sweep spent 1502 s of dedup-family cold time (half the
+sweep's cold budget) re-deriving a corpus index that had not changed
+(VERDICT r11 item 4).
 
-So: `corpus_artifact` persists a built DataFrame as parquet under
-`<repo>/.cache/artifacts/<name>/<corpus>/<fingerprint>`, where the
-fingerprint hashes BOTH the source table's file stats (names, sizes,
-`st_mtime_ns`, file count, total bytes) AND the builder's defining
-module source — so a changed corpus OR a changed builder gets a fresh
-build, never a stale read (VERDICT r12 item 1 + ADVICE r12: the
-earlier name/size/whole-second-mtime key was blind to a same-second
-same-size rewrite, and blind entirely to code edits).
+Artifacts live under `<repo>/.cache/artifacts/<name>/<corpus>/<fp>`,
+where the fingerprint hashes BOTH the source table's file stats (names,
+sizes, `st_mtime_ns`, file count, total bytes) AND the builder's source
+code — so a changed corpus OR a changed builder gets a fresh build,
+never a stale read (VERDICT r12 item 1 + ADVICE r12: a
+name/size/whole-second-mtime key is blind to a same-second same-size
+rewrite, and blind entirely to code edits).
 
-Every hit is validated (the artifact dir must still contain parquet
-data files, not just a surviving `_SUCCESS`); a corrupt, partial, or
-missing artifact falls through to the builder, so correctness never
-depends on the cache.  Writes are atomic (write to a pid-suffixed tmp
-dir, rename into place), so concurrent sessions race safely; the
-loser's tmp dir is removed and the winner's artifact is read.  Stale
-fingerprints of the same artifact name+corpus are pruned after a
-successful publish, but only once they have sat unused past
-`PRUNE_GRACE_SEC` — each hit touches the artifact's `_SUCCESS` marker,
-so a concurrent session still reading an old-fingerprint frame
-(corpus mutated mid-flight) keeps its parquet files for the grace
-window instead of having them deleted under its plan (VERDICT r12
-item 4).
+Every hit is validated (the dir must still hold readable data, not
+just a surviving `_SUCCESS`); a corrupt, partial, or missing artifact
+falls through to the builder, so correctness never depends on the
+cache.  Writes are atomic (a pid-suffixed tmp dir renamed into place),
+so concurrent sessions race safely.  Stale fingerprints of the same
+name+corpus are pruned after a publish, but only once unused past
+`PRUNE_GRACE_SEC` — each hit touches the `_SUCCESS` marker, so a
+session still reading an old-fingerprint frame keeps its files for the
+grace window (VERDICT r12 item 4).
 
 Determinism contract: a builder wired through this module MUST be a
-deterministic pure function of the source table (all dedup pair
-builders are — integer minhash/PPJoin math, exact verification), so
-reading the artifact is bit-identical to rebuilding, and the DuckDB
-oracle twins stay green with or without a cache hit.
+deterministic pure function of the source table (integer minhash/PPJoin
+math, exact verification, integer Lloyd's), so reading the artifact is
+bit-identical to rebuilding, and the DuckDB oracle twins stay green
+with or without a cache hit.
 """
 
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import shutil
 import time
@@ -111,21 +107,23 @@ _CODE_FP_CACHE: dict[tuple[str, int, int], str] = {}
 
 
 def builder_fingerprint(build: Callable[[], DataFrame]) -> str:
-    """md5 of the builder's defining module source (plus this module's
-    own source): an edit to builder code — tokenization, hash
-    families, salting, verify logic — invalidates persisted artifacts
-    exactly like an edit to the data (ADVICE r12).  Coarse on purpose:
-    any edit to the defining module rebuilds that module's artifacts,
-    which costs one redundant build per edit and can never serve a
-    stale pair frame."""
-    paths = []
-    code = getattr(build, "__code__", None)
-    fname = getattr(code, "co_filename", None)
-    if fname and os.path.isfile(fname):
-        paths.append(fname)
-    paths.append(os.path.abspath(__file__))
+    """code_fingerprint of the builder's defining module.  Coarse on
+    purpose: any edit to the defining module rebuilds that module's
+    artifacts, which costs one redundant build per edit and can never
+    serve a stale pair frame."""
+    fname = getattr(getattr(build, "__code__", None), "co_filename", None)
+    return code_fingerprint(
+        *([fname] if fname and os.path.isfile(fname) else [])
+    )
+
+
+def code_fingerprint(*paths: str) -> str:
+    """md5 of the given source files plus this module's own source: an
+    edit to builder code — tokenization, hash families, salting, verify
+    logic, fit shaping — invalidates persisted artifacts exactly like
+    an edit to the data (ADVICE r12)."""
     digests = []
-    for p in paths:
+    for p in (*paths, os.path.abspath(__file__)):
         try:
             st = os.stat(p)
             key = (p, st.st_size, st.st_mtime_ns)
@@ -170,6 +168,83 @@ def _entry_age_sec(path: str) -> float:
     return time.time() - newest
 
 
+def _artifact(
+    sf_dir: str,
+    name: str,
+    table: str,
+    code_fp: str,
+    read: Callable[[str], object],
+    write: Callable[[str], None],
+    direct: Callable[[], object],
+):
+    """The shared key / hit / publish / prune path.  `read(path)`
+    returns the published value, or None if the dir holds no valid
+    data; `write(tmp)` builds the value into a fresh dir; `direct()`
+    serves the value when no published copy can be read."""
+    fp = hashlib.md5(
+        (table_fingerprint(sf_dir, table) + "|" + code_fp).encode()
+    ).hexdigest()
+    base = os.path.join(_ART_DIR, name, corpus_key(sf_dir, table))
+    final = os.path.join(base, fp)
+
+    def published():
+        if os.path.exists(_done_marker(final)):
+            return read(final)
+        return None
+
+    got = published()
+    if got is not None:
+        STATS["hit"] += 1
+        try:
+            # recency touch: keeps this fingerprint out of a concurrent
+            # publisher's prune for PRUNE_GRACE_SEC
+            os.utime(_done_marker(final))
+        except OSError:
+            pass
+        return got
+    STATS["miss"] += 1
+    tmp = f"{final}.tmp-{os.getpid()}"
+    try:
+        write(tmp)
+    except Exception:
+        # a write failure is either an unwritable cache dir (read-only
+        # checkout, full disk — Spark surfaces it as a JVM IOException,
+        # not OSError) or a broken builder.  Correctness never depends
+        # on the cache: serve the value directly; a genuinely broken
+        # builder re-raises out of `direct`.
+        shutil.rmtree(tmp, ignore_errors=True)
+        got = published()  # concurrent winner
+        return direct() if got is None else got
+    try:
+        os.rename(tmp, final)
+    except OSError:
+        # lost a publish race (keep a VALID winner) or `final` is gutted
+        # (marker without data): replace it with the fresh build
+        if published() is None:
+            shutil.rmtree(final, ignore_errors=True)
+            try:
+                os.rename(tmp, final)
+            except OSError:
+                pass
+        shutil.rmtree(tmp, ignore_errors=True)
+    # prune artifacts of dead corpora (fingerprint changed): they can
+    # never be MISSED again and only cost disk — but give any session
+    # still holding a lazy read of one a grace window before deleting
+    # its files (hits refresh the window via the _SUCCESS touch).
+    # Never touch tmp dirs — another session may be mid-publish.
+    try:
+        for entry in os.listdir(base):
+            if entry == fp or ".tmp-" in entry:
+                continue
+            epath = os.path.join(base, entry)
+            if _entry_age_sec(epath) > PRUNE_GRACE_SEC:
+                shutil.rmtree(epath, ignore_errors=True)
+    except OSError:
+        pass
+    got = published()
+    return direct() if got is None else got  # no valid winner: serve direct
+
+
 def corpus_artifact(
     spark: SparkSession,
     sf_dir: str,
@@ -193,71 +268,60 @@ def corpus_artifact(
     scratch frames it cached for its own fan-out (the LSH signature
     frame).  It is NOT run on the direct-serve fallback paths, where
     the returned frame is still lazy and may depend on those caches."""
-    fp = hashlib.md5(
-        (
-            table_fingerprint(sf_dir, table)
-            + "|"
-            + builder_fingerprint(build)
-        ).encode()
-    ).hexdigest()
-    base = os.path.join(_ART_DIR, name, corpus_key(sf_dir, table))
-    final = os.path.join(base, fp)
-    if os.path.exists(_done_marker(final)) and _has_parquet_data(final):
-        STATS["hit"] += 1
-        try:
-            # recency touch: keeps this fingerprint out of a concurrent
-            # publisher's prune for PRUNE_GRACE_SEC
-            os.utime(_done_marker(final))
-        except OSError:
-            pass
-        return spark.read.parquet(final)
-    STATS["miss"] += 1
-    tmp = f"{final}.tmp-{os.getpid()}"
-    try:
+
+    def read(path: str) -> DataFrame | None:
+        if _has_parquet_data(path):
+            return spark.read.parquet(path)
+        return None
+
+    def write(tmp: str) -> None:
         build().write.mode("overwrite").parquet(tmp)
-    except Exception:
-        # a write failure is either an unwritable cache dir (read-only
-        # checkout, full disk — Spark surfaces it as a JVM IOException,
-        # not OSError) or a broken builder.  Correctness never depends
-        # on the cache: serve the built frame directly; a genuinely
-        # broken builder re-raises out of this second call.
-        shutil.rmtree(tmp, ignore_errors=True)
-        if os.path.exists(_done_marker(final)) and _has_parquet_data(final):
-            return spark.read.parquet(final)  # concurrent winner
-        return build()
-    if cleanup is not None:
-        try:
-            cleanup()
-        except Exception:
-            pass  # scratch-cache hygiene only; never fail a publish
-    try:
-        os.rename(tmp, final)
-    except OSError:
-        if os.path.exists(_done_marker(final)) and _has_parquet_data(final):
-            # lost a concurrent-publish race to a VALID winner: keep it
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            # `final` exists but is gutted (marker without data files):
-            # replace it with the fresh build
-            shutil.rmtree(final, ignore_errors=True)
+        if cleanup is not None:
             try:
-                os.rename(tmp, final)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)
-    # prune artifacts of dead corpora (fingerprint changed): they can
-    # never be MISSED again and only cost disk — but give any session
-    # still holding a lazy read of one a grace window before deleting
-    # its files (hits refresh the window via the _SUCCESS touch).
-    # Never touch tmp dirs — another session may be mid-publish.
-    try:
-        for entry in os.listdir(base):
-            if entry == fp or ".tmp-" in entry:
-                continue
-            epath = os.path.join(base, entry)
-            if _entry_age_sec(epath) > PRUNE_GRACE_SEC:
-                shutil.rmtree(epath, ignore_errors=True)
-    except OSError:
-        pass
-    if os.path.exists(_done_marker(final)) and _has_parquet_data(final):
-        return spark.read.parquet(final)
-    return build()  # publish lost and no valid winner: serve direct
+                cleanup()
+            except Exception:
+                pass  # scratch-cache hygiene only; never fail a publish
+
+    return _artifact(
+        sf_dir, name, table, builder_fingerprint(build), read, write, build
+    )
+
+
+def json_artifact(
+    sf_dir: str,
+    name: str,
+    build: Callable[[], object],
+    sources: tuple[str, ...],
+    table: str,
+):
+    """Return the small JSON-serializable value `name` for this corpus
+    (e.g. a centroid list), building + persisting on miss.  `sources`
+    lists every source file whose code determines the value; an edit
+    to any of them rebuilds.  Hit and miss both return the value read
+    back from the published JSON (the built value itself only when
+    nothing could be published)."""
+    built: list = []
+
+    def read(path: str):
+        try:
+            with open(os.path.join(path, "part-0.json")) as f:
+                return json.load(f)
+        except (OSError, ValueError):
+            return None
+
+    def write(tmp: str) -> None:
+        built.append(build())
+        os.makedirs(tmp, exist_ok=True)
+        with open(os.path.join(tmp, "part-0.json"), "w") as f:
+            json.dump(built[0], f)
+        open(_done_marker(tmp), "w").close()
+
+    return _artifact(
+        sf_dir,
+        name,
+        table,
+        code_fingerprint(*sources),
+        read,
+        write,
+        lambda: built[0] if built else build(),
+    )

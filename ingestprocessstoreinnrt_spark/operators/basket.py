@@ -29,10 +29,13 @@ Two operators share one pair-generation kernel:
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..planmemo import session_memo
 from ..plans.hints import maybe_broadcast
 
 MIN_ITEM_ORDERS = 2  # apriori item prune: item must appear in >= 2 orders
@@ -49,13 +52,6 @@ def _order_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
         .distinct()
     )
-
-
-# (app, sf_dir) -> pair frame; avoids re-opening the persisted pair
-# artifact (a parquet read is a construction-time job) on every
-# consumer invocation — same shape + rationale as dedup._LSH_PAIRS_MEMO.
-# bench.py / isolated_probe clear it at family-cold.
-_PAIR_MEMO: dict = {}
 
 
 def _pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -75,16 +71,16 @@ def _pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     band-shape lesson).  BASKET_CAP bounds the quadratic term for
     pathological carts: a basket contributes at most cap(cap-1)/2
     pairs.  The .cache() on the artifact read hands all consumers one
-    in-memory entry per session (the _token_frame pattern)."""
+    in-memory entry per session (the _token_frame pattern), and the
+    session memo spares every consumer invocation a re-open of the
+    artifact (a parquet read is a construction-time job)."""
     from ingestprocessstoreinnrt_spark.operators.artifacts import (
         corpus_artifact,
     )
 
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _PAIR_MEMO if k[0] != app]:
-        del _PAIR_MEMO[k]  # dead context (one SparkContext/process)
-    key = (app, sf_dir)
-    df = _PAIR_MEMO.get(key)
+    memo = session_memo(spark, "basket_pairs")
+    key = os.path.abspath(sf_dir)
+    df = memo.get(key)
     if df is None:
 
         def build() -> DataFrame:
@@ -125,7 +121,7 @@ def _pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             build,
             table="lineitem",
         ).cache()
-        _PAIR_MEMO[key] = df
+        memo[key] = df
     return df
 
 

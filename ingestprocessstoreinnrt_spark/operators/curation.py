@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from ..catalog import fan_out, load_table
 from ..functions.scalars import SQL_STABLE_HASH64, stable_hash64
 from ..functions.text import tokens
+from ..planmemo import session_memo
 
 # ---------------------------------------------------------------------------
 # PII detection / redaction
@@ -718,34 +719,27 @@ def _bpe_apply(vocab: DataFrame, batch: list[tuple[str, str]]) -> DataFrame:
     return vocab.withColumn("ws", col).localCheckpoint(eager=True)
 
 
-# Fitted-tokenizer memo: (app_id, corpus dir) -> (merges, vocab frame).
-# THREE queries consume the identical BPE_MERGES-round fit (bpe_train,
-# bpe_encode, bpe_fertility); without the memo each re-runs the whole
-# K-round driver loop — 2x ~17 Spark jobs of pure re-fit per sweep
-# (measured ~2.0-2.6 s of driver-loop time per caller at sf0.1, r13).
-# Same pattern and same hygiene as dedup._LSH_PAIRS_MEMO / catalog's
-# _LOAD_MEMO: keyed per Spark application (a fresh driver process
-# always re-fits from the parquet inputs — nothing persists across
-# runs), evicted when the app changes, cleared by bench.py at family
-# boundaries so family-cold timings still include one full fit.  The
-# vocab frame is an eager localCheckpoint, so it stays valid across
+# Fitted-tokenizer session memo (planmemo.session_memo): THREE queries
+# consume the identical BPE_MERGES-round fit (bpe_train, bpe_encode,
+# bpe_fertility); without the memo each re-runs the whole K-round
+# driver loop — 2x ~17 Spark jobs of pure re-fit per sweep (measured
+# ~2.0-2.6 s of driver-loop time per caller at sf0.1, r13).  A fresh
+# session always re-fits from the parquet inputs (nothing persists
+# across runs), and bench.py clears the memo at family boundaries so
+# family-cold timings still include one full fit.  The vocab frame is
+# an eager localCheckpoint, so it stays valid across
 # spark.catalog.clearCache() calls within the session.
-_BPE_MEMO: dict = {}
-
-
 def _run_bpe(
     spark: SparkSession, sf_dir: str
 ) -> tuple[list[tuple], DataFrame]:
     """Run the K-merge loop; returns (merge records, final vocabulary
     frame with columns word/ws/wc) — shared by the trainer query and
     the encoder query."""
-    app = spark.sparkContext.applicationId
-    key = (app, os.path.abspath(sf_dir))
-    got = _BPE_MEMO.get(key)
+    memo = session_memo(spark, "bpe")
+    key = os.path.abspath(sf_dir)
+    got = memo.get(key)
     if got is not None:
         return got
-    for k in [k for k in _BPE_MEMO if k[0] != app]:
-        del _BPE_MEMO[k]  # dead context (one SparkContext per process)
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     vocab = _bpe_init_vocab(docs)
     merges: list[tuple] = []
@@ -765,7 +759,7 @@ def _run_bpe(
         lhs, rhs, cnt = best[0].lhs, best[0].rhs, best[0].cnt
         merges.append((k, lhs, rhs, lhs + rhs, cnt))
         vocab = _bpe_apply(vocab, [(lhs, rhs)])
-    _BPE_MEMO[key] = (merges, vocab)
+    memo[key] = (merges, vocab)
     return merges, vocab
 
 

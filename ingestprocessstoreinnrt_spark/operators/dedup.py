@@ -30,6 +30,8 @@ Scale design:
 
 from __future__ import annotations
 
+import os
+
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,6 +40,7 @@ from ..catalog import fan_out, load_table
 from ..functions.scalars import SQL_STABLE_HASH64, stable_hash64
 from ..functions.text import fingerprint
 from ..functions.vectors import dot, norm2
+from ..planmemo import session_memo
 
 # ---------------------------------------------------------------------------
 # shared primitives (Spark expression + SQL twin)
@@ -655,15 +658,12 @@ def _minhash_array():
 # (judge-measured ~2.5x on the family).  Ownership rule, recorded in
 # PERFORMANCE.md: ONE memoized entrypoint owns the cache; every
 # consumer calls it; first caller pays, the rest ride — order-free.
-# Keyed by (applicationId, sf_dir) so a restarted session never sees a
-# DataFrame bound to a dead context; re-caches if a catalog
+# A session memo (planmemo.session_memo), so a restarted session never
+# sees a DataFrame bound to a dead context; re-caches if a catalog
 # clearCache() evicted the entry (bench does this at family
 # boundaries).  Pin cost at sf0.1: ~185k (doc_a, doc_b, jaccard,
 # n_matches) rows, a few MB — noise next to the rebuild (or, since
 # r12, the artifact re-read) it prevents.
-_LSH_PAIRS_MEMO: dict = {}
-
-
 def lsh_pair_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The memoized, cached, verified MinHash+LSH near-dup pair frame
     (doc_a, doc_b, jaccard, n_matches) — the single cache owner for the
@@ -677,11 +677,9 @@ def lsh_pair_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus_artifact,
     )
 
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _LSH_PAIRS_MEMO if k[0] != app]:
-        del _LSH_PAIRS_MEMO[k]  # dead context (one SparkContext/process)
-    key = (app, sf_dir)
-    df = _LSH_PAIRS_MEMO.get(key)
+    memo = session_memo(spark, "lsh_pairs")
+    key = os.path.abspath(sf_dir)
+    df = memo.get(key)
     if df is None:
         # plan parameters that change the CONTENTS are part of the
         # artifact name: a retuned band/threshold config must rebuild,
@@ -694,7 +692,7 @@ def lsh_pair_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda: _build_lsh_pairs(spark, sf_dir, scratch),
             cleanup=lambda: [s.unpersist() for s in scratch],
         )
-        _LSH_PAIRS_MEMO[key] = df
+        memo[key] = df
     if not df.is_cached:
         df.cache()
     return df
@@ -1002,20 +1000,15 @@ def _adaptive_mask_sql(table: str = "embeddings") -> str:
     )
 
 
-# corpus-size plan parameters (adaptive signature width, SemDeDup
-# cluster count) memoized by the embeddings table's content
-# fingerprint — one parquet-metadata COUNT per table per session, same
-# validity rule as ml's centroid artifact cache
-_EMB_N_MEMO: dict = {}
-
-
 def _corpus_n(spark: SparkSession, sf_dir: str) -> int:
-    from . import ml
-
-    key = ml._emb_fingerprint(sf_dir)
-    if key not in _EMB_N_MEMO:
-        _EMB_N_MEMO[key] = load_table(spark, sf_dir, "embeddings").count()
-    return _EMB_N_MEMO[key]
+    """Embeddings row count, memoized per session: the corpus-size plan
+    parameters (adaptive signature width, SemDeDup cluster count) cost
+    one parquet-metadata COUNT per table per session."""
+    memo = session_memo(spark, "corpus_n")
+    key = os.path.abspath(sf_dir)
+    if key not in memo:
+        memo[key] = load_table(spark, sf_dir, "embeddings").count()
+    return memo[key]
 
 
 def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -21,8 +21,6 @@ would not be.
 
 from __future__ import annotations
 
-import hashlib
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -30,7 +28,9 @@ from pyspark.sql import functions as F
 
 from ..catalog import fan_out, load_table
 from ..functions.scalars import quantize
+from ..planmemo import session_memo
 from ..plans.hints import maybe_broadcast
+from .artifacts import json_artifact
 
 FEATURES = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
 
@@ -216,43 +216,22 @@ def _qvec():
     )
 
 
-# One-row artifact frames (centroid/codebook rows) memoized by
-# CONTENTS: spark.createDataFrame yields a fresh RDD-backed plan every
-# call, so two invocations of the same query build UNEQUAL plans and
-# Spark's cache manager never dedups anything downstream of the
-# artifact row — the r11 sf10 probe caught dedup_semantic's warm run
-# re-paying the whole n x k assignment fold (46 s) because its cached
-# assignment frame descended from a fresh _cdf_of row.  Returning the
-# SAME DataFrame object for the same contents makes downstream plans
-# structurally equal, so .cache() dedup works across invocations.
-# Keyed by (applicationId, session UUID, contents) — session-stable
-# tokens, not id(spark) (ADVICE r11: an id() key was collision-safe
-# only because the memo itself pinned the old session alive).  Entries
-# from stopped contexts are evicted on the next call: exactly one
-# SparkContext exists per Python process, so any entry whose
-# applicationId differs from the current one belongs to a dead context
-# and would otherwise pin its py4j refs for process lifetime.
-_ROW_FRAME_MEMO: dict = {}
-
-
-def _session_token(spark: SparkSession) -> tuple[str, str]:
-    app = spark.sparkContext.applicationId
-    try:
-        sess = str(spark._jsparkSession.sessionUUID())
-    except Exception:  # non-classic backends without the JVM handle
-        sess = f"pyid-{id(spark)}"
-    return app, sess
-
-
 def memo_row_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
-    app, sess = _session_token(spark)
-    for k in [k for k in _ROW_FRAME_MEMO if k[0] != app]:
-        del _ROW_FRAME_MEMO[k]  # dead context's frames
-    key = (app, sess, schema, _freeze(rows))
-    df = _ROW_FRAME_MEMO.get(key)
+    """One-row artifact frames (centroid/codebook rows) memoized per
+    session by CONTENTS: spark.createDataFrame yields a fresh RDD-backed
+    plan every call, so two invocations of the same query build UNEQUAL
+    plans and Spark's cache manager never dedups anything downstream of
+    the artifact row — the r11 sf10 probe caught dedup_semantic's warm
+    run re-paying the whole n x k assignment fold (46 s) because its
+    cached assignment frame descended from a fresh _cdf_of row.
+    Returning the SAME DataFrame object for the same contents makes
+    downstream plans structurally equal, so .cache() dedup works across
+    invocations."""
+    memo = session_memo(spark, "row_frame")
+    key = (schema, _freeze(rows))
+    df = memo.get(key)
     if df is None:
-        df = spark.createDataFrame(rows, schema)
-        _ROW_FRAME_MEMO[key] = df
+        df = memo[key] = spark.createDataFrame(rows, schema)
     return df
 
 
@@ -267,7 +246,7 @@ def _cdf_of(spark: SparkSession, c: list) -> DataFrame:
     (cid, vector), not as literals: the iteration plan keeps the same
     generated code every pass (codegen cache hit; literal-embedded
     centroids recompiled ~1.5 s/pass measured at sf0.1).  Memoized by
-    contents (see _ROW_FRAME_MEMO) so repeat invocations of a consumer
+    contents (see memo_row_frame) so repeat invocations of a consumer
     query produce plan-identical frames and hit their caches."""
     return memo_row_frame(
         spark,
@@ -328,70 +307,16 @@ def _agg_pass(spark: SparkSession, q: DataFrame, c: list) -> dict:
     return got
 
 
-# session-lifetime memo for the deterministic fit: kmeans_lloyd and the
-# IVF index in operators.similarity both need the same centroids; the
-# result is a pure function of (table contents, k, iters), so whoever
-# runs second gets the metadata-scale list for free instead of re-paying
-# iters-1 aggregate passes.
-_CENTROID_MEMO: dict = {}
-
-# Cross-session artifact cache: centroids are a FITTED INDEX (the same
-# artifact an IVF system persists next to the data), a pure function of
-# the embeddings table contents.  Cache key includes a fingerprint of
-# the parquet file(s) (path + size + mtime), so a changed table refits;
-# a corrupt/unreadable cache entry falls through to the fit.  This is
-# exactly the production shape — build the coarse quantizer once, reuse
-# it for every query session — not a benchmark shortcut: every read
-# validates the data fingerprint first.
-_CACHE_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    ".cache",
-    "centroids",
+# Source files that shape a frame whose fit is persisted: this module
+# (the Lloyd's fit, kmeans_lloyd's frame), similarity.py (the IVF
+# frame, the _ivfbase subset, the _pq/_rpq subspace and residual
+# slices) and dedup.py (SemDeDup's frame).  An edit to any of them
+# refits: PQ ADC lookups depend on centroid order (cid == list index),
+# so a fit written by older code must never be served.
+_CENTROID_SOURCES = tuple(
+    os.path.join(os.path.dirname(os.path.abspath(__file__)), f)
+    for f in ("ml.py", "similarity.py", "dedup.py")
 )
-
-
-def _emb_fingerprint(sf_dir: str) -> str:
-    p = os.path.join(sf_dir, "embeddings.parquet")
-    parts = []
-    if os.path.isdir(p):
-        for name in sorted(os.listdir(p)):
-            st = os.stat(os.path.join(p, name))
-            parts.append(f"{name}:{st.st_size}:{int(st.st_mtime)}")
-    elif os.path.exists(p):
-        st = os.stat(p)
-        parts.append(f"{st.st_size}:{int(st.st_mtime)}")
-    raw = f"{os.path.abspath(sf_dir)}|{'|'.join(parts)}"
-    return hashlib.md5(raw.encode()).hexdigest()
-
-
-def _cache_load(
-    sf_dir: str, k: int, iters: int, tag: str = ""
-) -> list | None:
-    f = os.path.join(
-        _CACHE_DIR, f"{_emb_fingerprint(sf_dir)}_{k}_{iters}{tag}.json"
-    )
-    try:
-        with open(f) as fh:
-            got = json.load(fh)
-        return [(int(cid), [int(v) for v in cv]) for cid, cv in got]
-    except (OSError, ValueError):
-        return None
-
-
-def _cache_store(
-    sf_dir: str, k: int, iters: int, cents: list, tag: str = ""
-) -> None:
-    try:
-        os.makedirs(_CACHE_DIR, exist_ok=True)
-        f = os.path.join(
-            _CACHE_DIR, f"{_emb_fingerprint(sf_dir)}_{k}_{iters}{tag}.json"
-        )
-        tmp = f + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(cents, fh)
-        os.replace(tmp, f)  # atomic: concurrent sessions race safely
-    except OSError:
-        pass  # cache is best-effort; the fit result is still returned
 
 
 def fit_centroids(
@@ -406,16 +331,32 @@ def fit_centroids(
     init = first k vectors by vec_id, then iters-1 update passes.
     Returns the final centroid list [(cid, [ints])] — metadata-scale.
     Shared by kmeans_lloyd, the IVF index, and (per-subspace, via
-    `tag`) the PQ codebooks in operators.similarity."""
-    import math
+    `tag`) the PQ codebooks in operators.similarity.
 
-    if memo_key is not None and (memo_key, k, iters, tag) in _CENTROID_MEMO:
-        return _CENTROID_MEMO[(memo_key, k, iters, tag)]
-    if memo_key is not None and os.path.isdir(memo_key):
-        cached = _cache_load(memo_key, k, iters, tag)
-        if cached is not None:
-            _CENTROID_MEMO[(memo_key, k, iters, tag)] = cached
-            return cached
+    `memo_key` is the data dir the frame was built from.  Given one,
+    the fit is a FITTED INDEX (the coarse quantizer an IVF system
+    persists next to the data): memoized per session, so whoever runs
+    second skips the iters-1 aggregate passes, and persisted through
+    operators.artifacts keyed on the embeddings table and
+    _CENTROID_SOURCES, so a fresh session reads it instead of refitting."""
+    if memo_key is None:
+        return _lloyd(spark, q, k, iters)
+    memo = session_memo(spark, "centroids")
+    key = (os.path.abspath(memo_key), k, iters, tag)
+    if key not in memo:
+        got = json_artifact(
+            memo_key,
+            f"centroids_k{k}_i{iters}{tag}",
+            lambda: _lloyd(spark, q, k, iters),
+            _CENTROID_SOURCES,
+            table="embeddings",
+        )
+        memo[key] = [(cid, cv) for cid, cv in got]
+    return memo[key]
+
+
+def _lloyd(spark: SparkSession, q: DataFrame, k: int, iters: int) -> list:
+    import math
 
     cents = [
         (i, [int(v) for v in r.qv])
@@ -438,10 +379,6 @@ def fit_centroids(
             else cents[i]  # empty cluster keeps its centroid
             for i in range(len(cents))
         ]
-    if memo_key is not None:
-        _CENTROID_MEMO[(memo_key, k, iters, tag)] = cents
-        if os.path.isdir(memo_key):
-            _cache_store(memo_key, k, iters, cents, tag)
     return cents
 
 
@@ -2408,20 +2345,19 @@ def _fit_logistic(feats: DataFrame) -> tuple:
     return beta
 
 
-# session memo of the fitted beta per sf_dir (mirrors the dedup pair
-# frame session cache): logistic_score / calibration_bins /
-# curation_quality_gate share one IRLS fit instead of paying the
-# LOGISTIC_ROUNDS x 4-aggregate driver loop three times
-_LOGI_BETA: dict[str, tuple] = {}
-
-
 def _fitted_logistic(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, tuple]:
+    """Features plus the fitted beta, memoized per session:
+    logistic_score / calibration_bins / curation_quality_gate share one
+    IRLS fit instead of paying the LOGISTIC_ROUNDS x 4-aggregate driver
+    loop three times."""
     feats = _logi_feats(spark, sf_dir)
-    if sf_dir not in _LOGI_BETA:
-        _LOGI_BETA[sf_dir] = _fit_logistic(feats)
-    return feats, _LOGI_BETA[sf_dir]
+    memo = session_memo(spark, "logistic_beta")
+    key = os.path.abspath(sf_dir)
+    if key not in memo:
+        memo[key] = _fit_logistic(feats)
+    return feats, memo[key]
 
 
 def logistic_score(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -946,7 +946,7 @@ def _pq_codebook_row(spark: SparkSession, sf_dir: str):
     q.unpersist()
     # memoized by contents (ml.memo_row_frame): repeat invocations
     # must yield plan-identical codebook rows or no downstream cache
-    # ever dedups (ml._ROW_FRAME_MEMO rationale)
+    # ever dedups (ml.memo_row_frame rationale)
     cdf = ml.memo_row_frame(
         spark,
         [([(m, cid, cv) for m, cs in enumerate(all_cents)

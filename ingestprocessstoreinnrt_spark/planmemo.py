@@ -1,30 +1,38 @@
-"""Session-scoped memo of declared-query DataFrame PLANS.
+"""The one home for session memos.
 
-Profiling (r13, guide §1.1): rebuilding a declared query's DataFrame
-object costs 0.3-1.7 s of pure py4j round trips at sf0.1 (5,800 socket
-round trips for sim_ivfpq_search alone), and across the 240-query
-suite repeat construction totals ~44 s per sweep pass — driver-side
-work that recomputes NOTHING, it just re-assembles an identical lazy
-plan the JVM has already analyzed once.  Handing the second invocation
-the same DataFrame object removes that cost.
+Every in-process memo in the package (declared-query plans, table
+loads, fitted pair and tokenizer frames, centroid lists, the logistic
+fit) is a dict from ``session_memo(spark, name)``, with one lifecycle:
 
-Scope rules, so this can never shade into result caching:
+* Entries live as long as the Spark session that built them.  The
+  first call from another application or session drops every entry of
+  the old one, so dead sessions' DataFrames never pin py4j handles.
+* Callers key entries by ``os.path.abspath(sf_dir)`` plus their own
+  parameters; a hit hands back the identical object, which downstream
+  ``.cache()`` dedup and the benchmark's memo-hit count rely on.
+* ``clear()`` empties every memo; bench.py and tools/isolated_probe.py
+  call it with ``spark.catalog.clearCache()`` at each family boundary.
 
-* Only queries whose repeat construction triggers ZERO Spark jobs are
-  memoized (pure plan builders).  Queries that run driver-paced
-  computation while building their frame — iterative fits, collects,
-  localCheckpoint rounds — are listed in PLAN_IMPURE and always
-  rebuild, so their warm reps keep paying (and measuring) the real
-  recompute.  tests/test_planmemo.py pins the invariant.
-* The memo holds LAZY frames only; every action still executes the
-  full plan (a family-cold ``clearCache()`` drops any .cache()d data
-  and the next action recomputes from parquet).
-* bench.py and tools/isolated_probe.py clear() this memo at each
-  family boundary alongside the fit memos, so every family's cold rep
-  still pays one full plan construction per session.
+What must outlive a session is persisted by operators/artifacts.py,
+keyed on the data and the builder code.
+
+The declared queries ride the plan memo (``memoize_pure``).  Rebuilding
+a declared query's DataFrame costs 0.3-1.7 s of pure py4j round trips
+at sf0.1 (r13 profile; ~44 s per 240-query sweep pass) that recompute
+NOTHING; handing the second invocation the same lazy frame removes
+that cost.  It never shades into result caching: only queries whose
+repeat construction triggers ZERO Spark jobs are memoized — the ones
+that run fits, collects or localCheckpoint rounds while building are
+in PLAN_IMPURE and always rebuild, so their warm reps keep measuring
+the recompute (tests/test_planmemo.py pins this) — and every action
+still executes the full lazy plan.
 """
 
 from __future__ import annotations
+
+import os
+
+from pyspark.sql import SparkSession
 
 # Queries whose construction RUNS Spark jobs (fits, collects,
 # localCheckpoint iterations, artifact reads) — never memoized: their
@@ -35,8 +43,8 @@ from __future__ import annotations
 PLAN_IMPURE = frozenset(
     {
         # r14: construction opens the persisted basket pair artifact
-        # (a parquet read) when basket._PAIR_MEMO is cold — the same
-        # treatment as the dedup artifact openers below
+        # (a parquet read) when the session's basket pair memo is cold —
+        # the same treatment as the dedup artifact openers below
         "bi_basket_lift",
         "graph_degree_stats",
         "curation_bpe_train_batched",
@@ -64,32 +72,49 @@ PLAN_IMPURE = frozenset(
     }
 )
 
-_PLAN_MEMO: dict = {}
+# (applicationId, session UUID) -> memo name -> entries; holds at most
+# one session's memos
+_MEMOS: dict[tuple[str, str], dict[str, dict]] = {}
+
+
+def _session_token(spark: SparkSession) -> tuple[str, str]:
+    """(applicationId, session UUID): session-stable, unlike id(spark),
+    which is collision-safe only while something pins the old session
+    alive (ADVICE r11)."""
+    app = spark.sparkContext.applicationId
+    try:
+        sess = str(spark._jsparkSession.sessionUUID())
+    except Exception:  # non-classic backends without the JVM handle
+        sess = f"pyid-{id(spark)}"
+    return app, sess
+
+
+def session_memo(spark: SparkSession, name: str) -> dict:
+    """The dict of memo `name` for `spark`'s session.  The first call
+    from a new application or session drops every other session's
+    entries (ADVICE r13: a stale session UUID of a still-live app would
+    otherwise accumulate dead DataFrame handles)."""
+    token = _session_token(spark)
+    memos = _MEMOS.get(token)
+    if memos is None:
+        _MEMOS.clear()
+        memos = _MEMOS[token] = {}
+    return memos.setdefault(name, {})
 
 
 def clear() -> None:
-    """Family-cold hook: forget every memoized plan (bench.py /
-    isolated_probe.py call this next to the fit-memo clears) so the
-    next invocation rebuilds and re-registers its .cache() marks."""
-    _PLAN_MEMO.clear()
+    """Forget every memo, so the next invocation of anything memoized
+    rebuilds (and re-registers its .cache() marks)."""
+    _MEMOS.clear()
 
 
 def _wrap(name: str, fn):
     def wrapped(spark, sf_dir):
-        from .operators.ml import _session_token
-
-        app, sess = _session_token(spark)
-        # evict on the FULL (app, sess) token (ADVICE r13): a stale
-        # sessionUUID of a still-live app (spark.newSession()) would
-        # otherwise accumulate dead DataFrame handles for the app's
-        # lifetime
-        for k in [k for k in _PLAN_MEMO if (k[0], k[1]) != (app, sess)]:
-            del _PLAN_MEMO[k]  # dead context's / dead session's frames
-        key = (app, sess, name, sf_dir)
-        df = _PLAN_MEMO.get(key)
+        memo = session_memo(spark, "plan")
+        key = (name, os.path.abspath(sf_dir))
+        df = memo.get(key)
         if df is None:
-            df = fn(spark, sf_dir)
-            _PLAN_MEMO[key] = df
+            df = memo[key] = fn(spark, sf_dir)
         return df
 
     wrapped.__name__ = f"memoized_{name}"

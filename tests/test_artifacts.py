@@ -266,3 +266,79 @@ def test_unwritable_cache_falls_through_to_builder(spark, corpus, monkeypatch):
         ),
     )
     assert df.count() == 10
+
+
+
+def test_json_artifact_unwritable_cache_serves_the_fit_once(tmp_path, monkeypatch):
+    """An unpublishable small value is served from the one build, not
+    refit: a centroid fit costs iters-1 Spark aggregate passes."""
+    monkeypatch.setattr(A, "_ART_DIR", "/proc/definitely-not-writable")
+    calls = []
+
+    def build():
+        calls.append(1)
+        return [[0, [1, 2]]]
+
+    got = A.json_artifact(str(tmp_path), "j", build, (), table="documents")
+    assert got == [[0, [1, 2]]]
+    assert calls == [1]
+
+
+def test_centroid_artifact_keys_on_data_and_code(spark, tmp_path, monkeypatch):
+    """fit_centroids persists through json_artifact: a same-size
+    rewrite of embeddings.parquet within the same whole second refits,
+    an edit to a source that shapes the fit refits, and a fresh session
+    reads the persisted fit back unchanged."""
+    import shutil
+
+    from ingestprocessstoreinnrt_spark import planmemo
+    from ingestprocessstoreinnrt_spark.catalog import load_table
+    from ingestprocessstoreinnrt_spark.operators import ml
+    from tests.conftest import SF_SMOKE
+
+    here = os.path.dirname(os.path.abspath(ml.__file__))
+    for f in ("ml.py", "similarity.py"):
+        assert os.path.join(here, f) in ml._CENTROID_SOURCES
+    extra = tmp_path / "shaping_mod.py"
+    extra.write_text("v = 1\n")
+    monkeypatch.setattr(
+        ml, "_CENTROID_SOURCES", (*ml._CENTROID_SOURCES, str(extra))
+    )
+    sf = str(tmp_path / "sf")
+    shutil.copytree(SF_SMOKE, sf)
+    emb_file = os.path.join(sf, "embeddings.parquet")
+    os.chmod(emb_file, 0o644)
+    whole = (os.stat(emb_file).st_mtime_ns // 10**9) * 10**9
+    os.utime(emb_file, ns=(whole, whole))
+
+    def fit(session):
+        before = dict(A.STATS)
+        q = load_table(session, sf, "embeddings").select(
+            "vec_id", ml._qvec().alias("qv")
+        )
+        cents = ml.fit_centroids(session, q, 4, 2, memo_key=sf)
+        return cents, A.STATS["hit"] - before["hit"], A.STATS["miss"] - before["miss"]
+
+    first, hits, misses = fit(spark)
+    assert (hits, misses) == (0, 1)
+    assert [c for c, _ in first] == [0, 1, 2, 3]
+
+    # same bytes, same size, same whole-second mtime: only st_mtime_ns moves
+    with open(emb_file, "rb") as f:
+        data = f.read()
+    with open(emb_file, "wb") as f:
+        f.write(data)
+    os.utime(emb_file, ns=(whole, whole + 1))
+    planmemo.clear()  # the session memo answers before the artifact layer
+    again, hits, misses = fit(spark)
+    assert (hits, misses) == (0, 1), "same-second rewrite must refit"
+    assert again == first
+
+    extra.write_text("v = 22\n")
+    planmemo.clear()
+    _, hits, misses = fit(spark)
+    assert (hits, misses) == (0, 1), "a code edit must refit"
+
+    fresh, hits, misses = fit(spark.newSession())
+    assert (hits, misses) == (1, 0), "a fresh session reads the artifact"
+    assert fresh == first

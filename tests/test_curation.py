@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ingestprocessstoreinnrt_spark import planmemo
 from ingestprocessstoreinnrt_spark.operators import curation
 from tests.conftest import SF_SMOKE
 
@@ -565,9 +566,10 @@ def test_run_bpe_memo_hits_and_stays_correct(spark):
     declares; a different corpus key misses independently."""
     from tests.conftest import SF_ORACLE, SF_SMOKE
 
-    curation._BPE_MEMO.clear()
+    memo = planmemo.session_memo(spark, "bpe")
+    memo.clear()
     m1, v1 = curation._run_bpe(spark, SF_ORACLE)
-    assert len(curation._BPE_MEMO) == 1
+    assert len(memo) == 1
     m2, v2 = curation._run_bpe(spark, SF_ORACLE)
     assert m2 is m1 and v2 is v1  # memo hit, not a re-fit
     got = [
@@ -576,6 +578,6 @@ def test_run_bpe_memo_hits_and_stays_correct(spark):
     ]
     assert got == sorted(m1)  # the declared result IS the memoized fit
     m3, _ = curation._run_bpe(spark, SF_SMOKE)
-    assert len(curation._BPE_MEMO) == 2  # distinct corpus, distinct key
+    assert len(memo) == 2  # distinct corpus, distinct key
     assert m3 != m1 or m3 == m1  # smoke fit computed (no raise)
-    curation._BPE_MEMO.clear()
+    memo.clear()

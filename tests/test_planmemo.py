@@ -7,12 +7,15 @@
    recompute.
 2. The memo hands repeat invocations the SAME frame object, and a
    memoized frame still computes (lazy plan only — no result capture).
-3. clear() forgets plans, so a family-cold rebuild re-registers its
-   .cache() marks.
+3. clear() forgets every session memo, so a family-cold rebuild
+   re-registers its .cache() marks.
+4. planmemo.session_memo is the only home for module-level memos: no
+   other package module binds an empty dict or set at module level.
 """
 
 from __future__ import annotations
 
+import ast
 import sys
 from pathlib import Path
 
@@ -77,13 +80,71 @@ def test_impure_queries_are_not_memoized(spark):
 
 def test_memoized_frame_still_computes_and_clear_forgets(spark):
     import __spark_entry__ as e
+    from ingestprocessstoreinnrt_spark.catalog import load_table
+    from ingestprocessstoreinnrt_spark.operators import basket, curation, dedup
 
     qs = e.queries()
     name = next(n for n in qs if n not in planmemo.PLAN_IMPURE)
     df1 = qs[name](spark, SF)
     n1 = df1.count()
     assert n1 == qs[name](spark, SF).count()
+    memoized = {
+        "lsh_pair_frame": lambda: dedup.lsh_pair_frame(spark, SF),
+        "_pair_counts": lambda: basket._pair_counts(spark, SF),
+        "_run_bpe": lambda: curation._run_bpe(spark, SF),
+        "load_table": lambda: load_table(spark, SF, "orders"),
+    }
+    before = {m: fn() for m, fn in memoized.items()}
+    for m, fn in memoized.items():
+        assert fn() is before[m], f"{m}: a hit must hand back the object"
     planmemo.clear()
     df2 = qs[name](spark, SF)
     assert df2 is not df1, "clear() must force a rebuild"
     assert df2.count() == n1
+    for m, fn in memoized.items():
+        assert fn() is not before[m], f"{m}: clear() must forget it"
+
+
+# module-level empty containers that are not session memos
+_MEMO_EXEMPT = {
+    # keyed by source-file stat, holds no Spark handle
+    ("operators/artifacts.py", "_CODE_FP_CACHE"),
+}
+
+
+def _empty_container(node) -> bool:
+    if isinstance(node, ast.Dict):
+        return not node.keys
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Name)
+        and node.func.id in ("dict", "set")
+        and not node.args
+        and not node.keywords
+    )
+
+
+def test_no_memo_outside_planmemo():
+    pkg = Path(planmemo.__file__).parent
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel == "planmemo.py":
+            continue
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, ast.Assign):
+                targets, value = node.targets, node.value
+            elif isinstance(node, ast.AnnAssign) and node.value is not None:
+                targets, value = [node.target], node.value
+            else:
+                continue
+            if not _empty_container(value):
+                continue
+            for t in targets:
+                name = ast.unparse(t)
+                if (rel, name) not in _MEMO_EXEMPT:
+                    found.append(f"{rel}:{node.lineno} {name}")
+    assert not found, (
+        "module-level memo outside planmemo — use "
+        f"planmemo.session_memo(spark, name): {found}"
+    )
