@@ -1,6 +1,6 @@
-"""The one home for session memos.
+"""The one home for in-process memos.
 
-Every in-process memo in the package (declared-query plans, table
+Every frame or fit memo in the package (declared-query plans, table
 loads, fitted pair and tokenizer frames, centroid lists, the logistic
 fit) is a dict from ``session_memo(spark, name)``, with one lifecycle:
 
@@ -10,8 +10,24 @@ fit) is a dict from ``session_memo(spark, name)``, with one lifecycle:
 * Callers key entries by ``os.path.abspath(sf_dir)`` plus their own
   parameters; a hit hands back the identical object, which downstream
   ``.cache()`` dedup and the benchmark's memo-hit count rely on.
-* ``clear()`` empties every memo; bench.py and tools/isolated_probe.py
-  call it with ``spark.catalog.clearCache()`` at each family boundary.
+* ``clear()`` empties every memo, the column memo below included;
+  bench.py and tools/isolated_probe.py call it with
+  ``spark.catalog.clearCache()`` at each family boundary.
+
+The upsert path's column lists (the taxi entity's aggregates and
+zero-fill map, merge_keyed's requantize map and merge aggregates) live
+in ``session_columns(spark, key, build)`` instead, scoped to the Spark
+*application*, not the session.  A streaming query hands each
+foreachBatch frame the stream's cloned session, while the UpsertTable
+reads its current rows through the session it was opened with, so one
+micro-batch touches two sessions: a session-scoped memo would drop and
+rebuild itself twice per batch (the same goes for any ``session_memo``
+use inside foreachBatch — it is emptied every batch).  Sharing the
+entries across sessions is sound because an unresolved ``Column`` is a
+bare expression tree that names columns and functions and carries no
+session.  Rebuilding them would cost ~2,800 py4j round trips per
+micro-batch for the taxi entity alone; with them memoized its warm
+construction makes ~80.
 
 What must outlive a session is persisted by operators/artifacts.py,
 keyed on the data and the builder code.
@@ -31,8 +47,12 @@ still executes the full lazy plan.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 # Queries whose construction RUNS Spark jobs (fits, collects,
 # localCheckpoint iterations, artifact reads) — never memoized: their
@@ -76,6 +96,9 @@ PLAN_IMPURE = frozenset(
 # one session's memos
 _MEMOS: dict[tuple[str, str], dict[str, dict]] = {}
 
+# applicationId -> key -> built columns; holds at most one application's
+_COLUMNS: dict[str, dict[tuple, object]] = {}
+
 
 def _session_token(spark: SparkSession) -> tuple[str, str]:
     """(applicationId, session UUID): session-stable, unlike id(spark),
@@ -102,10 +125,28 @@ def session_memo(spark: SparkSession, name: str) -> dict:
     return memos.setdefault(name, {})
 
 
+def session_columns(
+    spark: SparkSession, key: tuple, build: Callable[[], T]
+) -> T:
+    """The column expressions `build()` returns, built once per Spark
+    application and shared by all its sessions (see the module
+    docstring).  The first call from a new application drops the old
+    one's entries."""
+    app = spark.sparkContext.applicationId
+    cols = _COLUMNS.get(app)
+    if cols is None:
+        _COLUMNS.clear()
+        cols = _COLUMNS[app] = {}
+    if key not in cols:
+        cols[key] = build()
+    return cols[key]
+
+
 def clear() -> None:
     """Forget every memo, so the next invocation of anything memoized
     rebuilds (and re-registers its .cache() marks)."""
     _MEMOS.clear()
+    _COLUMNS.clear()
 
 
 def _wrap(name: str, fn):

@@ -133,16 +133,13 @@ def upsert_aggregate_stream(
     ns = checkpoint_namespace(checkpoint)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partial = aggregate_fn(batch_df)
         # merge_fn None -> last-write-wins row upsert (document sinks);
-        # otherwise exact aggregate merge with the table's current rows
-        # (merge_keyed handles an empty `current` natively — no extra
-        # isEmpty() job per micro-batch)
+        # otherwise exact aggregate merge with the table's current rows.
+        # No isEmpty() job here: apply_batch's bucket collect finds an
+        # empty partial and returns without touching the table
         table.apply_batch(
             batch_id,
-            partial,
+            aggregate_fn(batch_df),
             None
             if merge_fn is None
             else (

@@ -313,6 +313,10 @@ class UpsertTable:
         self.path = path
         self.key_cols = list(key_cols)
         self.num_buckets = num_buckets
+        # built once: every micro-batch reuses the expression
+        self._bucket_col = F.pmod(
+            F.xxhash64(*self.key_cols), F.lit(self.num_buckets)
+        ).cast("int")
         self.txn_log = LocalFSTxnLog(path)
         # layout aliases (tests and external tooling inspect these)
         self._ledger = self.txn_log.ledger_dir
@@ -391,11 +395,6 @@ class UpsertTable:
     def _data(self) -> str:
         return os.path.join(self.path, "data")
 
-    def _bucket_col(self):
-        return F.pmod(
-            F.xxhash64(*self.key_cols), F.lit(self.num_buckets)
-        ).cast("int")
-
     def exists(self) -> bool:
         return os.path.exists(self._data())
 
@@ -408,7 +407,7 @@ class UpsertTable:
         col = (
             F.col("_bucket")
             if "_bucket" in keys_df.columns
-            else self._bucket_col()
+            else self._bucket_col
         )
         return [
             r[0] for r in keys_df.select(col.alias("b")).distinct().collect()
@@ -431,7 +430,7 @@ class UpsertTable:
         J1).  Static overwrite on the directory — replaces every bucket
         regardless of session conf."""
         (
-            df.withColumn("_bucket", self._bucket_col())
+            df.withColumn("_bucket", self._bucket_col)
             .repartition("_bucket")
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "static")
@@ -538,7 +537,7 @@ class UpsertTable:
         partitions the write replaces), and it materializes the final
         partition layout so the write itself is shuffle-free."""
         return (
-            merged.withColumn("_bucket", self._bucket_col())
+            merged.withColumn("_bucket", self._bucket_col)
             .repartition("_bucket")
             .localCheckpoint(eager=True)
         )
@@ -632,13 +631,18 @@ class UpsertTable:
         # overwrites those buckets would corrupt the table
         self._rollback_pending()
 
+        new_rows = new_rows.cache()
+        # the batch's bucket list is collected ONCE and reused for the
+        # pruned current-read and the merge_fn safety check — each
+        # collect is a Spark job, the dominant fixed cost of a small
+        # micro-batch.  It doubles as the emptiness test: an empty batch
+        # changes nothing and leaves no ledger marker (a replay of it is
+        # just as empty)
+        new_buckets = self._affected_buckets(new_rows)
+        if not new_buckets:
+            new_rows.unpersist()
+            return
         if self.exists():
-            new_rows = new_rows.cache()
-            # the batch's bucket list is collected ONCE and reused for
-            # the pruned current-read and the merge_fn safety check —
-            # each collect is a Spark job, the dominant fixed cost of a
-            # small micro-batch
-            new_buckets = self._affected_buckets(new_rows)
             # compute the merged output FIRST: the undo log must cover
             # every bucket the write touches, and a merge_fn may emit
             # keys hashing to buckets beyond the batch's own (checked
@@ -666,7 +670,6 @@ class UpsertTable:
             self.txn_log.snapshot_buckets(key, self._data(), merged_buckets)
             self._write_prebucketed(merged)
             self.txn_log.commit(key)
-            new_rows.unpersist()
         else:
             # first batch creates the table: undo log records that fact
             # so a crash before the marker drops the half-created table
@@ -674,3 +677,4 @@ class UpsertTable:
             self.txn_log.record_fresh_table(key)
             self.upsert(new_rows, merge_fn)
             self.txn_log.commit(key)
+        new_rows.unpersist()

@@ -11,6 +11,8 @@
    re-registers its .cache() marks.
 4. planmemo.session_memo is the only home for module-level memos: no
    other package module binds an empty dict or set at module level.
+5. session_columns hands every session of an application the same
+   built columns, one entry per key, and clear() forgets them.
 """
 
 from __future__ import annotations
@@ -103,6 +105,89 @@ def test_memoized_frame_still_computes_and_clear_forgets(spark):
     assert df2.count() == n1
     for m, fn in memoized.items():
         assert fn() is not before[m], f"{m}: clear() must forget it"
+
+
+def test_session_columns_shared_across_sessions_until_clear(spark):
+    from pyspark.sql import functions as F
+
+    builds = []
+
+    def build():
+        builds.append(1)
+        return [F.col("a"), F.lit(1)]
+
+    key = ("test", "session_columns")
+    cols = planmemo.session_columns(spark, key, build)
+    assert planmemo.session_columns(spark, key, build) is cols
+    assert planmemo.session_columns(spark.newSession(), key, build) is cols
+    assert len(builds) == 1
+    planmemo.clear()
+    assert planmemo.session_columns(spark, key, build) is not cols
+    assert len(builds) == 2
+
+
+def _taxi_trips(session, tmp_path):
+    from ingestprocessstoreinnrt_spark.sources import csv_clean, generators
+
+    path = str(tmp_path / "taxi.csv")
+    if not (tmp_path / "taxi.csv").exists():
+        generators.write_taxi_csv(path, rows=400, seed=41)
+    return csv_clean.read_taxi_trips(session, path)
+
+
+def test_merge_columns_keyed_per_kind_split(spark, tmp_path, monkeypatch):
+    """The taxi and car merges declare different column kinds, so each
+    gets its own entry; a shared key would hand one the other's
+    aggregates."""
+    from ingestprocessstoreinnrt_spark.operators import car, merge, taxi
+    from ingestprocessstoreinnrt_spark.sources import csv_clean, generators
+
+    ent = taxi.entity_from_trips(_taxi_trips(spark, tmp_path))
+    car_csv = generators.write_car_readings_csv(
+        str(tmp_path / "car.csv"), cars=6, sweeps=20, seed=43
+    )
+    stats = car.stats_from_readings(csv_clean.read_car_readings(spark, car_csv))
+    builds = []
+    build = merge._merge_columns
+    monkeypatch.setattr(
+        merge, "_merge_columns", lambda *a: builds.append(a) or build(*a)
+    )
+    planmemo.clear()
+    for _ in range(2):
+        m_taxi = taxi.merge_taxi_entities(ent, ent)
+        m_car = car.merge_stats(stats, stats)
+    assert len(builds) == 2, "one build per kind split"
+    assert m_taxi.columns == ent.columns and m_car.columns == stats.columns
+    once = {r.vender_id: r for r in ent.collect()}
+    for r in m_taxi.collect():
+        assert r.total_trips == 2 * once[r.vender_id].total_trips
+        assert r.max_distance_of_trip == once[r.vender_id].max_distance_of_trip
+    once = {r.vin: r for r in stats.collect()}
+    for r in m_car.collect():
+        assert r.readings_count == 2 * once[r.vin].readings_count
+        assert r.last_updated == once[r.vin].last_updated
+
+
+def test_entity_columns_serve_two_sessions_cell_identical(
+    spark, tmp_path, monkeypatch
+):
+    """A foreachBatch frame belongs to the stream's cloned session; the
+    app-scoped columns built in one session must give the same cells in
+    another."""
+    from ingestprocessstoreinnrt_spark.operators import taxi
+
+    builds = []
+    build = taxi._entity_columns
+    monkeypatch.setattr(
+        taxi, "_entity_columns", lambda: builds.append(1) or build()
+    )
+    planmemo.clear()
+    got = [
+        sorted(taxi.entity_from_trips(_taxi_trips(s, tmp_path)).collect())
+        for s in (spark, spark.newSession())
+    ]
+    assert len(builds) == 1
+    assert got[0] and got[0] == got[1]
 
 
 # module-level empty containers that are not session memos

@@ -61,6 +61,97 @@ def test_streaming_entity_equals_batch(spark, workdir):
     assert _rows(table.read(), "vender_id") == _rows(batch, "vender_id")
 
 
+def test_header_only_batch_leaves_no_table_or_marker(spark, workdir):
+    """An empty micro-batch (a header-only CSV) creates no table and no
+    ledger marker; the data batch after it lands exactly."""
+    full_csv = generators.write_taxi_csv(workdir + "/all.csv", rows=600, seed=19)
+    with open(full_csv) as f:
+        header = f.readline()
+    stream_dir, ckpt = workdir + "/stream", workdir + "/ckpt"
+    os.makedirs(stream_dir)
+    with open(stream_dir + "/a_header_only.csv", "w") as f:
+        f.write(header)
+    table = UpsertTable(spark, workdir + "/entity", ["vender_id"], num_buckets=4)
+
+    def run():
+        pipelines.upsert_aggregate_stream(
+            csv_clean.read_taxi_trips_stream(spark, stream_dir),
+            table, taxi.entity_from_trips,
+            lambda c, n: taxi.merge_taxi_entities(c, n), ckpt,
+        ).awaitTermination(120)
+
+    run()
+    assert os.path.exists(ckpt + "/commits/0"), "the empty batch ran"
+    assert not table.exists()
+    assert not os.path.isdir(table._ledger) or not os.listdir(table._ledger)
+
+    shutil.copy(full_csv, stream_dir + "/b_data.csv")
+    run()
+    assert os.path.exists(ckpt + "/commits/1")
+    batch = taxi.entity_from_trips(csv_clean.read_taxi_trips(spark, full_csv))
+    assert _rows(table.read(), "vender_id") == _rows(batch, "vender_id")
+    assert len(os.listdir(table._ledger)) == 1
+
+
+def test_upsert_stream_builds_columns_once_within_round_trip_budget(
+    spark, workdir, monkeypatch
+):
+    """The upsert path's column expressions are built once per
+    application, not per micro-batch: over a multi-batch stream the
+    entity builder runs once, and a warm aggregate + merge
+    construction stays within a py4j round-trip budget (rebuilding
+    the columns costs ~5,000)."""
+    import gc
+
+    from py4j.clientserver import ClientServerConnection
+
+    from ingestprocessstoreinnrt_spark import planmemo
+
+    stream_dir, full_csv = _write_chunked_csv(workdir, 900, 3, seed=31)
+    builds = []
+    build = taxi._entity_columns
+    monkeypatch.setattr(
+        taxi, "_entity_columns", lambda: builds.append(1) or build()
+    )
+    planmemo.clear()
+    table = UpsertTable(spark, workdir + "/entity", ["vender_id"], num_buckets=4)
+    src = csv_clean.taxi_trips_from_lines(
+        spark.readStream.option("maxFilesPerTrigger", 1)
+        .format("text").load(stream_dir)
+    )
+    q = pipelines.upsert_aggregate_stream(
+        src, table, taxi.entity_from_trips,
+        lambda c, n: taxi.merge_taxi_entities(c, n),
+        checkpoint=workdir + "/ckpt",
+    )
+    q.awaitTermination(120)
+    assert sum(p.numInputRows > 0 for p in q.recentProgress) >= 3
+    trips = csv_clean.read_taxi_trips(spark, full_csv)
+    assert _rows(table.read(), "vender_id") == _rows(
+        taxi.entity_from_trips(trips), "vender_id"
+    )
+    assert len(builds) == 1
+
+    current = table.read()
+    calls = [0]
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        calls[0] += 1
+        return send(self, command)
+
+    gc.collect()
+    gc.disable()  # no finalizer of an older py4j object lands in the count
+    try:
+        monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+        merged = taxi.merge_taxi_entities(current, taxi.entity_from_trips(trips))
+        monkeypatch.setattr(ClientServerConnection, "send_command", send)
+    finally:
+        gc.enable()
+    assert merged.columns == current.columns
+    assert calls[0] <= 500, f"{calls[0]} py4j round trips"
+
+
 def test_streaming_restart_is_exactly_once(spark, workdir):
     stream_dir, full_csv = _write_chunked_csv(workdir, 1500, 3, seed=17)
     table = UpsertTable(
