@@ -134,20 +134,12 @@ def upsert_aggregate_stream(
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         # merge_fn None -> last-write-wins row upsert (document sinks);
-        # otherwise exact aggregate merge with the table's current rows.
+        # otherwise exact aggregate merge with the table's current rows
+        # (the first batch creates the table from the partial alone).
         # No isEmpty() job here: apply_batch's bucket collect finds an
         # empty partial and returns without touching the table
         table.apply_batch(
-            batch_id,
-            aggregate_fn(batch_df),
-            None
-            if merge_fn is None
-            else (
-                lambda current, new: new
-                if current is None
-                else merge_fn(current, new)
-            ),
-            namespace=ns,
+            batch_id, aggregate_fn(batch_df), merge_fn, namespace=ns
         )
 
     w = (

@@ -20,6 +20,13 @@ Design for 100 TB:
     against the pre-batch state (no double-merge).  This replaces the
     reference's swallow-duplicate-key-errors approach
     (NyTaxiYellowTripStreaming.scala:298-313).
+  * one merge-and-write sequence (`_merge_and_write`) serves both
+    entry points: `upsert()` runs it bare, `apply_batch` runs it under
+    the batch claim and commit lock with the undo log bracketing the
+    write.  One bucket collect of the batch prunes the current-read and
+    tests for emptiness (empty -> no table, no marker); one
+    last-write-wins dedup serves fresh and existing tables; one check
+    refuses a merge_fn whose keys leave the batch's buckets.
 
 Filesystem scope: all ledger/undo bookkeeping lives behind the
 LocalFSTxnLog interface (is_applied/mark_applied, begin/
@@ -32,8 +39,10 @@ themselves are already URI-agnostic.
 
 The reference's per-row insert-vs-update flag dance collapses into
 last-write-wins MERGE by key (deterministic: ties inside one batch are
-broken by a stable row hash); a `merge_fn` hook supports aggregate
-merging (running entities) instead of row replacement.
+broken by a stable row hash); a `merge_fn(current, new)` hook supports
+aggregate merging (running entities) instead of row replacement.  It is
+called only when the table exists, so `current` is never None; the
+first write creates the table from the new rows as given.
 """
 
 from __future__ import annotations
@@ -68,7 +77,7 @@ class LocalFSTxnLog:
     On a local/NFS filesystem this implementation is correct as-is;
     on s3a:// it is not (rename/list consistency), use a table format.
 
-    Protocol per batch key (see apply_batch):
+    Protocol per batch key (see UpsertTable._merge_and_write):
       begin(key) -> [record_fresh_table | snapshot_buckets] ->
       <table write> -> commit(key); rollback_incomplete() at entry
       undoes any batch that began but never committed.
@@ -413,15 +422,9 @@ class UpsertTable:
             r[0] for r in keys_df.select(col.alias("b")).distinct().collect()
         ]
 
-    def read_bucket_pruned(
-        self, keys_df: DataFrame, buckets: list[int] | None = None
-    ) -> DataFrame:
-        """Read only the bucket partitions containing the given keys.
-        Pass `buckets` when the caller already collected them — the
-        collect is one Spark job, and a micro-batch should pay it
-        once."""
-        if buckets is None:
-            buckets = self._affected_buckets(keys_df)
+    def read_bucket_pruned(self, buckets: list[int]) -> DataFrame:
+        """Read only the given bucket partitions (Catalyst prunes the
+        rest)."""
         df = self.spark.read.parquet(self._data())
         return df.filter(F.col("_bucket").isin(buckets)).drop("_bucket")
 
@@ -445,113 +448,124 @@ class UpsertTable:
         new_rows: DataFrame,
         merge_fn: Callable[[DataFrame, DataFrame], DataFrame] | None = None,
     ) -> None:
-        """MERGE by key.  Default: last-write-wins row replacement
+        """MERGE by key, without the exactly-once ledger (DML, maintained
+        indexes).  Default: last-write-wins row replacement
         (deterministic under in-batch duplicate keys via a stable row
         hash).  With merge_fn(current_subset, new_rows) -> merged:
-        aggregate merging.  Only the buckets present in `new_rows` are
-        rewritten (per-write dynamic partition overwrite — session conf
-        untouched)."""
-        if not self.exists():
-            if merge_fn is not None:
-                merged = merge_fn(None, new_rows)
-            else:
-                # same deterministic-dedup contract as the merge path:
-                # in-batch duplicate keys must not persist multiple rows
-                merged = self._lww_dedup_new(new_rows)
-            self.init(merged)
-            return
+        aggregate merging; merge_fn is only called when the table
+        exists, so `current_subset` is never None.  Only the buckets
+        present in `new_rows` are rewritten; an empty `new_rows` is a
+        no-op.  Same sequence as apply_batch (`_merge_and_write`)."""
+        self._merge_and_write(new_rows, merge_fn)
 
-        new_rows = new_rows.cache()
-        merged = self._finalize(self._merge_existing(new_rows, merge_fn))
-        self._check_merge_buckets(merged, new_rows, merge_fn)
-        self._write_prebucketed(merged)
-        new_rows.unpersist()
-
-    def _lww_dedup_new(self, new_rows: DataFrame) -> DataFrame:
-        """One row per key among new rows only (no current table): ties
-        broken by the same stable whole-row hash as the merge path."""
-        w = Window.partitionBy(*self.key_cols).orderBy(F.col("_tie").desc())
-        return (
-            new_rows.withColumn("_tie", F.xxhash64(*new_rows.columns))
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_tie", "_rn")
-        )
-
-    def _merge_existing(
-        self,
-        new_rows: DataFrame,
-        merge_fn: Callable[[DataFrame, DataFrame], DataFrame] | None,
-        new_buckets: list[int] | None = None,
+    def _last_write_wins(
+        self, current: DataFrame | None, new_rows: DataFrame
     ) -> DataFrame:
-        current = self.read_bucket_pruned(new_rows, new_buckets)
-        if merge_fn is not None:
-            return merge_fn(current, new_rows)
-        # new rows win over current; ties among new rows broken by a
-        # deterministic hash of the whole row so reruns of the same
-        # input persist the same row
-        tie = F.xxhash64(*new_rows.columns)
+        """One row per key: new rows win over current; ties among new
+        rows broken by a deterministic hash of the whole row so reruns
+        of the same input persist the same row."""
+        ranked = new_rows.withColumn("_pri", F.lit(1)).withColumn(
+            "_tie", F.xxhash64(*new_rows.columns)
+        )
+        if current is not None:
+            ranked = (
+                current.withColumn("_pri", F.lit(0))
+                .withColumn("_tie", F.lit(0).cast("long"))
+                .unionByName(ranked)
+            )
         w = Window.partitionBy(*self.key_cols).orderBy(
             F.col("_pri").desc(), F.col("_tie").desc()
         )
         return (
-            current.withColumn("_pri", F.lit(0))
-            .withColumn("_tie", F.lit(0).cast("long"))
-            .unionByName(
-                new_rows.withColumn("_pri", F.lit(1)).withColumn("_tie", tie)
-            )
-            .withColumn("_rn", F.row_number().over(w))
+            ranked.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .drop("_pri", "_tie", "_rn")
         )
 
-    def _check_merge_buckets(
+    def _merge_and_write(
         self,
-        merged: DataFrame,
         new_rows: DataFrame,
         merge_fn: Callable[[DataFrame, DataFrame], DataFrame] | None,
+        key: str | None = None,
     ) -> None:
-        """A merge_fn emitting keys that hash outside the batch's
-        buckets would have its rows land via dynamic overwrite into
-        buckets that were never read — silently dropping the unread
-        rows already there.  Fail fast instead (metadata-scale check:
-        <= num_buckets distinct values per side)."""
-        if merge_fn is None:
-            return  # LWW keeps exactly the batch's keys
-        extra = set(self._affected_buckets(merged)) - set(
-            self._affected_buckets(new_rows)
-        )
-        if extra:
-            raise ValueError(
-                "merge_fn emitted keys hashing to buckets "
-                f"{sorted(extra)} outside the batch's buckets; those "
-                "buckets were not read, so writing would drop their "
-                "existing rows. merge_fn must only return keys drawn "
-                "from the batch or the current subset it was given."
-            )
-
-    def _finalize(self, merged: DataFrame) -> DataFrame:
-        """Bucket-assign + repartition + materialize the merge output.
-        The checkpoint serves two masters with ONE shuffle: it breaks
-        the read-overwrite hazard (`merged` reads the same parquet
-        partitions the write replaces), and it materializes the final
-        partition layout so the write itself is shuffle-free."""
-        return (
-            merged.withColumn("_bucket", self._bucket_col)
-            .repartition("_bucket")
-            .localCheckpoint(eager=True)
-        )
-
-    def _write_prebucketed(self, merged: DataFrame) -> None:
-        """Rewrite only the buckets present in `merged` (per-write
-        dynamic partition overwrite — session conf untouched).  Expects
-        a _finalize()d frame: `_bucket` present, layout materialized."""
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_bucket")
-            .parquet(self._data())
-        )
+        """The one merge-and-write sequence behind upsert() and
+        apply_batch.  With a ledger `key` the write is bracketed by the
+        undo log: begin -> record_fresh_table | snapshot_buckets ->
+        write -> commit."""
+        new_rows = new_rows.cache()
+        try:
+            # the batch's bucket list is collected ONCE: it prunes the
+            # current-read, is the merge_fn safety check's reference and
+            # the undo snapshot's list — each collect is a Spark job, the
+            # dominant fixed cost of a small micro-batch.  It doubles as
+            # the emptiness test: an empty batch changes nothing and
+            # leaves no table and no ledger marker (a replay of it is
+            # just as empty)
+            buckets = self._affected_buckets(new_rows)
+            if not buckets:
+                return
+            if not self.exists():
+                # a fresh table: nothing to merge with, so merge_fn is
+                # not called; the undo log records the creation so a
+                # crash before the marker drops the half-created table
+                if key is not None:
+                    self.txn_log.begin(key)
+                    self.txn_log.record_fresh_table(key)
+                self.init(
+                    new_rows
+                    if merge_fn is not None
+                    else self._last_write_wins(None, new_rows)
+                )
+            else:
+                current = self.read_bucket_pruned(buckets)
+                merged = (
+                    self._last_write_wins(current, new_rows)
+                    if merge_fn is None
+                    else merge_fn(current, new_rows)
+                )
+                # bucket-assign + repartition + materialize: the
+                # checkpoint breaks the read-overwrite hazard (`merged`
+                # reads the partitions the write replaces) and fixes the
+                # final layout, so the write itself is shuffle-free
+                merged = (
+                    merged.withColumn("_bucket", self._bucket_col)
+                    .repartition("_bucket")
+                    .localCheckpoint(eager=True)
+                )
+                if merge_fn is not None:
+                    # a merge_fn key hashing to a bucket the batch lacks
+                    # would dynamic-overwrite a bucket that was never
+                    # read, dropping its rows.  LWW keeps exactly the
+                    # batch's keys, so it writes exactly `buckets` and
+                    # needs neither this check nor a merged collect
+                    extra = set(self._affected_buckets(merged)) - set(buckets)
+                    if extra:
+                        raise ValueError(
+                            "merge_fn emitted keys hashing to buckets "
+                            f"{sorted(extra)} outside the batch's buckets; "
+                            "those buckets were not read, so writing would "
+                            "drop their existing rows. merge_fn must only "
+                            "return keys drawn from the batch or the "
+                            "current subset it was given."
+                        )
+                if key is not None:
+                    # the write replaces a subset of `buckets` (checked
+                    # above), so snapshotting them covers every bucket
+                    # it touches
+                    self.txn_log.begin(key)
+                    self.txn_log.snapshot_buckets(key, self._data(), buckets)
+                # per-write dynamic partition overwrite: only the buckets
+                # present in `merged` are replaced, session conf untouched
+                (
+                    merged.write.mode("overwrite")
+                    .option("partitionOverwriteMode", "dynamic")
+                    .partitionBy("_bucket")
+                    .parquet(self._data())
+                )
+            if key is not None:
+                self.txn_log.commit(key)
+        finally:
+            new_rows.unpersist()
 
     # -- exactly-once ledger + undo log -------------------------------------
     #
@@ -571,9 +585,6 @@ class UpsertTable:
     def mark_applied(self, batch_id: int, namespace: str = "") -> None:
         self.txn_log.mark_applied(self._ledger_key(batch_id, namespace))
 
-    def _rollback_pending(self) -> None:
-        self.txn_log.rollback_incomplete(self._data())
-
     def apply_batch(
         self,
         batch_id: int,
@@ -585,6 +596,8 @@ class UpsertTable:
     ) -> None:
         """Idempotent upsert keyed by (namespace, micro-batch id) — the
         foreachBatch contract for exactly-once delivery to this table.
+        Runs upsert()'s merge-and-write sequence, with the same merge_fn
+        contract (never called with a None current).
         Crash-safe: affected buckets are snapshotted to an undo log
         before the write; a replay after a crash first rolls back the
         half-applied attempt, so the merge never double-counts.
@@ -616,65 +629,10 @@ class UpsertTable:
             if self.txn_log.is_applied(key):
                 return  # claimed a batch a prior owner already landed
             with self.txn_log.table_lock(writer_id, timeout=claim_timeout):
-                self._apply_batch_locked(key, new_rows, merge_fn)
+                # rollback of crashed attempts must itself run inside the
+                # commit lock: restoring bucket snapshots while another
+                # writer overwrites those buckets would corrupt the table
+                self.txn_log.rollback_incomplete(self._data())
+                self._merge_and_write(new_rows, merge_fn, key)
         finally:
             self.txn_log.release_claim(key)
-
-    def _apply_batch_locked(
-        self,
-        key: str,
-        new_rows: DataFrame,
-        merge_fn: Callable[[DataFrame, DataFrame], DataFrame] | None,
-    ) -> None:
-        # rollback of crashed attempts must itself run inside the
-        # commit lock: restoring bucket snapshots while another writer
-        # overwrites those buckets would corrupt the table
-        self._rollback_pending()
-
-        new_rows = new_rows.cache()
-        # the batch's bucket list is collected ONCE and reused for the
-        # pruned current-read and the merge_fn safety check — each
-        # collect is a Spark job, the dominant fixed cost of a small
-        # micro-batch.  It doubles as the emptiness test: an empty batch
-        # changes nothing and leaves no ledger marker (a replay of it is
-        # just as empty)
-        new_buckets = self._affected_buckets(new_rows)
-        if not new_buckets:
-            new_rows.unpersist()
-            return
-        if self.exists():
-            # compute the merged output FIRST: the undo log must cover
-            # every bucket the write touches, and a merge_fn may emit
-            # keys hashing to buckets beyond the batch's own (checked
-            # and refused below, but the snapshot is derived from the
-            # merged output so the two can never disagree)
-            merged = self._finalize(
-                self._merge_existing(new_rows, merge_fn, new_buckets)
-            )
-            # one buckets collect serves both the safety check and the
-            # snapshot loop (one less job per micro-batch); reads the
-            # materialized _bucket column, no hash recompute
-            merged_buckets = self._affected_buckets(merged)
-            if merge_fn is not None:
-                extra = set(merged_buckets) - set(new_buckets)
-                if extra:
-                    raise ValueError(
-                        "merge_fn emitted keys hashing to buckets "
-                        f"{sorted(extra)} outside the batch's buckets; "
-                        "those buckets were not read, so writing would "
-                        "drop their existing rows. merge_fn must only "
-                        "return keys drawn from the batch or the current "
-                        "subset it was given."
-                    )
-            self.txn_log.begin(key)
-            self.txn_log.snapshot_buckets(key, self._data(), merged_buckets)
-            self._write_prebucketed(merged)
-            self.txn_log.commit(key)
-        else:
-            # first batch creates the table: undo log records that fact
-            # so a crash before the marker drops the half-created table
-            self.txn_log.begin(key)
-            self.txn_log.record_fresh_table(key)
-            self.upsert(new_rows, merge_fn)
-            self.txn_log.commit(key)
-        new_rows.unpersist()

@@ -102,6 +102,17 @@ def test_update_rejects_unknown_column(engine):
         engine.update("v", "k = 1", {"totl": "0"})  # typo must not no-op
 
 
+def test_empty_upsert_leaves_fresh_table_uncreated(engine, spark):
+    """An empty upsert into a never-written table must not create it: a
+    data/ dir holding only _SUCCESS has no schema, so every later read
+    or upsert would fail with UNABLE_TO_INFER_SCHEMA."""
+    t = engine.create_table("w", ["k"], num_buckets=4)
+    engine.upsert("w", spark.createDataFrame([], "k long, v string"))
+    assert not t.exists()
+    engine.upsert("w", spark.createDataFrame([(1, "a")], "k long, v string"))
+    assert [(r.k, r.v) for r in engine.table("w").collect()] == [(1, "a")]
+
+
 def test_ledger_namespace_is_path_canonical(tmp_path, monkeypatch):
     """Different spellings of the same checkpoint dir must share a
     ledger namespace, or a restart double-merges replayed batch ids."""

@@ -102,6 +102,7 @@ def test_upsert_stream_builds_columns_once_within_round_trip_budget(
     construction stays within a py4j round-trip budget (rebuilding
     the columns costs ~5,000)."""
     import gc
+    import threading
 
     from py4j.clientserver import ClientServerConnection
 
@@ -135,9 +136,13 @@ def test_upsert_stream_builds_columns_once_within_round_trip_budget(
     current = table.read()
     calls = [0]
     send = ClientServerConnection.send_command
+    # count this thread's calls only: py4j's finalizer thread sends the
+    # deletes of objects freed before the window (by gc.collect() below)
+    # whenever it gets to them, and those are not construction
+    me = threading.get_ident()
 
     def counting(self, command):
-        calls[0] += 1
+        calls[0] += threading.get_ident() == me
         return send(self, command)
 
     gc.collect()
@@ -244,9 +249,7 @@ def test_apply_batch_crash_rollback(spark, workdir):
     t = UpsertTable(spark, workdir + "/t", ["k"], num_buckets=4)
     mk = lambda rows: spark.createDataFrame(rows, ["k", "n"])  # noqa: E731
     merge = lambda cur, new: (  # additive merge: double-apply detectable
-        new
-        if cur is None
-        else cur.unionByName(new)
+        cur.unionByName(new)
         .groupBy("k")
         .agg(F.sum("n").cast("long").alias("n"))
     )
@@ -377,6 +380,54 @@ def test_merge_fn_out_of_batch_keys_refused(spark, workdir):
     # table untouched and batch NOT marked applied
     assert sorted((r.k, r.n) for r in t.read().collect()) == before
     assert not t.already_applied(7)
+    # the ledger-free entry point runs the same check
+    with pytest.raises(ValueError, match="outside the batch's buckets"):
+        t.upsert(mk([(3, 100)]), bad_merge)
+    assert sorted((r.k, r.n) for r in t.read().collect()) == before
+
+
+@pytest.mark.parametrize("use_merge_fn", [False, True], ids=["lww", "merge_fn"])
+def test_undo_snapshot_covers_every_written_bucket(spark, workdir, use_merge_fn):
+    """The undo log must snapshot every bucket the write replaces, or a
+    rollback leaves that bucket half-applied.  LWW snapshots the batch's
+    bucket list without collecting the merged output's, so pin it: the
+    snapshotted buckets are exactly the `_bucket=NN` dirs whose file
+    listing the write changed."""
+    t = UpsertTable(spark, workdir + "/t", ["k"], num_buckets=8)
+    mk = lambda rows: spark.createDataFrame(rows, ["k", "n"])  # noqa: E731
+    t.init(mk([(i, i) for i in range(64)]))
+    merge = lambda cur, new: (  # noqa: E731
+        cur.unionByName(new)
+        .groupBy("k")
+        .agg(F.sum("n").cast("long").alias("n"))
+    )
+
+    def listing():
+        return {
+            d: sorted(os.listdir(os.path.join(t._data(), d)))
+            for d in os.listdir(t._data())
+            if d.startswith("_bucket=")
+        }
+
+    snapped: list = []
+    orig = t.txn_log.snapshot_buckets
+
+    def recording(key, data_dir, buckets):
+        snapped.extend(buckets)
+        return orig(key, data_dir, buckets)
+
+    t.txn_log.snapshot_buckets = recording
+    before = listing()
+    t.apply_batch(
+        1, mk([(3, 100), (17, 100), (40, 100)]), merge if use_merge_fn else None
+    )
+    after = listing()
+    changed = {
+        d for d in before.keys() | after.keys()
+        if before.get(d) != after.get(d)
+    }
+    assert changed
+    assert sorted(f"_bucket={b}" for b in snapped) == sorted(changed)
 
 
 def test_kafka_reader_contract(spark):
@@ -996,9 +1047,7 @@ def test_concurrent_writers_single_batch_exactly_once(spark, workdir):
     t = UpsertTable(spark, workdir + "/t", ["k"], num_buckets=4)
     mk = lambda rows: spark.createDataFrame(rows, ["k", "n"])  # noqa: E731
     merge = lambda cur, new: (  # noqa: E731
-        new
-        if cur is None
-        else cur.unionByName(new)
+        cur.unionByName(new)
         .groupBy("k")
         .agg(F.sum("n").cast("long").alias("n"))
     )
@@ -1039,9 +1088,7 @@ def test_concurrent_writers_distinct_batches_serialize(spark, workdir):
     t = UpsertTable(spark, workdir + "/t", ["k"], num_buckets=2)
     mk = lambda rows: spark.createDataFrame(rows, ["k", "n"])  # noqa: E731
     merge = lambda cur, new: (  # noqa: E731
-        new
-        if cur is None
-        else cur.unionByName(new)
+        cur.unionByName(new)
         .groupBy("k")
         .agg(F.sum("n").cast("long").alias("n"))
     )
@@ -1080,9 +1127,7 @@ def test_claim_loser_waits_then_skips(spark, workdir):
     t = UpsertTable(spark, workdir + "/t", ["k"], num_buckets=2)
     mk = lambda rows: spark.createDataFrame(rows, ["k", "n"])  # noqa: E731
     merge = lambda cur, new: (  # noqa: E731
-        new
-        if cur is None
-        else cur.unionByName(new)
+        cur.unionByName(new)
         .groupBy("k")
         .agg(F.sum("n").cast("long").alias("n"))
     )
@@ -1124,17 +1169,15 @@ def test_reclaim_recovers_crash_inside_commit_lock(spark, workdir):
     t = UpsertTable(spark, workdir + "/t", ["k"], num_buckets=2)
     mk = lambda rows: spark.createDataFrame(rows, ["k", "n"])  # noqa: E731
     merge = lambda cur, new: (  # noqa: E731
-        new
-        if cur is None
-        else cur.unionByName(new)
+        cur.unionByName(new)
         .groupBy("k")
         .agg(F.sum("n").cast("long").alias("n"))
     )
     t.apply_batch(0, mk([(1, 5)]), merge, writer_id="w0")
 
-    # -- dead writer: replays _apply_batch_locked's exact sequence but
-    # stops (process death) after the table write, before commit,
-    # still holding claim + commit lock
+    # -- dead writer: runs the real merge-and-write sequence but dies
+    # (process death) after the table write, before commit, still
+    # holding claim + commit lock
     key = t._ledger_key(1, "")
     assert t.txn_log.try_claim(key, "dead-writer")
     fd = os.open(
@@ -1142,15 +1185,18 @@ def test_reclaim_recovers_crash_inside_commit_lock(spark, workdir):
     )
     with os.fdopen(fd, "w") as f:
         f.write("dead-writer")
-    new_rows = mk([(1, 7)])
-    new_buckets = t._affected_buckets(new_rows)
-    merged = t._finalize(t._merge_existing(new_rows, merge, new_buckets))
-    t.txn_log.begin(key)
-    t.txn_log.snapshot_buckets(
-        key, t._data(), t._affected_buckets(merged)
-    )
-    t._write_prebucketed(merged)
-    # <- writer dies here: no commit, no release, lock file remains
+
+    class WriterDied(BaseException):
+        pass
+
+    def die(_key):
+        raise WriterDied
+
+    dead = UpsertTable(spark, workdir + "/t", ["k"], num_buckets=2)
+    dead.txn_log.commit = die
+    with _pytest.raises(WriterDied):
+        dead._merge_and_write(mk([(1, 7)]), merge, key)
+    # <- writer died here: no commit, no release, lock file remains
 
     # the table is observably half-applied and the batch unmarked
     assert {r.n for r in t.read().filter("k=1").collect()} == {12}
