@@ -1,12 +1,19 @@
-"""Small-file compaction for streaming append tables.
+"""Small-file compaction for streaming append tables and upsert tables.
 
 A micro-batch append sink produces one-or-more files per trigger; at
 2-second triggers that is ~43k files/day/table — metadata pressure and
-scan overhead at 100 TB.  `compact_parquet_dir` rewrites a directory to
-~target-sized files (content-preserving, verified by count), the
-OPTIMIZE step a table maintenance job runs off the hot path.
+scan overhead at 100 TB.  Compaction rewrites data to ~target-sized
+files (content-preserving, verified by row count), the OPTIMIZE step a
+table maintenance job runs off the hot path.
 
-Safety contract:
+`compact_upsert_table` compacts a live UpsertTable bucket by bucket:
+each coalesced bucket is staged and swapped in through the table's
+transaction log, the same commit an upsert makes, so a crashed
+compaction is undone by the same `rollback_incomplete` as a crashed
+write (see its docstring).
+
+`compact_parquet_dir` compacts a flat append directory.  Safety
+contract:
   * the table must be QUIESCED — no writer between stat and swap.  This
     is the CALLER's responsibility; the run narrows (but cannot close)
     the window by re-stat'ing the directory after the rewrite and
@@ -19,8 +26,8 @@ Safety contract:
   * directories with a `_spark_metadata` file-sink log are refused:
     their readers resolve files through the log, which a rewrite cannot
     preserve.  Compaction targets foreachBatch/batch-written tables
-    (everything streaming/upsert.py and append-as-parquet produce is
-    fine once the query is stopped and the log absent).
+    (everything append-as-parquet produces is fine once the query is
+    stopped and the log absent).
   * Hive-partitioned layouts (key=value subdirs) are refused rather
     than silently flattened.
   * the two-rename swap is not atomic; a crash between renames leaves
@@ -34,6 +41,7 @@ from __future__ import annotations
 import os
 import shutil
 import time
+import uuid
 
 from pyspark.sql import SparkSession
 
@@ -51,144 +59,62 @@ def parquet_file_stats(path: str) -> tuple[int, int]:
     return n, total
 
 
-def _scratch_name(path: str, scratch_dir: str | None, suffix: str) -> str:
-    # sibling by default; under scratch_dir when the path lives inside
-    # a partition-discovered layout — a crashed run must NEVER leave
-    # `_bucket=NN._compact_old` where a reader would parse it as a
-    # phantom partition value
-    if scratch_dir is None:
-        return path.rstrip("/") + suffix
-    return os.path.join(
-        scratch_dir, os.path.basename(path.rstrip("/")) + suffix
-    )
+def _tmp(path: str) -> str:
+    return path.rstrip("/") + "._compact_tmp"
 
 
-def _tmp(path: str, scratch_dir: str | None = None) -> str:
-    return _scratch_name(path, scratch_dir, "._compact_tmp")
+def _old(path: str) -> str:
+    return path.rstrip("/") + "._compact_old"
 
 
-def _old(path: str, scratch_dir: str | None = None) -> str:
-    return _scratch_name(path, scratch_dir, "._compact_old")
+def _lock(path: str) -> str:
+    return path.rstrip("/") + "._compact_lock"
 
 
-def _lock(path: str, scratch_dir: str | None = None) -> str:
-    return _scratch_name(path, scratch_dir, "._compact_lock")
-
-
-def recover_compaction(path: str, scratch_dir: str | None = None) -> bool:
+def recover_compaction(path: str) -> bool:
     """Restore a table lost to a crash between the swap renames (old
     exists, path missing).  Returns True if a recovery happened."""
-    if os.path.exists(_old(path, scratch_dir)) and not os.path.exists(path):
-        os.rename(_old(path, scratch_dir), path)
+    if os.path.exists(_old(path)) and not os.path.exists(path):
+        os.rename(_old(path), path)
         return True
     return False
 
 
-_OLD_SUFFIX = "._compact_old"
-_LOCK_SUFFIX = "._compact_lock"
-
-
-def recover_compaction_scratch(
-    data_dir: str,
-    scratch_dir: str,
-    break_locks: bool = False,
-    skip_locked: bool = False,
-) -> list[str]:
-    """Scan a compaction scratch directory for crash leftovers and
-    restore every partition a crashed compactor left missing.
-
-    A compactor that dies between compact_parquet_dir's two swap
-    renames leaves `<bucket>._compact_old` in the scratch dir while the
-    bucket itself is missing from `data_dir` — to any later reader the
-    bucket looks empty, and the next upsert would silently rewrite it
-    with batch rows only.  This is the table-open / reclaim-stale hook
-    (ADVICE r9): for each `*._compact_old` under `scratch_dir`, restore
-    the partition if it is missing, else drop the stale backup (the
-    swap completed; only the post-swap cleanup was lost).
-
-    `skip_locked=True` (table open — ADVICE r10): leave alone any
-    partition whose per-bucket `._compact_lock` is present.  A LIVE
-    compactor (another process) holds that lock for the entire
-    stat-through-swap window, so restoring its backup here would make
-    its rename(tmp, path) fail and its rollback find the backup gone.
-    A compactor that CRASHED in that window also left the lock — but
-    it held the table commit lock too, so writers are fenced with a
-    TimeoutError pointing at reclaim_stale, which restores the bucket.
-    Readers are covered at table open: UpsertTable._open_recover polls
-    `stranded_locked_partitions` and raises toward reclaim_stale when a
-    locked bucket stays missing past the swap-window grace (ADVICE r11
-    — a reader takes no lock, so open is its only checkpoint).
-
-    `break_locks=True` (reclaim_stale only — the operator has declared
-    all writers dead) also removes per-bucket `._compact_lock` files so
-    the next compaction isn't wedged.  Table open leaves locks and
-    `._compact_tmp` dirs alone: a LIVE compactor may legitimately hold
-    them, and compact_parquet_dir cleans its own stale tmp on entry.
-    Returns the names of partitions that were RESTORED."""
-    if not os.path.isdir(scratch_dir):
-        return []
-    restored: list[str] = []
-    for entry in sorted(os.listdir(scratch_dir)):
-        p = os.path.join(scratch_dir, entry)
-        if entry.endswith(_OLD_SUFFIX):
-            part = entry[: -len(_OLD_SUFFIX)]
-            if skip_locked and os.path.exists(
-                os.path.join(scratch_dir, part + _LOCK_SUFFIX)
-            ):
-                continue  # live-or-crashed compactor owns this bucket
-            if recover_compaction(os.path.join(data_dir, part), scratch_dir):
-                restored.append(part)
-            else:
-                # partition present: the swap finished, the backup is
-                # stale — a crashed-cleanup leftover, safe to drop
-                shutil.rmtree(p, ignore_errors=True)
-        elif break_locks and entry.endswith(_LOCK_SUFFIX):
-            try:
-                os.unlink(p)
-            except OSError:
-                pass
-    return restored
-
-
-def stranded_locked_partitions(data_dir: str, scratch_dir: str) -> list[str]:
-    """Partitions whose backup AND per-bucket lock are both present in
-    the scratch dir while the partition itself is MISSING from
-    `data_dir` — the table state inside a compactor's swap window.  A
-    live compactor clears this state in milliseconds (two renames); if
-    it persists, the compactor died mid-swap and any reader of the
-    table is silently missing the whole bucket (ADVICE r11 medium).
-    Callers that cannot take the table commit lock poll this briefly
-    and raise toward reclaim_stale when the state does not clear."""
-    if not os.path.isdir(scratch_dir):
-        return []
-    out: list[str] = []
-    for entry in sorted(os.listdir(scratch_dir)):
-        if not entry.endswith(_OLD_SUFFIX):
-            continue
-        part = entry[: -len(_OLD_SUFFIX)]
-        if os.path.exists(
-            os.path.join(scratch_dir, part + _LOCK_SUFFIX)
-        ) and not os.path.exists(os.path.join(data_dir, part)):
-            out.append(part)
-    return out
+def _coalesce_copy(
+    spark: SparkSession, src: str, dst: str, target_bytes: int
+) -> int:
+    """Write src's rows to dst as ceil(total/target) files, verified by
+    row count; returns that file count.  0 means nothing was written:
+    src is empty or already at (or under) the target layout, so a
+    steady-state compactor loop pays one directory stat here, not a
+    full rewrite under the table commit lock (ADVICE r9)."""
+    n_before, total = parquet_file_stats(src)
+    n_files = max(1, -(-total // target_bytes))  # ceil
+    if total == 0 or n_before <= n_files:
+        return 0
+    df = spark.read.parquet(src)
+    before = df.count()
+    df.coalesce(n_files).write.mode("overwrite").parquet(dst)
+    after = spark.read.parquet(dst).count()
+    if after != before:
+        shutil.rmtree(dst, ignore_errors=True)
+        raise RuntimeError(
+            f"compaction row-count mismatch: {before} -> {after}"
+        )
+    return n_files
 
 
 def compact_parquet_dir(
     spark: SparkSession,
     path: str,
     target_bytes: int = DEFAULT_TARGET_BYTES,
-    scratch_dir: str | None = None,
 ) -> int:
     """Rewrite `path` to ceil(total/target) files; returns the new file
-    count (0 = nothing to do).  `scratch_dir` relocates the tmp/old/
-    lock working names outside the table's parent directory (required
-    when `path` is a partition directory — see _scratch_name)."""
-    if scratch_dir is not None:
-        os.makedirs(scratch_dir, exist_ok=True)
-    recover_compaction(path, scratch_dir)
+    count (0 = nothing to do)."""
+    recover_compaction(path)
     # stale leftovers from a crashed run must not wedge this one
-    shutil.rmtree(_tmp(path, scratch_dir), ignore_errors=True)
-    shutil.rmtree(_old(path, scratch_dir), ignore_errors=True)
+    shutil.rmtree(_tmp(path), ignore_errors=True)
+    shutil.rmtree(_old(path), ignore_errors=True)
 
     if not os.path.isdir(path):
         return 0
@@ -206,64 +132,44 @@ def compact_parquet_dir(
                 "would destroy the layout — compact per-partition instead."
             )
 
-    n_before, total = parquet_file_stats(path)
-    if total == 0:
+    stats = parquet_file_stats(path)
+    n_files = _coalesce_copy(spark, path, _tmp(path), target_bytes)
+    if not n_files:
         return 0
-    n_files = max(1, -(-total // target_bytes))  # ceil
-    if n_before <= n_files:
-        # already at (or under) the target layout: a steady-state
-        # compactor loop pays one directory stat here, not a full
-        # rewrite under the table commit lock (ADVICE r9)
-        return 0
-
-    df = spark.read.parquet(path)
-    before = df.count()
-    df.coalesce(n_files).write.mode("overwrite").parquet(
-        _tmp(path, scratch_dir)
-    )
-
-    after = spark.read.parquet(_tmp(path, scratch_dir)).count()
-    if after != before:
-        shutil.rmtree(_tmp(path, scratch_dir), ignore_errors=True)
-        raise RuntimeError(
-            f"compaction row-count mismatch: {before} -> {after}"
-        )
     # exclusive lock over the stat-through-swap window: serializes
     # concurrent compactions and marks the table for cooperating
     # writers.  It cannot stop an arbitrary external writer — the
     # quiescence contract remains the caller's (see module docstring).
     try:
-        lock_fd = os.open(
-            _lock(path, scratch_dir), os.O_CREAT | os.O_EXCL | os.O_WRONLY
-        )
+        lock_fd = os.open(_lock(path), os.O_CREAT | os.O_EXCL | os.O_WRONLY)
     except FileExistsError:
-        shutil.rmtree(_tmp(path, scratch_dir), ignore_errors=True)
+        shutil.rmtree(_tmp(path), ignore_errors=True)
         raise RuntimeError(
-            f"{_lock(path, scratch_dir)} exists: another compaction holds "
-            "the lock (or crashed in the swap window — run "
-            "recover_compaction and remove the lock file)."
+            f"{_lock(path)} exists: another compaction holds the lock "
+            "(or crashed in the swap window — run recover_compaction "
+            "and remove the lock file)."
         )
     try:
         # quiescence check: if a writer landed anything since the first
         # stat, abort rather than delete its data in the swap
-        if parquet_file_stats(path) != (n_before, total):
-            shutil.rmtree(_tmp(path, scratch_dir), ignore_errors=True)
+        if parquet_file_stats(path) != stats:
+            shutil.rmtree(_tmp(path), ignore_errors=True)
             raise RuntimeError(
                 f"{path} changed during compaction (live writer?); aborted "
                 "without modifying the table. Quiesce the stream first."
             )
 
-        os.rename(path, _old(path, scratch_dir))
+        os.rename(path, _old(path))
         try:
-            os.rename(_tmp(path, scratch_dir), path)
+            os.rename(_tmp(path), path)
         except OSError:
             # roll back, table never missing
-            os.rename(_old(path, scratch_dir), path)
+            os.rename(_old(path), path)
             raise
-        shutil.rmtree(_old(path, scratch_dir), ignore_errors=True)
+        shutil.rmtree(_old(path), ignore_errors=True)
     finally:
         os.close(lock_fd)
-        os.unlink(_lock(path, scratch_dir))
+        os.unlink(_lock(path))
     return n_files
 
 
@@ -277,45 +183,58 @@ def compact_upsert_table(
     partition to ~target-sized files while micro-batch upserts keep
     landing (VERDICT r8 item 4 — compaction under ingest).
 
-    Safety composition:
-      * each bucket swap runs INSIDE the table's commit lock
-        (LocalFSTxnLog.table_lock) — the same lock every apply_batch
-        write holds — so a swap can never interleave with a batch's
-        read-merge-write and a committed batch can never be lost; the
-        heavy rewrite itself happens per-bucket under the lock, and
-        the lock is released between buckets, so ingest stalls are
-        bounded by ONE bucket's rewrite, not the table's.
-      * tmp/old/lock working dirs live under `<table>/_compact_scratch`
-        (outside data/): a crash can never leave a
-        `_bucket=NN._compact_old` sibling that partition discovery
-        would parse as a phantom partition.
-      * the quiescence re-check inside compact_parquet_dir is then a
-        true invariant (no writer can land under the table lock), and
-        uncommitted crashed batches are immaterial: their undo-log
-        rollback restores bucket snapshots wholesale on the next
-        apply_batch, which composes with any file layout.
+    Each bucket is one commit through the table's transaction log,
+    under its commit lock (LocalFSTxnLog.table_lock — the lock every
+    apply_batch holds, so a swap never interleaves with a batch's
+    read-merge-swap and a committed batch is never lost):
+      * rollback_incomplete runs first, as in apply_batch, so a crashed
+        write or compaction is undone before the bucket is read;
+      * the bucket is coalesced into `_staging/<key>/_bucket=NN` and
+        its row count checked unchanged;
+      * the staged bucket is swapped in by the same begin ->
+        snapshot_buckets -> rename -> commit sequence a write uses.
+        The key is fresh for every swap and never reused, because
+        rollback trusts the key's ledger marker.
+    Staging sits outside data/, so a crash never leaves a phantom
+    partition; a crash mid-swap leaves the moved bucket in `_pending/`,
+    which table open, the next write or compaction, or reclaim_stale
+    renames back.  The lock is released between buckets, so ingest
+    stalls are bounded by ONE bucket's rewrite, not the table's.
 
     On a transactional table format this whole function is the
     engine's OPTIMIZE/rewrite-data-files action; the commit-lock
     composition is what its snapshot-conflict detection provides.
     Returns {bucket_dir_name: new_file_count} for the buckets that were
-    actually REWRITTEN — already-compact buckets (compact_parquet_dir's
-    no-op early exit) are omitted."""
+    actually REWRITTEN — already-compact buckets are omitted."""
     data = table._data()
     if not os.path.isdir(data):
         return {}
-    scratch = os.path.join(table.path, "_compact_scratch")
+    log = table.txn_log
     out: dict[str, int] = {}
     for entry in sorted(os.listdir(data)):
-        p = os.path.join(data, entry)
-        if not (entry.startswith("_bucket=") and os.path.isdir(p)):
+        if not entry.startswith("_bucket="):
             continue
-        with table.txn_log.table_lock(writer_id, timeout=lock_timeout):
-            n = compact_parquet_dir(
-                table.spark, p, target_bytes, scratch_dir=scratch
+        with log.table_lock(writer_id, timeout=lock_timeout):
+            log.rollback_incomplete(data)
+            # compaction stages only under this lock, so any compaction
+            # staging found here was left by a compactor that died
+            # before its swap began
+            os.makedirs(log.staging_dir, exist_ok=True)
+            for name in os.listdir(log.staging_dir):
+                if name.startswith("compact-"):
+                    shutil.rmtree(os.path.join(log.staging_dir, name))
+            key = f"compact-{uuid.uuid4().hex}"
+            staged = os.path.join(log.staging_dir, key)
+            n = _coalesce_copy(
+                table.spark,
+                os.path.join(data, entry),
+                os.path.join(staged, entry),
+                target_bytes,
             )
-        if n:
-            out[entry] = n
+            if n:
+                log.swap(staged, data, [int(entry.split("=", 1)[1])], key)
+                log.commit(key)
+                out[entry] = n
         # yield window between buckets: the commit lock is an unfair
         # O_EXCL poll — re-acquiring the instant it is released starves
         # a waiting writer (poll interval 20 ms), and the "stalls

@@ -13,24 +13,32 @@ Design for 100 TB:
   * point lookups filter on the derivable `_bucket` value, so Catalyst
     partition-prunes to one directory.
   * exactly-once under micro-batch replay: `apply_batch` is guarded by
-    a batch-id ledger AND a per-batch undo log — before touching the
-    table it snapshots the affected buckets to `_pending/<batch>/`; a
-    crash anywhere before the applied-marker lands is rolled back from
-    the snapshot on the next call, so a redelivered batch replays
-    against the pre-batch state (no double-merge).  This replaces the
-    reference's swallow-duplicate-key-errors approach
+    a batch-id ledger AND stage-and-swap.  The merged buckets are
+    written to `_staging/<batch>/`, outside the live table; then, under
+    the undo log, each live bucket they replace is renamed into
+    `_pending/<batch>/`, each staged bucket is renamed into `data/`,
+    and the applied-marker lands.  A crash anywhere before the marker
+    is undone on the next call by renaming the moved buckets back, so
+    a redelivered batch replays against the pre-batch state (no
+    double-merge).  Renames are O(1) per bucket: nothing is copied.
+    This replaces the reference's swallow-duplicate-key-errors approach
     (NyTaxiYellowTripStreaming.scala:298-313).
   * one merge-and-write sequence (`_merge_and_write`) serves both
     entry points: `upsert()` runs it bare, `apply_batch` runs it under
     the batch claim and commit lock with the undo log bracketing the
-    write.  One bucket collect of the batch prunes the current-read and
+    swap.  One bucket collect of the batch prunes the current-read and
     tests for emptiness (empty -> no table, no marker); one
-    last-write-wins dedup serves fresh and existing tables; one check
-    refuses a merge_fn whose keys leave the batch's buckets.
+    last-write-wins dedup serves fresh and existing tables; the staged
+    directory's `_bucket=NN` listing is the output's bucket list, so
+    refusing a merge_fn whose keys leave the batch's buckets costs no
+    Spark job.
+  * compaction (compact.py) swaps each compacted bucket through the
+    same log, so one recovery path, `rollback_incomplete`, serves
+    writes and compaction alike.
 
 Filesystem scope: all ledger/undo bookkeeping lives behind the
 LocalFSTxnLog interface (is_applied/mark_applied, begin/
-snapshot_buckets/commit, rollback_incomplete) — driver-local
+snapshot_buckets/swap/commit, rollback_incomplete) — driver-local
 filesystem operations, correct for the local/NFS paths of this
 environment.  On an object store (s3a://...) slot a transactional
 table format in its place; LocalFSTxnLog's docstring maps each method
@@ -51,6 +59,7 @@ import contextlib
 import os
 import shutil
 import time
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -59,7 +68,7 @@ from pyspark.sql import functions as F
 
 class LocalFSTxnLog:
     """The upsert table's transaction log: an applied-batch ledger plus
-    a per-batch undo (bucket snapshot) log, as driver-local filesystem
+    a per-batch undo log of bucket renames, as driver-local filesystem
     operations.  This class is the ONLY place UpsertTable touches the
     filesystem outside DataFrame reads/writes, so swapping the backend
     swaps the consistency story without touching merge logic.
@@ -68,25 +77,31 @@ class LocalFSTxnLog:
       * is_applied/mark_applied  -> Delta's idempotent-write txn action
         (`txnAppId`/`txnVersion`) or an Iceberg snapshot summary
         property: commit metadata, atomic with the data commit.
-      * snapshot_buckets + rollback_incomplete -> unnecessary: the
-        format's snapshot isolation means a crashed write simply never
-        commits, and replay starts from the last committed snapshot
-        (what the undo log reconstructs by hand on plain parquet).
-      * dynamic partition overwrite -> `replaceWhere` (Delta) /
-        overwrite-by-filter (Iceberg), committed atomically.
+      * the buckets staged under `_staging/<key>/` -> the uncommitted
+        data files of a commit: written first, invisible to readers
+        until the commit references them.
+      * swap (the staged-bucket renames) -> the commit itself,
+        `replaceWhere` (Delta) / overwrite-by-filter (Iceberg).
+      * snapshot_buckets + rollback_incomplete -> rename-based undo,
+        unnecessary there: the format's snapshot isolation means a
+        crashed write simply never commits, and replay starts from the
+        last committed snapshot (what the undo log reconstructs by
+        hand on plain parquet).
     On a local/NFS filesystem this implementation is correct as-is;
     on s3a:// it is not (rename/list consistency), use a table format.
 
-    Protocol per batch key (see UpsertTable._merge_and_write):
-      begin(key) -> [record_fresh_table | snapshot_buckets] ->
-      <table write> -> commit(key); rollback_incomplete() at entry
-      undoes any batch that began but never committed.
+    Protocol per key (UpsertTable._merge_and_write, compact.py):
+      <stage into _staging/<key>/> -> begin(key) ->
+      [record_fresh_table | snapshot_buckets + staged-bucket renames]
+      -> commit(key); rollback_incomplete() at entry undoes any key
+      that began but never committed.
     """
 
     def __init__(self, root: str):
         self.root = root
         self.ledger_dir = os.path.join(root, "_applied_batches")
         self.pending_dir = os.path.join(root, "_pending")
+        self.staging_dir = os.path.join(root, "_staging")
         self.intent_dir = os.path.join(root, "_intents")
         self.lock_path = os.path.join(root, "_commit_lock")
 
@@ -102,16 +117,23 @@ class LocalFSTxnLog:
             f.write("")
         os.rename(tmp, os.path.join(self.ledger_dir, key))
 
-    # -- per-batch undo log ------------------------------------------
+    # -- per-key undo log --------------------------------------------
 
     def _pdir(self, key: str) -> str:
         return os.path.join(self.pending_dir, key)
 
+    def pending(self) -> list[str]:
+        """Keys whose swap began and has not finished committing."""
+        try:
+            return os.listdir(self.pending_dir)
+        except FileNotFoundError:
+            return []
+
     def begin(self, key: str) -> None:
-        """Open a fresh undo entry for the batch (discarding any stale
-        attempt's leftovers)."""
-        shutil.rmtree(self._pdir(key), ignore_errors=True)
-        os.makedirs(self._pdir(key), exist_ok=True)
+        """Open the key's undo entry.  A leftover entry would hold the
+        only copy of live buckets, so it is never discarded here:
+        rollback_incomplete resolves it first."""
+        os.makedirs(self._pdir(key))
 
     def record_fresh_table(self, key: str) -> None:
         """The batch is about to CREATE the table; undo = drop it."""
@@ -120,18 +142,35 @@ class LocalFSTxnLog:
     def snapshot_buckets(
         self, key: str, data_dir: str, buckets: list
     ) -> None:
-        """Copy the affected bucket partitions into the undo entry
-        (absent buckets are recorded so rollback can delete ones the
-        write creates), then seal with the `_snapshot_complete`
-        sentinel — only a sealed snapshot may ever be restored."""
+        """Move each live bucket the swap replaces into the undo entry
+        (one rename, nothing copied), or record `_absent_bucket=NN` for
+        one the swap creates.  Every bucket in the entry has left the
+        live table, so rollback always restores it."""
         pdir = self._pdir(key)
         for b in buckets:
-            src = os.path.join(data_dir, f"_bucket={b}")
-            if os.path.isdir(src):
-                shutil.copytree(src, os.path.join(pdir, f"_bucket={b}"))
+            live = os.path.join(data_dir, f"_bucket={b}")
+            if os.path.isdir(live):
+                os.rename(live, os.path.join(pdir, f"_bucket={b}"))
             else:
                 open(os.path.join(pdir, f"_absent_bucket={b}"), "w").close()
-        open(os.path.join(pdir, "_snapshot_complete"), "w").close()
+
+    def swap(
+        self, staged: str, data_dir: str, buckets: list, key: str | None
+    ) -> None:
+        """Rename each staged `_bucket=NN` dir into data_dir, then drop
+        the staging dir.  With a key the renames are bracketed by the
+        undo log (begin -> snapshot_buckets -> renames; the caller
+        commits).  Without one (upsert()) a live bucket is deleted just
+        before its replacement lands, as a dynamic partition overwrite
+        does: no undo."""
+        if key is not None:
+            self.begin(key)
+            self.snapshot_buckets(key, data_dir, buckets)
+        for b in buckets:
+            live = os.path.join(data_dir, f"_bucket={b}")
+            shutil.rmtree(live, ignore_errors=True)  # keyed: already gone
+            os.rename(os.path.join(staged, f"_bucket={b}"), live)
+        shutil.rmtree(staged, ignore_errors=True)
 
     def commit(self, key: str) -> None:
         """Applied-marker first, then drop the undo entry: a crash
@@ -140,47 +179,33 @@ class LocalFSTxnLog:
         shutil.rmtree(self._pdir(key), ignore_errors=True)
 
     def rollback_incomplete(self, data_dir: str) -> None:
-        """Undo any batch that wrote data but never committed (crash
-        window): restore the snapshotted buckets.
+        """Undo every key that began but never committed (crash window)
+        and drop its undo entry and staging dir.
 
-        A snapshot is only trusted if it carries the
-        `_snapshot_complete` sentinel, written after the copy loop and
-        before the table write begins.  A pending dir without it means
-        the crash hit mid-snapshot — the live table was never touched,
-        and restoring the partial copy would LOSE rows — so it is
-        simply discarded."""
-        if not os.path.isdir(self.pending_dir):
-            return
-        for batch in os.listdir(self.pending_dir):
-            pdir = os.path.join(self.pending_dir, batch)
-            if self.is_applied(batch):
-                shutil.rmtree(pdir, ignore_errors=True)
-                continue
-            if os.path.exists(os.path.join(pdir, "_fresh_table")):
-                # the crashed batch CREATED the table; undo = drop it
+        A `_bucket=NN` in the entry was moved out of the live table, so
+        it is renamed back over whatever the swap put in its place; an
+        `_absent_bucket=NN` means the swap created that bucket, so it
+        is deleted (else its half-applied rows would be double-merged);
+        `_fresh_table` means the write created the table, so it is
+        dropped.  A crash mid-rollback leaves the buckets not yet
+        restored in the entry for the next call."""
+        for key in self.pending():
+            pdir = self._pdir(key)
+            if self.is_applied(key):
+                pass  # committed: only the cleanup below was lost
+            elif os.path.exists(os.path.join(pdir, "_fresh_table")):
                 shutil.rmtree(data_dir, ignore_errors=True)
-            elif not os.path.exists(
-                os.path.join(pdir, "_snapshot_complete")
-            ):
-                pass  # partial snapshot, table untouched: discard only
             else:
                 for entry in os.listdir(pdir):
-                    if entry == "_snapshot_complete":
-                        continue
-                    if entry.startswith("_absent_bucket="):
-                        # the crashed write CREATED this bucket; undo =
-                        # remove it (snapshot-restore alone would leave
-                        # its half-applied rows to be double-merged)
-                        b = entry.split("=", 1)[1]
-                        shutil.rmtree(
-                            os.path.join(data_dir, f"_bucket={b}"),
-                            ignore_errors=True,
-                        )
-                        continue
-                    dst = os.path.join(data_dir, entry)
-                    shutil.rmtree(dst, ignore_errors=True)
-                    shutil.move(os.path.join(pdir, entry), dst)
+                    b = entry.split("=", 1)[1]
+                    live = os.path.join(data_dir, f"_bucket={b}")
+                    shutil.rmtree(live, ignore_errors=True)
+                    if entry.startswith("_bucket="):
+                        os.rename(os.path.join(pdir, entry), live)
             shutil.rmtree(pdir, ignore_errors=True)
+            shutil.rmtree(
+                os.path.join(self.staging_dir, key), ignore_errors=True
+            )
 
     # -- multi-writer protocol ---------------------------------------
     #
@@ -192,7 +217,7 @@ class LocalFSTxnLog:
     #     claim's release (winner rolled back; retry).  This is what
     #     makes replay-racing writers unable to double-apply a batch.
     #   * table-level COMMIT LOCK: O_EXCL creation of _commit_lock
-    #     around the read-merge-snapshot-write-commit critical section,
+    #     around the read-merge-stage-swap-commit critical section,
     #     so two writers applying DIFFERENT batches cannot interleave a
     #     bucket read with the other's bucket overwrite (plain parquet
     #     has no snapshot isolation to hide behind).  Delta replaces
@@ -267,9 +292,9 @@ class LocalFSTxnLog:
     def reclaim_stale(self, data_dir: str, max_age_sec: float) -> None:
         """Operator/supervisor recovery from a crashed writer: break
         the commit lock and any uncommitted claims older than
-        max_age_sec, then roll back the half-applied attempt from the
-        undo log.  NEVER called automatically — a slow-but-alive writer
-        must not be usurped."""
+        max_age_sec, then roll back the half-applied swap (a writer's
+        or a compactor's) from the undo log.  NEVER called
+        automatically — a slow-but-alive writer must not be usurped."""
         now = time.time()
 
         def _stale(p: str) -> bool:
@@ -287,25 +312,13 @@ class LocalFSTxnLog:
                 if self.is_applied(key) or _stale(p):
                     with contextlib.suppress(FileNotFoundError):
                         os.unlink(p)
-        # a compactor that died between its swap renames left the
-        # bucket missing from data/ with the backup in scratch —
-        # restore BEFORE rollback so no later writer sees an
-        # empty-looking bucket and rewrites it batch-only (ADVICE r9)
-        from ingestprocessstoreinnrt_spark.streaming.compact import (
-            recover_compaction_scratch,
-        )
-
-        recover_compaction_scratch(
-            data_dir,
-            os.path.join(self.root, "_compact_scratch"),
-            break_locks=True,  # operator declared all writers dead
-        )
         self.rollback_incomplete(data_dir)
 
 
-# How long table open waits for a live compactor to clear its swap
-# window (two renames — milliseconds) before declaring a locked-and-
-# missing bucket a crash and raising toward reclaim_stale.
+# How long table open waits for the commit lock when it finds a swap
+# in _pending/: a live writer's or compactor's swap window is a few
+# renames (milliseconds); past this the holder is taken to be dead and
+# open raises toward reclaim_stale.
 OPEN_RECOVERY_GRACE_SEC = 2.0
 
 
@@ -316,7 +329,6 @@ class UpsertTable:
         path: str,
         key_cols: list[str],
         num_buckets: int = 16,
-        _open_grace_sec: float | None = None,
     ):
         self.spark = spark
         self.path = path
@@ -330,74 +342,34 @@ class UpsertTable:
         # layout aliases (tests and external tooling inspect these)
         self._ledger = self.txn_log.ledger_dir
         self._pending = self.txn_log.pending_dir
-        # table-open recovery (ADVICE r9/r10/r11): restore any bucket a
-        # crashed compactor left stranded in _compact_scratch before a
-        # writer can mistake it for empty — without racing a LIVE
-        # compactor's swap, and without letting READERS silently see
-        # the table minus a bucket a DEAD compactor stranded.  One
-        # isdir stat when no compaction ever ran.
-        self._open_recover(grace_sec=_open_grace_sec)
+        self._open_recover()
 
-    def _open_recover(self, grace_sec: float | None = None) -> None:
-        """Crash recovery at table open, safe against a live compactor.
-
-        Every documented compaction of this table swaps buckets INSIDE
-        the table commit lock (compact_upsert_table), so holding that
-        lock here proves no compactor is mid-swap:
-          * lock acquired -> restore everything recover_compaction_scratch
-            finds, including buckets whose per-bucket ._compact_lock is
-            present (their holder provably died: a live one would be
-            holding the commit lock we now hold).  break_locks clears
-            the dead holder's bucket locks so the next compaction isn't
-            wedged.
-          * lock busy -> restore only unlocked leftovers (skip_locked,
-            ADVICE r10 — never race a live swap), then verify no bucket
-            is left both locked and MISSING from data/.  That state is
-            a live compactor's millisecond swap window or a crash; poll
-            for `grace_sec`, and if it persists raise toward
-            reclaim_stale rather than let read-only consumers silently
-            serve a table minus a whole bucket (ADVICE r11 medium —
-            readers take no lock, so open is their only checkpoint).
-        """
-        from ingestprocessstoreinnrt_spark.streaming.compact import (
-            recover_compaction_scratch,
-            stranded_locked_partitions,
-        )
-
-        if grace_sec is None:
-            grace_sec = OPEN_RECOVERY_GRACE_SEC
-        scratch = os.path.join(self.path, "_compact_scratch")
-        if not os.path.isdir(scratch):
-            # fresh table / never compacted: nothing to recover, and
-            # the table root may not even exist yet — taking the
-            # commit lock here would os.open into a missing directory
+    def _open_recover(self) -> None:
+        """Crash recovery at table open.  Readers take no lock, so open
+        is their only checkpoint: a key in _pending/ is a swap that
+        began and never committed, and the live table may be missing
+        the buckets it moved out.  Roll it back under the commit lock.
+        If the lock stays held past OPEN_RECOVERY_GRACE_SEC while the
+        swap is still pending, its holder crashed (or stalled)
+        mid-swap: raise toward reclaim_stale and leave the crash state
+        untouched rather than serve a table minus a bucket.  One
+        listing when nothing is pending."""
+        seen = self.txn_log.pending()
+        if not seen:
             return
         try:
-            with self.txn_log.table_lock("table-open-recovery", timeout=0.0):
-                recover_compaction_scratch(
-                    self._data(), scratch, break_locks=True
-                )
-            return
-        except TimeoutError:
-            pass  # commit lock held: live writer/compactor, or a crash
-        recover_compaction_scratch(self._data(), scratch, skip_locked=True)
-        deadline = time.monotonic() + grace_sec
-        while True:
-            stranded = stranded_locked_partitions(self._data(), scratch)
-            if not stranded:
-                return
-            if time.monotonic() > deadline:
-                raise RuntimeError(
-                    f"table {self.path}: partition(s) {stranded} are "
-                    "missing from data/ with a compaction backup and "
-                    "bucket lock still in _compact_scratch, and the "
-                    "table commit lock is held (holder: "
-                    f"{self.txn_log._lock_holder()!r}).  A compactor "
-                    "crashed (or stalled) mid-swap; reading now would "
-                    "silently drop those buckets.  If the holder is "
-                    "dead, run txn_log.reclaim_stale() to restore."
-                )
-            time.sleep(0.05)
+            with self.txn_log.table_lock(
+                "table-open-recovery", timeout=OPEN_RECOVERY_GRACE_SEC
+            ):
+                self.txn_log.rollback_incomplete(self._data())
+        except TimeoutError as exc:
+            if not set(seen) & set(self.txn_log.pending()):
+                return  # the swaps seen at entry committed: live holders
+            raise RuntimeError(
+                f"table {self.path}: swap(s) {sorted(seen)} began and "
+                "never committed, so buckets may be missing from data/, "
+                f"and the {exc}"
+            ) from None
 
     # -- storage ------------------------------------------------------------
 
@@ -411,15 +383,11 @@ class UpsertTable:
         return self.spark.read.parquet(self._data()).drop("_bucket")
 
     def _affected_buckets(self, keys_df: DataFrame) -> list[int]:
-        # reuse a materialized _bucket column when the frame carries one
-        # (same deterministic derivation, no hash recompute)
-        col = (
-            F.col("_bucket")
-            if "_bucket" in keys_df.columns
-            else self._bucket_col
-        )
         return [
-            r[0] for r in keys_df.select(col.alias("b")).distinct().collect()
+            r[0]
+            for r in keys_df.select(self._bucket_col.alias("b"))
+            .distinct()
+            .collect()
         ]
 
     def read_bucket_pruned(self, buckets: list[int]) -> DataFrame:
@@ -430,7 +398,12 @@ class UpsertTable:
 
     def init(self, df: DataFrame) -> None:
         """Create/replace the whole table from a snapshot (bootstrap,
-        J1).  Static overwrite on the directory — replaces every bucket
+        J1)."""
+        self._write_buckets(df, self._data())
+
+    def _write_buckets(self, df: DataFrame, path: str) -> None:
+        """Hash-bucket df into `_bucket=NN` dirs under path.  Static
+        overwrite on the directory — replaces every bucket there
         regardless of session conf."""
         (
             df.withColumn("_bucket", self._bucket_col)
@@ -438,7 +411,7 @@ class UpsertTable:
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "static")
             .partitionBy("_bucket")
-            .parquet(self._data())
+            .parquet(path)
         )
 
     # -- upsert -------------------------------------------------------------
@@ -490,17 +463,17 @@ class UpsertTable:
     ) -> None:
         """The one merge-and-write sequence behind upsert() and
         apply_batch.  With a ledger `key` the write is bracketed by the
-        undo log: begin -> record_fresh_table | snapshot_buckets ->
-        write -> commit."""
+        undo log: a fresh table is begin -> record_fresh_table -> write
+        -> commit; an existing one stages the merged buckets, then
+        swaps them in (begin -> snapshot_buckets -> renames) -> commit."""
         new_rows = new_rows.cache()
         try:
             # the batch's bucket list is collected ONCE: it prunes the
-            # current-read, is the merge_fn safety check's reference and
-            # the undo snapshot's list — each collect is a Spark job, the
-            # dominant fixed cost of a small micro-batch.  It doubles as
-            # the emptiness test: an empty batch changes nothing and
-            # leaves no table and no ledger marker (a replay of it is
-            # just as empty)
+            # current-read and is the merge_fn safety check's reference
+            # — each collect is a Spark job, the dominant fixed cost of
+            # a small micro-batch.  It doubles as the emptiness test: an
+            # empty batch changes nothing and leaves no table and no
+            # ledger marker (a replay of it is just as empty)
             buckets = self._affected_buckets(new_rows)
             if not buckets:
                 return
@@ -523,45 +496,34 @@ class UpsertTable:
                     if merge_fn is None
                     else merge_fn(current, new_rows)
                 )
-                # bucket-assign + repartition + materialize: the
-                # checkpoint breaks the read-overwrite hazard (`merged`
-                # reads the partitions the write replaces) and fixes the
-                # final layout, so the write itself is shuffle-free
-                merged = (
-                    merged.withColumn("_bucket", self._bucket_col)
-                    .repartition("_bucket")
-                    .localCheckpoint(eager=True)
+                # staged outside data/, so the write never overwrites
+                # the buckets `merged` reads; upsert() has no key, so
+                # its staging name is unique per attempt
+                staged = os.path.join(
+                    self.txn_log.staging_dir,
+                    key or f"upsert-{uuid.uuid4().hex}",
                 )
-                if merge_fn is not None:
-                    # a merge_fn key hashing to a bucket the batch lacks
-                    # would dynamic-overwrite a bucket that was never
-                    # read, dropping its rows.  LWW keeps exactly the
-                    # batch's keys, so it writes exactly `buckets` and
-                    # needs neither this check nor a merged collect
-                    extra = set(self._affected_buckets(merged)) - set(buckets)
-                    if extra:
-                        raise ValueError(
-                            "merge_fn emitted keys hashing to buckets "
-                            f"{sorted(extra)} outside the batch's buckets; "
-                            "those buckets were not read, so writing would "
-                            "drop their existing rows. merge_fn must only "
-                            "return keys drawn from the batch or the "
-                            "current subset it was given."
-                        )
-                if key is not None:
-                    # the write replaces a subset of `buckets` (checked
-                    # above), so snapshotting them covers every bucket
-                    # it touches
-                    self.txn_log.begin(key)
-                    self.txn_log.snapshot_buckets(key, self._data(), buckets)
-                # per-write dynamic partition overwrite: only the buckets
-                # present in `merged` are replaced, session conf untouched
-                (
-                    merged.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("_bucket")
-                    .parquet(self._data())
-                )
+                self._write_buckets(merged, staged)
+                out = [
+                    int(e.split("=", 1)[1])
+                    for e in os.listdir(staged)
+                    if e.startswith("_bucket=")
+                ]
+                # a merge_fn key hashing to a bucket the batch lacks
+                # would replace a bucket that was never read, dropping
+                # its rows (LWW keeps exactly the batch's keys)
+                extra = set(out) - set(buckets)
+                if extra:
+                    shutil.rmtree(staged, ignore_errors=True)
+                    raise ValueError(
+                        "merge_fn emitted keys hashing to buckets "
+                        f"{sorted(extra)} outside the batch's buckets; "
+                        "those buckets were not read, so writing would "
+                        "drop their existing rows. merge_fn must only "
+                        "return keys drawn from the batch or the "
+                        "current subset it was given."
+                    )
+                self.txn_log.swap(staged, self._data(), out, key)
             if key is not None:
                 self.txn_log.commit(key)
         finally:
@@ -598,9 +560,9 @@ class UpsertTable:
         foreachBatch contract for exactly-once delivery to this table.
         Runs upsert()'s merge-and-write sequence, with the same merge_fn
         contract (never called with a None current).
-        Crash-safe: affected buckets are snapshotted to an undo log
-        before the write; a replay after a crash first rolls back the
-        half-applied attempt, so the merge never double-counts.
+        Crash-safe: the merged buckets are staged, then swapped in by
+        renames under the undo log; a replay after a crash first renames
+        the half-swapped buckets back, so the merge never double-counts.
         Multi-writer-safe: an atomic per-batch claim makes replay-racing
         writers apply each batch exactly once, and a table-level commit
         lock serializes the read-merge-write critical section across
@@ -630,8 +592,8 @@ class UpsertTable:
                 return  # claimed a batch a prior owner already landed
             with self.txn_log.table_lock(writer_id, timeout=claim_timeout):
                 # rollback of crashed attempts must itself run inside the
-                # commit lock: restoring bucket snapshots while another
-                # writer overwrites those buckets would corrupt the table
+                # commit lock: renaming buckets back while another writer
+                # swaps those buckets would corrupt the table
                 self.txn_log.rollback_incomplete(self._data())
                 self._merge_and_write(new_rows, merge_fn, key)
         finally:

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from ingestprocessstoreinnrt_spark.sources import csv_clean, generators
 from ingestprocessstoreinnrt_spark.streaming import compact
 
@@ -282,12 +284,42 @@ def test_compaction_under_active_upserts_loses_nothing(spark, tmp_path):
     ), entries
 
 
+def _tree(path):
+    """Every dir and file under path, with file bytes: a crash state
+    that recovery must leave byte-identical."""
+    import os
+
+    out = {}
+    for root, dirs, files in os.walk(path):
+        for d in dirs:
+            out[os.path.relpath(os.path.join(root, d), path)] = None
+        for f in files:
+            with open(os.path.join(root, f), "rb") as fh:
+                out[os.path.relpath(os.path.join(root, f), path)] = fh.read()
+    return out
+
+
+def _hold_lock(table, writer_id):
+    """The commit lock file as a holder process (live, or killed while
+    holding it) leaves it."""
+    with open(table.txn_log.lock_path, "w") as f:
+        f.write(writer_id)
+
+
+def _strand_bucket(table, key):
+    """A compactor killed mid-swap: bucket 0 renamed out of data/ into
+    the undo entry, its compacted replacement not yet renamed in."""
+    table.txn_log.begin(key)
+    table.txn_log.snapshot_buckets(key, table._data(), [0])
+
+
 def test_compactor_crash_mid_swap_recovered_at_table_open(spark, tmp_path):
-    """ADVICE r9 (medium): a compactor that dies between the two swap
-    renames leaves the bucket missing from data/ with its backup in
-    _compact_scratch — committed rows MUST NOT be lost.  Both recovery
-    hooks restore it: opening the table (UpsertTable.__init__) and
-    txn_log.reclaim_stale (the documented stale-lock recovery path)."""
+    """ADVICE r9 (medium): a compactor that dies between its swap-out
+    and swap-in renames leaves the bucket missing from data/ with the
+    live copy in _pending/<key> — committed rows MUST NOT be lost.
+    Both recovery hooks restore it: txn_log.reclaim_stale (the
+    documented stale-lock recovery path) and opening the table
+    (UpsertTable.__init__)."""
     import os
 
     from ingestprocessstoreinnrt_spark.streaming.upsert import UpsertTable
@@ -298,43 +330,42 @@ def test_compactor_crash_mid_swap_recovered_at_table_open(spark, tmp_path):
         spark.range(100).selectExpr("id AS k", "id * 2 AS payload")
     )
     before = {(r.k, r.payload) for r in table.read().collect()}
-
-    # simulate the crash window: bucket gone, backup stranded in
-    # scratch, commit lock + compact lock left behind (the compactor
-    # held both when it died)
-    scratch = os.path.join(path, "_compact_scratch")
-    os.makedirs(scratch, exist_ok=True)
     bucket = os.path.join(table._data(), "_bucket=0")
-    os.rename(bucket, os.path.join(scratch, "_bucket=0._compact_old"))
-    open(os.path.join(scratch, "_bucket=0._compact_lock"), "w").close()
-    open(table.txn_log.lock_path, "w").close()
+
+    # the compactor held the commit lock when it died
+    _strand_bucket(table, "compact-dead")
+    _hold_lock(table, "compactor")
     assert not os.path.exists(bucket)
 
-    # hook 1: reclaim_stale restores the bucket and breaks both the
-    # stale commit lock and the dead compactor's bucket lock
+    # hook 1: reclaim_stale breaks the stale commit lock and renames
+    # the bucket back
     table.txn_log.reclaim_stale(table._data(), max_age_sec=0.0)
     assert os.path.isdir(bucket)
     assert {(r.k, r.payload) for r in table.read().collect()} == before
-    assert not os.path.exists(
-        os.path.join(scratch, "_bucket=0._compact_lock")
-    )
+    assert not os.path.exists(table.txn_log.lock_path)
+    assert not table.txn_log.pending()
 
-    # hook 2: re-stage the crash, then a fresh open of the table
-    # (new process after the crash) restores it too
-    os.rename(bucket, os.path.join(scratch, "_bucket=0._compact_old"))
+    # hook 2: re-stage the crash, then a fresh open of the table (new
+    # process after the crash, lock free) restores it too
+    _strand_bucket(table, "compact-dead2")
     reopened = UpsertTable(spark, path, ["k"], num_buckets=2)
     assert os.path.isdir(bucket)
     assert {(r.k, r.payload) for r in reopened.read().collect()} == before
+    assert not table.txn_log.pending()
 
-    # post-swap crash (cleanup lost, bucket intact): the stale backup
-    # is dropped, the live bucket untouched
-    import shutil
-
-    shutil.copytree(bucket, os.path.join(scratch, "_bucket=0._compact_old"))
-    UpsertTable(spark, path, ["k"], num_buckets=2)
-    assert not os.path.exists(
-        os.path.join(scratch, "_bucket=0._compact_old")
+    # post-swap crash (marker landed, undo-entry cleanup lost): the
+    # stale entry is dropped, the swapped-in bucket untouched
+    staged = os.path.join(table.txn_log.staging_dir, "compact-done")
+    spark.read.parquet(bucket).coalesce(1).write.parquet(
+        os.path.join(staged, "_bucket=0")
     )
+    table.txn_log.swap(staged, table._data(), [0], "compact-done")
+    table.txn_log.mark_applied("compact-done")
+    assert table.txn_log.pending() == ["compact-done"]
+    swapped_in = sorted(os.listdir(bucket))
+    UpsertTable(spark, path, ["k"], num_buckets=2)
+    assert not table.txn_log.pending()
+    assert sorted(os.listdir(bucket)) == swapped_in
     assert {(r.k, r.payload) for r in table.read().collect()} == before
 
     # and the next upsert sees the full table (no batch-only rewrite)
@@ -344,43 +375,72 @@ def test_compactor_crash_mid_swap_recovered_at_table_open(spark, tmp_path):
     assert table.read().count() == 105
 
 
-def test_table_open_raises_on_crashed_midswap_compactor(spark, tmp_path):
-    """ADVICE r11 (medium): a compactor that died BETWEEN its two swap
-    renames leaves the bucket missing from data/ with backup + bucket
-    lock in scratch and the table commit lock held.  Readers take no
-    lock, so silently skipping the bucket at open (the r10 behavior)
-    served them a table minus a whole bucket.  Open must neither
-    restore (could race a live holder) nor proceed silently: after the
-    grace poll it raises toward reclaim_stale, leaving the crash state
-    byte-identical for recovery."""
+def test_table_open_raises_on_crashed_midswap_compactor(
+    spark, tmp_path, monkeypatch
+):
+    """ADVICE r11 (medium): a compactor that died BETWEEN its swap-out
+    and swap-in renames leaves the bucket missing from data/ with the
+    live copy in _pending/<key> and the table commit lock held.
+    Readers take no lock, so open is their only checkpoint: it must
+    neither roll back under a holder that may be alive nor proceed
+    silently.  Past the grace period it raises toward reclaim_stale,
+    leaving the crash state byte-identical for recovery."""
+    _open_raises_then_reclaim_restores(
+        spark, tmp_path, monkeypatch, "compactor"
+    )
+
+
+def test_table_open_raises_on_apply_batch_killed_mid_swap(
+    spark, tmp_path, monkeypatch
+):
+    """The same crash window for a write: apply_batch killed after its
+    swap-out renames, before its swap-in, holding the commit lock."""
+    _open_raises_then_reclaim_restores(
+        spark, tmp_path, monkeypatch, "apply_batch"
+    )
+
+
+def _open_raises_then_reclaim_restores(spark, tmp_path, monkeypatch, killed):
     import os
 
-    import pytest
-
+    from ingestprocessstoreinnrt_spark.streaming import upsert
     from ingestprocessstoreinnrt_spark.streaming.upsert import UpsertTable
 
     path = str(tmp_path / "t")
     table = UpsertTable(spark, path, ["k"], num_buckets=2)
     table.init(spark.range(100).selectExpr("id AS k", "id * 2 AS payload"))
     before = {(r.k, r.payload) for r in table.read().collect()}
+    batch = spark.range(90, 110).selectExpr("id AS k", "-1 AS payload")
 
-    # compactor died mid-swap: bucket renamed away, bucket lock +
-    # commit lock left behind
-    scratch = os.path.join(path, "_compact_scratch")
-    os.makedirs(scratch, exist_ok=True)
-    bucket = os.path.join(table._data(), "_bucket=0")
-    old = os.path.join(scratch, "_bucket=0._compact_old")
-    lock = os.path.join(scratch, "_bucket=0._compact_lock")
-    os.rename(bucket, old)
-    open(lock, "w").close()
-    open(table.txn_log.lock_path, "w").close()
+    if killed == "compactor":
+        _strand_bucket(table, "compact-dead")
+    else:
+        class Killed(BaseException):
+            pass
+
+        dead = UpsertTable(spark, path, ["k"], num_buckets=2)
+        swap_out = dead.txn_log.snapshot_buckets
+
+        def die_after_swap_out(*args):
+            swap_out(*args)
+            raise Killed
+
+        dead.txn_log.snapshot_buckets = die_after_swap_out
+        with pytest.raises(Killed):
+            dead.apply_batch(1, batch)
+    _hold_lock(table, f"dead-{killed}")
+    missing = [
+        b for b in ("_bucket=0", "_bucket=1")
+        if not os.path.exists(os.path.join(table._data(), b))
+    ]
+    assert missing
+    crash_state = _tree(path)
 
     # fresh open: refuses to serve partial data, leaves the state alone
+    monkeypatch.setattr(upsert, "OPEN_RECOVERY_GRACE_SEC", 0.1)
     with pytest.raises(RuntimeError, match="reclaim_stale"):
-        UpsertTable(spark, path, ["k"], num_buckets=2, _open_grace_sec=0.1)
-    assert not os.path.exists(bucket)
-    assert os.path.isdir(old)
-    assert os.path.exists(lock)
+        UpsertTable(spark, path, ["k"], num_buckets=2)
+    assert _tree(path) == crash_state
 
     # a writer cannot slip a batch-only rewrite in either: the dead
     # holder's commit lock fences it toward reclaim_stale
@@ -390,18 +450,22 @@ def test_table_open_raises_on_crashed_midswap_compactor(spark, tmp_path):
 
     # the documented recovery path restores everything, and open works
     table.txn_log.reclaim_stale(table._data(), max_age_sec=0.0)
-    assert os.path.isdir(bucket)
-    assert not os.path.exists(lock)
+    assert not table.txn_log.pending()
+    assert not os.path.exists(table.txn_log.lock_path)
     reopened = UpsertTable(spark, path, ["k"], num_buckets=2)
     assert {(r.k, r.payload) for r in reopened.read().collect()} == before
+    if killed == "apply_batch":
+        reopened.apply_batch(1, batch)
+        assert reopened.read().count() == 110
+        assert reopened.read().filter("payload = -1").count() == 20
 
 
 def test_table_open_waits_out_live_compactor_swap(spark, tmp_path):
     """VERDICT r11 item 2: with a LIVE compactor holding the commit
     lock mid-swap (simulated by a second thread that completes the
-    swap after a beat), table open must neither restore the bucket out
-    from under it nor strand anything — it polls the swap window
-    closed and opens clean."""
+    swap after a beat), table open must neither roll the swap back out
+    from under it nor strand anything — it waits for the lock and
+    opens clean."""
     import os
     import threading
     import time as _t
@@ -413,31 +477,74 @@ def test_table_open_waits_out_live_compactor_swap(spark, tmp_path):
     table.init(spark.range(100).selectExpr("id AS k", "id * 2 AS payload"))
     before = {(r.k, r.payload) for r in table.read().collect()}
 
-    scratch = os.path.join(path, "_compact_scratch")
-    os.makedirs(scratch, exist_ok=True)
+    log = table.txn_log
     bucket = os.path.join(table._data(), "_bucket=0")
-    old = os.path.join(scratch, "_bucket=0._compact_old")
-    lock = os.path.join(scratch, "_bucket=0._compact_lock")
-    # live compactor inside its swap window, holding both locks
-    os.rename(bucket, old)
-    open(lock, "w").close()
-    open(table.txn_log.lock_path, "w").close()
+    staged = os.path.join(log.staging_dir, "compact-live")
+    spark.read.parquet(bucket).coalesce(1).write.parquet(
+        os.path.join(staged, "_bucket=0")
+    )
+    compacted = sorted(os.listdir(os.path.join(staged, "_bucket=0")))
+    # live compactor inside its swap window, holding the commit lock
+    _hold_lock(table, "compactor")
+    _strand_bucket(table, "compact-live")
 
     def finish_swap():
         _t.sleep(0.3)
-        os.rename(old, bucket)  # the compactor's rename(tmp, path)
-        os.unlink(lock)
-        os.unlink(table.txn_log.lock_path)
+        os.rename(os.path.join(staged, "_bucket=0"), bucket)  # swap-in
+        log.commit("compact-live")
+        os.unlink(log.lock_path)
 
     t = threading.Thread(target=finish_swap)
     t.start()
     try:
         reopened = UpsertTable(spark, path, ["k"], num_buckets=2)
     finally:
-        t.join()
-    # open neither restored mid-window (the swap completed untouched)
-    # nor stranded anything
-    assert os.path.isdir(bucket)
-    assert not os.path.exists(old)
-    assert not os.path.exists(lock)
+        t.join(30)
+    assert not t.is_alive()
+    # open neither rolled back mid-window (the compacted bucket is the
+    # one live) nor stranded anything
+    assert sorted(os.listdir(bucket)) == compacted
+    assert not log.pending()
+    assert not os.path.exists(log.lock_path)
+    assert {(r.k, r.payload) for r in reopened.read().collect()} == before
+
+
+def test_table_open_passes_a_swap_that_commits_under_a_busy_lock(
+    spark, tmp_path, monkeypatch
+):
+    """The swap open found pending commits while the commit lock stays
+    busy past the grace period (the next writer took it at once): the
+    table is whole, so open returns instead of raising."""
+    import os
+    import threading
+    import time as _t
+
+    from ingestprocessstoreinnrt_spark.streaming import upsert
+    from ingestprocessstoreinnrt_spark.streaming.upsert import UpsertTable
+
+    path = str(tmp_path / "t")
+    table = UpsertTable(spark, path, ["k"], num_buckets=2)
+    table.init(spark.range(100).selectExpr("id AS k", "id * 2 AS payload"))
+    before = {(r.k, r.payload) for r in table.read().collect()}
+    log = table.txn_log
+    bucket = os.path.join(table._data(), "_bucket=0")
+    _hold_lock(table, "writer-a")
+    _strand_bucket(table, "batch-a")
+
+    def finish_swap_keep_lock():
+        _t.sleep(0.2)
+        os.rename(os.path.join(log._pdir("batch-a"), "_bucket=0"), bucket)
+        log.commit("batch-a")
+        _t.sleep(1.0)  # "writer-b" holds the lock on past open's grace
+        os.unlink(log.lock_path)
+
+    monkeypatch.setattr(upsert, "OPEN_RECOVERY_GRACE_SEC", 0.5)
+    t = threading.Thread(target=finish_swap_keep_lock)
+    t.start()
+    try:
+        reopened = UpsertTable(spark, path, ["k"], num_buckets=2)
+        assert os.path.exists(log.lock_path)  # returned under the busy lock
+    finally:
+        t.join(30)
+    assert not t.is_alive()
     assert {(r.k, r.payload) for r in reopened.read().collect()} == before

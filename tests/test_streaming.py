@@ -242,10 +242,7 @@ def test_upsert_last_write_wins_and_pruning(spark, workdir):
 
 def test_apply_batch_crash_rollback(spark, workdir):
     """Crash between data-write and applied-marker must not double-count
-    on replay: the undo log restores the pre-batch buckets first."""
-    import os
-    import shutil as sh
-
+    on replay: the undo log renames the pre-batch buckets back first."""
     t = UpsertTable(spark, workdir + "/t", ["k"], num_buckets=4)
     mk = lambda rows: spark.createDataFrame(rows, ["k", "n"])  # noqa: E731
     merge = lambda cur, new: (  # additive merge: double-apply detectable
@@ -255,18 +252,22 @@ def test_apply_batch_crash_rollback(spark, workdir):
     )
     t.apply_batch(0, mk([(1, 10), (2, 20)]), merge)
 
-    # simulate the crash window for batch 1: apply, then remove the
-    # applied marker but leave the written data AND the undo snapshot
-    # (what a crash between upsert() and mark_applied() leaves behind)
-    pdir = os.path.join(t._pending, "1")
-    os.makedirs(pdir, exist_ok=True)
-    for b in t._affected_buckets(mk([(1, 1)])):
-        src = os.path.join(t._data(), f"_bucket={b}")
-        if os.path.isdir(src):
-            sh.copytree(src, os.path.join(pdir, f"_bucket={b}"))
-    open(os.path.join(pdir, "_snapshot_complete"), "w").close()
-    t.upsert(mk([(1, 1)]), merge)  # data landed...
-    # ...but no mark_applied(1): crash.  Structured Streaming replays 1:
+    # the crash window for batch 1: the swap landed the merged buckets
+    # in data/ with the pre-batch ones in the undo entry, and the
+    # writer died before commit() wrote the applied marker
+    class WriterDied(BaseException):
+        pass
+
+    def die(_key):
+        raise WriterDied
+
+    dead = UpsertTable(spark, workdir + "/t", ["k"], num_buckets=4)
+    dead.txn_log.commit = die
+    with pytest.raises(WriterDied):
+        dead.apply_batch(1, mk([(1, 1)]), merge)
+    assert {r.k: r.n for r in t.read().collect()} == {1: 11, 2: 20}
+    assert not t.already_applied(1)
+    # Structured Streaming replays 1:
     t.apply_batch(1, mk([(1, 1)]), merge)
     got = {r.k: r.n for r in t.read().collect()}
     assert got == {1: 11, 2: 20}, got  # 10+1 once, NOT 10+1+1
@@ -319,32 +320,6 @@ def test_streaming_orders_entity(spark, workdir):
     )
 
 
-def test_partial_snapshot_discarded_not_restored(spark, workdir):
-    """Crash DURING the undo-log snapshot (no _snapshot_complete
-    sentinel) means the table was never written: rollback must discard
-    the partial copy, not restore it over the intact live bucket."""
-    t = UpsertTable(spark, workdir + "/t", ["k"], num_buckets=4)
-    mk = lambda rows: spark.createDataFrame(rows, ["k", "v"])  # noqa: E731
-    t.apply_batch(0, mk([(i, f"v{i}") for i in range(20)]))
-    before = {r.k: r.v for r in t.read().collect()}
-
-    # simulate: batch 1 crashed mid-copytree — a snapshot dir exists
-    # with SOME bucket data but no sentinel
-    pdir = os.path.join(t._pending, "1")
-    os.makedirs(pdir, exist_ok=True)
-    b = t._affected_buckets(mk([(1, "x")]))[0]
-    src = os.path.join(t._data(), f"_bucket={b}")
-    shutil.copytree(src, os.path.join(pdir, f"_bucket={b}"))
-    # corrupt the copy to prove restore would lose rows if it happened
-    for f in os.listdir(os.path.join(pdir, f"_bucket={b}")):
-        os.unlink(os.path.join(pdir, f"_bucket={b}", f))
-
-    t.apply_batch(1, mk([(1, "NEW")]))
-    got = {r.k: r.v for r in t.read().collect()}
-    assert got == {**before, 1: "NEW"}
-    assert not os.path.isdir(pdir)
-
-
 def test_first_batch_in_batch_duplicate_keys_deduped(spark, workdir):
     """Table-creation path must honor the same deterministic LWW dedup
     as the merge path: one row per key even on the very first batch."""
@@ -388,11 +363,11 @@ def test_merge_fn_out_of_batch_keys_refused(spark, workdir):
 
 @pytest.mark.parametrize("use_merge_fn", [False, True], ids=["lww", "merge_fn"])
 def test_undo_snapshot_covers_every_written_bucket(spark, workdir, use_merge_fn):
-    """The undo log must snapshot every bucket the write replaces, or a
-    rollback leaves that bucket half-applied.  LWW snapshots the batch's
-    bucket list without collecting the merged output's, so pin it: the
-    snapshotted buckets are exactly the `_bucket=NN` dirs whose file
-    listing the write changed."""
+    """The undo log must move out every bucket the write replaces, or a
+    rollback leaves that bucket half-applied.  The list is the staged
+    output's `_bucket=NN` listing, so pin it: the snapshotted buckets
+    are exactly the `_bucket=NN` dirs whose file listing the write
+    changed."""
     t = UpsertTable(spark, workdir + "/t", ["k"], num_buckets=8)
     mk = lambda rows: spark.createDataFrame(rows, ["k", "n"])  # noqa: E731
     t.init(mk([(i, i) for i in range(64)]))
