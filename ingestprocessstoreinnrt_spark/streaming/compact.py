@@ -1,39 +1,16 @@
-"""Small-file compaction for streaming append tables and upsert tables.
+"""Small-file compaction for the keyed upsert table.
 
-A micro-batch append sink produces one-or-more files per trigger; at
+A micro-batch sink produces one-or-more files per trigger; at
 2-second triggers that is ~43k files/day/table — metadata pressure and
 scan overhead at 100 TB.  Compaction rewrites data to ~target-sized
 files (content-preserving, verified by row count), the OPTIMIZE step a
 table maintenance job runs off the hot path.
 
-`compact_upsert_table` compacts a live UpsertTable bucket by bucket:
-each coalesced bucket is staged and swapped in through the table's
-transaction log, the same commit an upsert makes, so a crashed
-compaction is undone by the same `rollback_incomplete` as a crashed
-write (see its docstring).
-
-`compact_parquet_dir` compacts a flat append directory.  Safety
-contract:
-  * the table must be QUIESCED — no writer between stat and swap.  This
-    is the CALLER's responsibility; the run narrows (but cannot close)
-    the window by re-stat'ing the directory after the rewrite and
-    aborting if anything changed.  A writer landing between that final
-    stat and the swap rename still loses its files — stop the stream
-    first.  An exclusive `._compact_lock` file serializes concurrent
-    compactions of the same table and gives cooperating writers a
-    marker to check; a stale lock after a hard crash in the swap window
-    must be removed manually (after `recover_compaction`).
-  * directories with a `_spark_metadata` file-sink log are refused:
-    their readers resolve files through the log, which a rewrite cannot
-    preserve.  Compaction targets foreachBatch/batch-written tables
-    (everything append-as-parquet produces is fine once the query is
-    stopped and the log absent).
-  * Hive-partitioned layouts (key=value subdirs) are refused rather
-    than silently flattened.
-  * the two-rename swap is not atomic; a crash between renames leaves
-    `._compact_old` intact, and the next run (or `recover_compaction`)
-    restores it.  Stale temp dirs from crashed runs are cleaned on
-    entry, never left to wedge future compactions.
+`compact_upsert_table` compacts a live UpsertTable bucket by bucket.
+It has no crash protocol of its own: each coalesced bucket is staged
+and swapped in through the table's write section and transaction log,
+the same commit an upsert makes, so a crashed compaction is undone by
+the same `rollback_incomplete` as a crashed write (see its docstring).
 """
 
 from __future__ import annotations
@@ -57,27 +34,6 @@ def parquet_file_stats(path: str) -> tuple[int, int]:
                 n += 1
                 total += os.path.getsize(os.path.join(root, f))
     return n, total
-
-
-def _tmp(path: str) -> str:
-    return path.rstrip("/") + "._compact_tmp"
-
-
-def _old(path: str) -> str:
-    return path.rstrip("/") + "._compact_old"
-
-
-def _lock(path: str) -> str:
-    return path.rstrip("/") + "._compact_lock"
-
-
-def recover_compaction(path: str) -> bool:
-    """Restore a table lost to a crash between the swap renames (old
-    exists, path missing).  Returns True if a recovery happened."""
-    if os.path.exists(_old(path)) and not os.path.exists(path):
-        os.rename(_old(path), path)
-        return True
-    return False
 
 
 def _coalesce_copy(
@@ -104,75 +60,6 @@ def _coalesce_copy(
     return n_files
 
 
-def compact_parquet_dir(
-    spark: SparkSession,
-    path: str,
-    target_bytes: int = DEFAULT_TARGET_BYTES,
-) -> int:
-    """Rewrite `path` to ceil(total/target) files; returns the new file
-    count (0 = nothing to do)."""
-    recover_compaction(path)
-    # stale leftovers from a crashed run must not wedge this one
-    shutil.rmtree(_tmp(path), ignore_errors=True)
-    shutil.rmtree(_old(path), ignore_errors=True)
-
-    if not os.path.isdir(path):
-        return 0
-    if os.path.exists(os.path.join(path, "_spark_metadata")):
-        raise ValueError(
-            f"{path} is a streaming file-sink output (_spark_metadata "
-            "present): its readers resolve files through the sink log, "
-            "which compaction cannot preserve. Stop the query and write "
-            "via foreachBatch, or compact into a new table instead."
-        )
-    for entry in os.listdir(path):
-        if "=" in entry and os.path.isdir(os.path.join(path, entry)):
-            raise ValueError(
-                f"{path} is Hive-partitioned ({entry}); flat compaction "
-                "would destroy the layout — compact per-partition instead."
-            )
-
-    stats = parquet_file_stats(path)
-    n_files = _coalesce_copy(spark, path, _tmp(path), target_bytes)
-    if not n_files:
-        return 0
-    # exclusive lock over the stat-through-swap window: serializes
-    # concurrent compactions and marks the table for cooperating
-    # writers.  It cannot stop an arbitrary external writer — the
-    # quiescence contract remains the caller's (see module docstring).
-    try:
-        lock_fd = os.open(_lock(path), os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        shutil.rmtree(_tmp(path), ignore_errors=True)
-        raise RuntimeError(
-            f"{_lock(path)} exists: another compaction holds the lock "
-            "(or crashed in the swap window — run recover_compaction "
-            "and remove the lock file)."
-        )
-    try:
-        # quiescence check: if a writer landed anything since the first
-        # stat, abort rather than delete its data in the swap
-        if parquet_file_stats(path) != stats:
-            shutil.rmtree(_tmp(path), ignore_errors=True)
-            raise RuntimeError(
-                f"{path} changed during compaction (live writer?); aborted "
-                "without modifying the table. Quiesce the stream first."
-            )
-
-        os.rename(path, _old(path))
-        try:
-            os.rename(_tmp(path), path)
-        except OSError:
-            # roll back, table never missing
-            os.rename(_old(path), path)
-            raise
-        shutil.rmtree(_old(path), ignore_errors=True)
-    finally:
-        os.close(lock_fd)
-        os.unlink(_lock(path))
-    return n_files
-
-
 def compact_upsert_table(
     table,
     target_bytes: int = DEFAULT_TARGET_BYTES,
@@ -183,18 +70,19 @@ def compact_upsert_table(
     partition to ~target-sized files while micro-batch upserts keep
     landing (VERDICT r8 item 4 — compaction under ingest).
 
-    Each bucket is one commit through the table's transaction log,
-    under its commit lock (LocalFSTxnLog.table_lock — the lock every
-    apply_batch holds, so a swap never interleaves with a batch's
-    read-merge-swap and a committed batch is never lost):
-      * rollback_incomplete runs first, as in apply_batch, so a crashed
-        write or compaction is undone before the bucket is read;
+    Each bucket is one commit inside the table's write section
+    (LocalFSTxnLog.write_section — the commit lock every apply_batch
+    and upsert() holds, so a swap never interleaves with a write's
+    read-merge-swap and a committed write is never lost):
+      * the section first rolls back a crashed write or compaction and
+        clears dead staging, so the bucket is read whole;
       * the bucket is coalesced into `_staging/<key>/_bucket=NN` and
         its row count checked unchanged;
       * the staged bucket is swapped in by the same begin ->
         snapshot_buckets -> rename -> commit sequence a write uses.
         The key is fresh for every swap and never reused, because
-        rollback trusts the key's ledger marker.
+        rollback trusts the key's ledger marker; it is forgotten once
+        the swap commits.
     Staging sits outside data/, so a crash never leaves a phantom
     partition; a crash mid-swap leaves the moved bucket in `_pending/`,
     which table open, the next write or compaction, or reclaim_stale
@@ -214,15 +102,7 @@ def compact_upsert_table(
     for entry in sorted(os.listdir(data)):
         if not entry.startswith("_bucket="):
             continue
-        with log.table_lock(writer_id, timeout=lock_timeout):
-            log.rollback_incomplete(data)
-            # compaction stages only under this lock, so any compaction
-            # staging found here was left by a compactor that died
-            # before its swap began
-            os.makedirs(log.staging_dir, exist_ok=True)
-            for name in os.listdir(log.staging_dir):
-                if name.startswith("compact-"):
-                    shutil.rmtree(os.path.join(log.staging_dir, name))
+        with log.write_section(writer_id, data, timeout=lock_timeout):
             key = f"compact-{uuid.uuid4().hex}"
             staged = os.path.join(log.staging_dir, key)
             n = _coalesce_copy(
@@ -234,6 +114,7 @@ def compact_upsert_table(
             if n:
                 log.swap(staged, data, [int(entry.split("=", 1)[1])], key)
                 log.commit(key)
+                log.forget(key)
                 out[entry] = n
         # yield window between buckets: the commit lock is an unfair
         # O_EXCL poll — re-acquiring the instant it is released starves

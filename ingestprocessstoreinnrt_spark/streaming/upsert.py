@@ -24,21 +24,23 @@ Design for 100 TB:
     This replaces the reference's swallow-duplicate-key-errors approach
     (NyTaxiYellowTripStreaming.scala:298-313).
   * one merge-and-write sequence (`_merge_and_write`) serves both
-    entry points: `upsert()` runs it bare, `apply_batch` runs it under
-    the batch claim and commit lock with the undo log bracketing the
-    swap.  One bucket collect of the batch prunes the current-read and
-    tests for emptiness (empty -> no table, no marker); one
-    last-write-wins dedup serves fresh and existing tables; the staged
-    directory's `_bucket=NN` listing is the output's bucket list, so
-    refusing a merge_fn whose keys leave the batch's buckets costs no
-    Spark job.
+    entry points, always under a swap key and always inside
+    `LocalFSTxnLog.write_section` (commit lock, rollback of crashed
+    swaps, dead staging cleared): `upsert()` uses a fresh key and
+    drops its marker after the commit, `apply_batch` its batch key
+    under the batch claim.  One bucket collect of the batch prunes the
+    current-read and tests for emptiness (empty -> no table, no
+    marker); one last-write-wins dedup serves fresh and existing
+    tables; the staged directory's `_bucket=NN` listing is the
+    output's bucket list, so refusing a merge_fn whose keys leave the
+    batch's buckets costs no Spark job.
   * compaction (compact.py) swaps each compacted bucket through the
-    same log, so one recovery path, `rollback_incomplete`, serves
-    writes and compaction alike.
+    same section and log, so one recovery path, `rollback_incomplete`,
+    serves every write.
 
 Filesystem scope: all ledger/undo bookkeeping lives behind the
-LocalFSTxnLog interface (is_applied/mark_applied, begin/
-snapshot_buckets/swap/commit, rollback_incomplete) — driver-local
+LocalFSTxnLog interface (write_section, is_applied/mark_applied/forget,
+begin/snapshot_buckets/swap/commit, rollback_incomplete) — driver-local
 filesystem operations, correct for the local/NFS paths of this
 environment.  On an object store (s3a://...) slot a transactional
 table format in its place; LocalFSTxnLog's docstring maps each method
@@ -90,11 +92,15 @@ class LocalFSTxnLog:
     On a local/NFS filesystem this implementation is correct as-is;
     on s3a:// it is not (rename/list consistency), use a table format.
 
-    Protocol per key (UpsertTable._merge_and_write, compact.py):
+    Protocol for every write (apply_batch, upsert(), compaction), one
+    batch key or fresh key per swap:
+      write_section (commit lock -> rollback_incomplete, which undoes
+      any key that began but never committed -> clear `_staging/`) ->
       <stage into _staging/<key>/> -> begin(key) ->
       [record_fresh_table | snapshot_buckets + staged-bucket renames]
-      -> commit(key); rollback_incomplete() at entry undoes any key
-      that began but never committed.
+      -> commit(key).
+    commit's ledger marker is the commit point.  Only batch keys keep
+    it; upsert() and compaction forget theirs once commit returns.
     """
 
     def __init__(self, root: str):
@@ -116,6 +122,12 @@ class LocalFSTxnLog:
         with open(tmp, "w") as f:
             f.write("")
         os.rename(tmp, os.path.join(self.ledger_dir, key))
+
+    def forget(self, key: str) -> None:
+        """Drop a committed swap key's marker: only its undo entry ever
+        needed it, and commit has removed that."""
+        with contextlib.suppress(FileNotFoundError):
+            os.unlink(os.path.join(self.ledger_dir, key))
 
     # -- per-key undo log --------------------------------------------
 
@@ -155,21 +167,20 @@ class LocalFSTxnLog:
                 open(os.path.join(pdir, f"_absent_bucket={b}"), "w").close()
 
     def swap(
-        self, staged: str, data_dir: str, buckets: list, key: str | None
+        self, staged: str, data_dir: str, buckets: list, key: str
     ) -> None:
-        """Rename each staged `_bucket=NN` dir into data_dir, then drop
-        the staging dir.  With a key the renames are bracketed by the
-        undo log (begin -> snapshot_buckets -> renames; the caller
-        commits).  Without one (upsert()) a live bucket is deleted just
-        before its replacement lands, as a dynamic partition overwrite
-        does: no undo."""
-        if key is not None:
-            self.begin(key)
-            self.snapshot_buckets(key, data_dir, buckets)
+        """begin -> snapshot_buckets (every live bucket replaced moves
+        into the undo entry) -> rename each staged `_bucket=NN` dir
+        into data_dir, then drop the staging dir; the caller commits.
+        No bucket is ever deleted: a crash at any rename leaves it in
+        `_pending/<key>/` for rollback_incomplete."""
+        self.begin(key)
+        self.snapshot_buckets(key, data_dir, buckets)
         for b in buckets:
-            live = os.path.join(data_dir, f"_bucket={b}")
-            shutil.rmtree(live, ignore_errors=True)  # keyed: already gone
-            os.rename(os.path.join(staged, f"_bucket={b}"), live)
+            os.rename(
+                os.path.join(staged, f"_bucket={b}"),
+                os.path.join(data_dir, f"_bucket={b}"),
+            )
         shutil.rmtree(staged, ignore_errors=True)
 
     def commit(self, key: str) -> None:
@@ -180,7 +191,7 @@ class LocalFSTxnLog:
 
     def rollback_incomplete(self, data_dir: str) -> None:
         """Undo every key that began but never committed (crash window)
-        and drop its undo entry and staging dir.
+        and drop its undo entry (write_section clears the staging).
 
         A `_bucket=NN` in the entry was moved out of the live table, so
         it is renamed back over whatever the swap put in its place; an
@@ -203,9 +214,6 @@ class LocalFSTxnLog:
                     if entry.startswith("_bucket="):
                         os.rename(os.path.join(pdir, entry), live)
             shutil.rmtree(pdir, ignore_errors=True)
-            shutil.rmtree(
-                os.path.join(self.staging_dir, key), ignore_errors=True
-            )
 
     # -- multi-writer protocol ---------------------------------------
     #
@@ -217,12 +225,13 @@ class LocalFSTxnLog:
     #     claim's release (winner rolled back; retry).  This is what
     #     makes replay-racing writers unable to double-apply a batch.
     #   * table-level COMMIT LOCK: O_EXCL creation of _commit_lock
-    #     around the read-merge-stage-swap-commit critical section,
-    #     so two writers applying DIFFERENT batches cannot interleave a
-    #     bucket read with the other's bucket overwrite (plain parquet
-    #     has no snapshot isolation to hide behind).  Delta replaces
-    #     this mutex with optimistic commit + retry; on a single table
-    #     directory the mutex is the honest equivalent.
+    #     around the read-merge-stage-swap-commit critical section
+    #     (write_section), so two writers — batches, upsert(),
+    #     compaction — cannot interleave a bucket read with the
+    #     other's bucket overwrite (plain parquet has no snapshot
+    #     isolation to hide behind).  Delta replaces this mutex with
+    #     optimistic commit + retry; on a single table directory the
+    #     mutex is the honest equivalent.
     # Both files carry the writer id.  A claim/lock left by a CRASHED
     # writer blocks successors by design (liveness over safety is the
     # wrong trade for a ledger); `reclaim_stale` is the explicit
@@ -259,6 +268,7 @@ class LocalFSTxnLog:
         self, writer_id: str, timeout: float = 60.0, poll: float = 0.02
     ):
         """Mutual exclusion over the table's commit critical section."""
+        os.makedirs(self.root, exist_ok=True)  # a new table has no dir
         deadline = time.monotonic() + timeout
         while True:
             try:
@@ -281,6 +291,21 @@ class LocalFSTxnLog:
         finally:
             with contextlib.suppress(FileNotFoundError):
                 os.unlink(self.lock_path)
+
+    @contextlib.contextmanager
+    def write_section(
+        self, writer_id: str, data_dir: str, timeout: float = 60.0
+    ):
+        """The one entry for every write to the table: take the commit
+        lock, undo any swap a crashed writer left (renaming buckets back
+        while another writer swaps them would corrupt the table, so this
+        runs under the lock), then clear `_staging/`.  Every writer
+        stages only inside this section, so whatever is staged when it
+        opens was left by a writer that died."""
+        with self.table_lock(writer_id, timeout=timeout):
+            self.rollback_incomplete(data_dir)
+            shutil.rmtree(self.staging_dir, ignore_errors=True)
+            yield
 
     def _lock_holder(self) -> str | None:
         try:
@@ -428,8 +453,12 @@ class UpsertTable:
         aggregate merging; merge_fn is only called when the table
         exists, so `current_subset` is never None.  Only the buckets
         present in `new_rows` are rewritten; an empty `new_rows` is a
-        no-op.  Same sequence as apply_batch (`_merge_and_write`)."""
-        self._merge_and_write(new_rows, merge_fn)
+        no-op.  Same locked, undoable sequence as apply_batch, under a
+        fresh swap key whose marker is dropped once it commits."""
+        key = f"upsert-{uuid.uuid4().hex}"
+        with self.txn_log.write_section("upsert", self._data()):
+            self._merge_and_write(new_rows, merge_fn, key)
+            self.txn_log.forget(key)
 
     def _last_write_wins(
         self, current: DataFrame | None, new_rows: DataFrame
@@ -459,13 +488,14 @@ class UpsertTable:
         self,
         new_rows: DataFrame,
         merge_fn: Callable[[DataFrame, DataFrame], DataFrame] | None,
-        key: str | None = None,
+        key: str,
     ) -> None:
         """The one merge-and-write sequence behind upsert() and
-        apply_batch.  With a ledger `key` the write is bracketed by the
-        undo log: a fresh table is begin -> record_fresh_table -> write
-        -> commit; an existing one stages the merged buckets, then
-        swaps them in (begin -> snapshot_buckets -> renames) -> commit."""
+        apply_batch, run inside the txn log's write_section and
+        bracketed by the undo log under `key`: a fresh table is begin ->
+        record_fresh_table -> write -> commit; an existing one stages
+        the merged buckets, then swaps them in (begin ->
+        snapshot_buckets -> renames) -> commit."""
         new_rows = new_rows.cache()
         try:
             # the batch's bucket list is collected ONCE: it prunes the
@@ -481,9 +511,8 @@ class UpsertTable:
                 # a fresh table: nothing to merge with, so merge_fn is
                 # not called; the undo log records the creation so a
                 # crash before the marker drops the half-created table
-                if key is not None:
-                    self.txn_log.begin(key)
-                    self.txn_log.record_fresh_table(key)
+                self.txn_log.begin(key)
+                self.txn_log.record_fresh_table(key)
                 self.init(
                     new_rows
                     if merge_fn is not None
@@ -497,12 +526,8 @@ class UpsertTable:
                     else merge_fn(current, new_rows)
                 )
                 # staged outside data/, so the write never overwrites
-                # the buckets `merged` reads; upsert() has no key, so
-                # its staging name is unique per attempt
-                staged = os.path.join(
-                    self.txn_log.staging_dir,
-                    key or f"upsert-{uuid.uuid4().hex}",
-                )
+                # the buckets `merged` reads
+                staged = os.path.join(self.txn_log.staging_dir, key)
                 self._write_buckets(merged, staged)
                 out = [
                     int(e.split("=", 1)[1])
@@ -514,7 +539,6 @@ class UpsertTable:
                 # its rows (LWW keeps exactly the batch's keys)
                 extra = set(out) - set(buckets)
                 if extra:
-                    shutil.rmtree(staged, ignore_errors=True)
                     raise ValueError(
                         "merge_fn emitted keys hashing to buckets "
                         f"{sorted(extra)} outside the batch's buckets; "
@@ -524,8 +548,7 @@ class UpsertTable:
                         "current subset it was given."
                     )
                 self.txn_log.swap(staged, self._data(), out, key)
-            if key is not None:
-                self.txn_log.commit(key)
+            self.txn_log.commit(key)
         finally:
             new_rows.unpersist()
 
@@ -590,11 +613,9 @@ class UpsertTable:
         try:
             if self.txn_log.is_applied(key):
                 return  # claimed a batch a prior owner already landed
-            with self.txn_log.table_lock(writer_id, timeout=claim_timeout):
-                # rollback of crashed attempts must itself run inside the
-                # commit lock: renaming buckets back while another writer
-                # swaps those buckets would corrupt the table
-                self.txn_log.rollback_incomplete(self._data())
+            with self.txn_log.write_section(
+                writer_id, self._data(), timeout=claim_timeout
+            ):
                 self._merge_and_write(new_rows, merge_fn, key)
         finally:
             self.txn_log.release_claim(key)

@@ -5,7 +5,6 @@ from __future__ import annotations
 import pytest
 
 from ingestprocessstoreinnrt_spark.sources import csv_clean, generators
-from ingestprocessstoreinnrt_spark.streaming import compact
 
 
 def test_reject_routing(spark, tmp_path):
@@ -35,97 +34,6 @@ def test_reject_routing(spark, tmp_path):
         "trim(value) != '' AND value NOT LIKE 'vendor_name%'"
     ).count()
     assert data_lines == good.count() + rejects.count()
-
-
-def test_compaction_preserves_content(spark, tmp_path):
-    src = str(tmp_path / "facts")
-    csv = generators.write_taxi_csv(str(tmp_path / "g.csv"), rows=2000, seed=9)
-    trips = csv_clean.read_taxi_trips(spark, csv)
-    # simulate many micro-batch files
-    trips.repartition(64).write.mode("overwrite").parquet(src)
-    n_before, _ = compact.parquet_file_stats(src)
-    assert n_before >= 64
-    rows_before = spark.read.parquet(src).count()
-    sample_before = {
-        tuple(r)
-        for r in spark.read.parquet(src)
-        .orderBy("tpep_pickup_datetime", "vender_id")
-        .limit(50)
-        .collect()
-    }
-    n_files = compact.compact_parquet_dir(spark, src, target_bytes=10**9)
-    n_after, _ = compact.parquet_file_stats(src)
-    assert n_after == n_files == 1
-    assert spark.read.parquet(src).count() == rows_before
-    sample_after = {
-        tuple(r)
-        for r in spark.read.parquet(src)
-        .orderBy("tpep_pickup_datetime", "vender_id")
-        .limit(50)
-        .collect()
-    }
-    assert sample_before == sample_after
-
-
-def test_compaction_safety_guards(spark, tmp_path):
-    import os
-    import pytest as _pytest
-
-    # empty / missing dir -> no-op, not a crash
-    assert compact.compact_parquet_dir(spark, str(tmp_path / "nope")) == 0
-    empty = tmp_path / "empty"
-    empty.mkdir()
-    assert compact.compact_parquet_dir(spark, str(empty)) == 0
-
-    src = str(tmp_path / "t")
-    csv = generators.write_taxi_csv(str(tmp_path / "c.csv"), rows=100, seed=1)
-    trips = csv_clean.read_taxi_trips(spark, csv)
-    trips.repartition(4).write.mode("overwrite").parquet(src)
-
-    # streaming file-sink log -> refused
-    os.makedirs(src + "/_spark_metadata", exist_ok=True)
-    with _pytest.raises(ValueError, match="_spark_metadata"):
-        compact.compact_parquet_dir(spark, src)
-    os.rmdir(src + "/_spark_metadata")
-
-    # Hive-partitioned layout -> refused
-    part = str(tmp_path / "p")
-    trips.write.partitionBy("vender_id").mode("overwrite").parquet(part)
-    with _pytest.raises(ValueError, match="partitioned"):
-        compact.compact_parquet_dir(spark, part)
-
-    # crash recovery: simulate a crash between the two swap renames
-    os.rename(src, src + "._compact_old")
-    assert compact.recover_compaction(src)
-    assert spark.read.parquet(src).count() == 100
-    # stale tmp dir from a crashed run does not wedge the next one
-    os.makedirs(src + "._compact_tmp", exist_ok=True)
-    assert compact.compact_parquet_dir(spark, src, target_bytes=10**9) == 1
-    assert spark.read.parquet(src).count() == 100
-
-
-def test_compaction_lock_refuses_concurrent_run(spark, tmp_path):
-    """An existing ._compact_lock (concurrent or crashed run) must make
-    the compaction refuse rather than race the swap."""
-    import os
-
-    import pytest as _pytest
-
-    src = str(tmp_path / "t")
-    csv = generators.write_taxi_csv(str(tmp_path / "c.csv"), rows=100, seed=2)
-    trips = csv_clean.read_taxi_trips(spark, csv)
-    trips.repartition(4).write.mode("overwrite").parquet(src)
-
-    lock = src + "._compact_lock"
-    open(lock, "w").close()
-    with _pytest.raises(RuntimeError, match="lock"):
-        compact.compact_parquet_dir(spark, src, target_bytes=10**9)
-    # table untouched
-    assert spark.read.parquet(src).count() == trips.count()
-    os.unlink(lock)
-    # lock released after a successful run
-    assert compact.compact_parquet_dir(spark, src, target_bytes=10**9) == 1
-    assert not os.path.exists(lock)
 
 
 def test_mad_outliers_match_python_statistics(spark):
