@@ -5,8 +5,10 @@ each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash -> CORRECTNESS_r{N}.json).
 
-Query implementations live in ``ingestprocessstoreinnrt_spark``; this
-module only aggregates the registries.
+Query implementations live in ``ingestprocessstoreinnrt_spark``: each
+operator module declares every query once, as a ``registry.Query`` in
+its ``QUERIES`` dict.  This module merges those into ``registry()`` and
+derives the contract's dicts from it.
 """
 
 from __future__ import annotations
@@ -42,9 +44,10 @@ from ingestprocessstoreinnrt_spark.operators import (
     textops,
     windows,
 )
+from ingestprocessstoreinnrt_spark.registry import Query
 
-# registry order: queries() and oracle_sql() merge the modules' dicts
-# in this order before _ordered() sorts them
+# registry order: registry() merges the modules' QUERIES in this order
+# before _ordered() sorts them
 _MODULES = (bi, entity, profile, dedup, similarity, textops, multimodal,
             ml, windows, skew, asof, sketch, cdc, graph, timeseries, layout,
             quality, funnel, curation, incremental, basket, jsonops, dss,
@@ -130,6 +133,15 @@ def _ordered(merged: dict) -> dict:
     return {k: merged[k] for k in names}
 
 
+def registry() -> dict[str, Query]:
+    """Every declared query's record, merged across _MODULES and put in
+    driver-window order."""
+    out: dict[str, Query] = {}
+    for mod in _MODULES:
+        out.update(mod.QUERIES)
+    return _ordered(out)
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2.
 
@@ -140,20 +152,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     computes from the parquet inputs."""
     from ingestprocessstoreinnrt_spark import planmemo
 
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for mod in _MODULES:
-        out.update(mod.QUERIES)
-    return planmemo.memoize_pure(_ordered(out))
+    return planmemo.memoize_pure(registry())
 
 
 def oracle_sql_plain() -> dict[str, str]:
     """The semantics-first single-statement oracles exactly as the
-    operator modules publish them (no materialization folding) — the
+    operator modules declare them (no materialization folding) — the
     plain side of the mat-twin pin test."""
-    out: dict[str, str] = {}
-    for mod in _MODULES:
-        out.update(mod.ORACLE)
-    return _ordered(out)
+    return {name: q.oracle for name, q in registry().items()}
 
 
 def oracle_sql() -> dict[str, str]:
@@ -191,7 +197,4 @@ def oracle_sql_mat() -> dict[str, list[str]]:
     ';\\n' into one multi-statement string — by the oracle_sql()
     driver contract (duckdb.sql on such a string returns the LAST
     statement's result)."""
-    out: dict[str, list[str]] = {}
-    for mod in _MODULES:
-        out.update(getattr(mod, "ORACLE_MAT", {}))
-    return out
+    return {name: list(q.mat) for name, q in registry().items() if q.mat}

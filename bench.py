@@ -19,11 +19,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# 80k-row micro-batches: the upsert path is fixed-cost bound (~2 s per
-# batch: merge read, checkpoint shuffle, snapshot, dynamic overwrite) up
-# to at least 80k rows/batch — measured 50k total rows -> 5.1k rows/s,
-# 400k -> 40k rows/s in the SAME ~10 s wall clock — so small batches
-# benchmark the scheduler, not the pipeline.
+# 80k-row micro-batches: the upsert path is fixed-cost bound per batch
+# (current-bucket read, merge, staged write, rename swap, ledger
+# marker) up to at least 80k rows/batch — measured on the write path
+# before stage-and-swap: 50k total rows -> 5.1k rows/s, 400k -> 40k
+# rows/s in the SAME ~10 s wall clock — so small batches benchmark the
+# scheduler, not the pipeline.
 STREAM_ROWS = 400_000
 STREAM_CHUNKS = 5
 
@@ -202,6 +203,38 @@ def _wait_for_quiet(sustain: bool = False) -> float:
         time.sleep(30)
 
 
+def sweep_families(registry: dict) -> dict[str, list[str]]:
+    """The sweep order: cache family -> its queries, in run order.
+
+    CANONICAL order (VERDICT r6 item 2): the registry's order follows
+    the driver's correctness-window rotation and changes every round,
+    which silently moved shared-cache population costs between queries
+    (r6: dedup_minhash_lsh 11.2 s cold-first vs 5.9 s warm — rotation
+    luck, not code).  Queries therefore sort by NAME, so the same query
+    pays the same warm-up every round.  A query with ``after`` then
+    moves to right behind the query whose cache it reuses: timings are
+    per-query either way, this only pins the one-time cache population
+    onto the query that owns it.
+
+    Cache hygiene: shared caches (token frames, pair frames, qvec
+    frames) are an asset within their query family and dead weight
+    after it — by the tail of a 130-query sweep the accumulated entries
+    evict each other and the last families time cache *pressure*, not
+    their own plans (sf1 r3: json_props_rollup 65.6 s under pressure vs
+    2.1 s isolated).  Queries are grouped by the cache they share (the
+    entry's ``family``, else its name prefix), families in order of
+    first appearance, and main() clears the SQL cache at each family
+    boundary, so every family starts cold and owns its own warm-up."""
+    names = sorted(n for n, q in registry.items() if q.after is None)
+    for late in sorted(n for n, q in registry.items() if q.after):
+        names.insert(names.index(registry[late].after) + 1, late)
+    by_family: dict[str, list[str]] = {}
+    for n in names:
+        fam = registry[n].family or n.split("_", 1)[0]
+        by_family.setdefault(fam, []).append(n)
+    return by_family
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # Big-scale sweeps need a big single-JVM heap: the r11 first sf10
@@ -251,80 +284,8 @@ def main() -> None:
                 "noop"
             ).mode("overwrite").save()
 
-    # CANONICAL order (VERDICT r6 item 2): queries()' dict order follows
-    # the driver's correctness-window rotation and changes every round,
-    # which silently moved shared-cache population costs between queries
-    # (r6: dedup_minhash_lsh 11.2 s cold-first vs 5.9 s warm — rotation
-    # luck, not code).  Benchmarks sort by NAME, rotation-independent,
-    # so the same query pays the same warm-up every round.
-    names = sorted(qs)
-
-    # cache-affinity order: consumers of a shared cached frame run AFTER
-    # the query that populates it (pipeline_dedup_corpus reuses
-    # dedup_jaccard_full's verified pair frame; ~5 s cold vs ~2 s
-    # warm).  Timings are per-query either way — this only pins the
-    # one-time cache population onto the query that owns it.  The LSH
-    # survivorship pair is order-free since r7 (dedup.lsh_pair_frame is
-    # the family cache owner), listed anyway for stable attribution.
-    run_after = {
-        "pipeline_dedup_corpus": "dedup_jaccard_full",
-        # survivorship compositions reuse their pair-frame caches
-        "dedup_keep_longest": "dedup_jaccard_full",
-        "dedup_keep_longest_lsh": "dedup_minhash_lsh",
-    }
-    names = [n for n in names if n not in run_after]
-    for late, anchor in sorted(run_after.items()):
-        names.insert(names.index(anchor) + 1, late)
-
-    # Cache hygiene: shared caches (token frames, pair frames, qvec
-    # frames) are an asset within their query family and dead weight
-    # after it — by the tail of a 130-query sweep the accumulated
-    # entries evict each other and the last families time cache
-    # *pressure*, not their own plans (sf1 r3: json_props_rollup 65.6 s
-    # under pressure vs 2.1 s isolated).  Queries are grouped by the
-    # cache they share (default: name prefix; overrides keep
-    # cross-prefix sharers together) and the SQL cache is cleared at
-    # each family boundary, so every family starts cold and owns its
-    # own warm-up.
-    family_overrides = {
-        # basket.py's cached order-pair frame
-        "bi_basket_lift": "basket",
-        "graph_triangles": "basket",
-        "graph_degree_stats": "basket",
-        "graph_jaccard_neighbors": "basket",
-        "graph_resource_allocation": "basket",
-        "graph_clustering_coeff": "basket",
-        "graph_pref_attachment": "basket",
-        "graph_assortativity": "basket",
-        "graph_rich_club": "basket",
-        # dedup token/pair frames
-        "pipeline_dedup_corpus": "dedup",
-        # curation rides textops' cached token stats
-        "pipeline_curated_corpus": "curation",
-        # the learned quality gate rides ml's cached logistic features
-        "curation_quality_gate": "ml",
-        # textops-module samplers share its token frame
-        "sample_stratified": "text",
-        "sample_weighted": "text",
-        # embeddings-table queries share quantized-vector frames
-        "emb_quantize_int8": "sim",
-        "ml_kmeans": "sim",
-        "ml_knn_eval": "sim",
-    }
-
-    def family(name: str) -> str:
-        return family_overrides.get(name, name.split("_", 1)[0])
-
-    fam_order: list[str] = []
-    for n in names:
-        if family(n) not in fam_order:
-            fam_order.append(family(n))
-    pos = {n: i for i, n in enumerate(names)}
-    names.sort(key=lambda n: (fam_order.index(family(n)), pos[n]))
-
-    by_family: dict[str, list[str]] = {}
-    for n in names:
-        by_family.setdefault(family(n), []).append(n)
+    by_family = sweep_families(e.registry())
+    fam_order = list(by_family)
 
     # SPARK_GRAFT_FAMILIES=dedup[,sim,...] sweeps only the named cache
     # families — the miss-path protocol (VERDICT r12 item 3): clear

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..registry import Query
 
 LEFT_TYPE = "purchase"
 RIGHT_TYPE = "click"
@@ -420,14 +421,8 @@ JOIN fwd USING (event_id)
 
 
 QUERIES = {
-    "asof_click_attribution": asof_enrich,
-    "asof_nearest": asof_nearest,
-    "asof_windowed_attribution": attribution_windowed,
-    "range_join_tiers": range_join_tiers,
-}
-ORACLE = {
-    "asof_click_attribution": _ASOF_SQL,
-    "asof_nearest": _NEAREST_SQL,
-    "asof_windowed_attribution": _ATTRIB_SQL,
-    "range_join_tiers": _RANGE_JOIN_SQL,
+    "asof_click_attribution": Query(asof_enrich, _ASOF_SQL),
+    "asof_nearest": Query(asof_nearest, _NEAREST_SQL),
+    "asof_windowed_attribution": Query(attribution_windowed, _ATTRIB_SQL),
+    "range_join_tiers": Query(range_join_tiers, _RANGE_JOIN_SQL),
 }

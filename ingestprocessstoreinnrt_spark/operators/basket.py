@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..planmemo import session_memo
 from ..plans.hints import maybe_broadcast
+from ..registry import Query
 
 MIN_ITEM_ORDERS = 2  # apriori item prune: item must appear in >= 2 orders
 MIN_PAIR_ORDERS = 2  # pair support threshold (edges of the co-graph)
@@ -925,30 +926,6 @@ SELECT * FROM ({rows}) ORDER BY k
 """
 
 
-QUERIES = {
-    "bi_basket_lift": basket_pair_lift,
-    "graph_triangles": graph_triangles,
-    "graph_degree_stats": degree_stats,
-    "graph_jaccard_neighbors": jaccard_neighbors,
-    "graph_resource_allocation": resource_allocation,
-    "graph_clustering_coeff": clustering_coeff,
-    "graph_pref_attachment": pref_attachment,
-    "graph_assortativity": assortativity,
-    "graph_rich_club": rich_club,
-}
-ORACLE = {
-    "bi_basket_lift": _BASKET_SQL,
-    "graph_triangles": _TRI_SQL,
-    "graph_degree_stats": _DEGREE_SQL,
-    "graph_jaccard_neighbors": _JACCARD_SQL,
-    "graph_resource_allocation": _RA_SQL,
-    "graph_clustering_coeff": _CLUSTERING_SQL,
-    "graph_pref_attachment": _PA_SQL,
-    "graph_assortativity": _ASSORT_SQL,
-    "graph_rich_club": _rich_club_sql(),
-}
-
-
 # --- materialized oracle twin for the sf1 sweep (VERDICT r8 item 2) ---------
 #
 # The rich-club CTE form re-derives the co-purchase pair frame (pc —
@@ -993,6 +970,40 @@ def _rich_club_mat() -> list[str]:
     ]
 
 
-ORACLE_MAT = {
-    "graph_rich_club": _rich_club_mat(),
+# family "basket": every query here rides this module's cached
+# order-pair frame
+QUERIES = {
+    # impure: construction opens the persisted basket pair artifact (a
+    # parquet read) when the session's pair memo is cold
+    "bi_basket_lift": Query(
+        basket_pair_lift, _BASKET_SQL, impure=True, family="basket"
+    ),
+    "graph_triangles": Query(
+        graph_triangles, _TRI_SQL, impure=True, family="basket"
+    ),
+    "graph_degree_stats": Query(
+        degree_stats, _DEGREE_SQL, impure=True, family="basket"
+    ),
+    "graph_jaccard_neighbors": Query(
+        jaccard_neighbors, _JACCARD_SQL, impure=True, family="basket"
+    ),
+    "graph_resource_allocation": Query(
+        resource_allocation, _RA_SQL, impure=True, family="basket"
+    ),
+    "graph_clustering_coeff": Query(
+        clustering_coeff, _CLUSTERING_SQL, impure=True, family="basket"
+    ),
+    "graph_pref_attachment": Query(
+        pref_attachment, _PA_SQL, impure=True, family="basket"
+    ),
+    "graph_assortativity": Query(
+        assortativity, _ASSORT_SQL, impure=True, family="basket"
+    ),
+    "graph_rich_club": Query(
+        rich_club,
+        _rich_club_sql(),
+        mat=_rich_club_mat(),
+        impure=True,
+        family="basket",
+    ),
 }

@@ -22,9 +22,9 @@ Reference shapes:
   dict_enrich       <- payment/rate-code Map.getOrElse lookup (J2/F9,
                        NyTaxiYellowTripStreaming.scala:24-36)
 
-Each function takes (spark, sf_dir) and returns a DataFrame; ORACLE maps
-the same name to bit-equivalent DuckDB SQL (see functions.scalars for the
-decimal-sum determinism contract).
+Each function takes (spark, sf_dir) and returns a DataFrame; its QUERIES
+entry pairs it with bit-equivalent DuckDB SQL (see functions.scalars for
+the decimal-sum determinism contract).
 """
 
 from __future__ import annotations
@@ -42,6 +42,7 @@ from ..functions.scalars import (
     sql_dsum,
     sql_dsum_expr,
 )
+from ..registry import Query
 
 # ---------------------------------------------------------------------------
 # A4 — hash group-by rollup: 2 keys, battery of aggregates (TPC-H Q1 shape)
@@ -1628,59 +1629,32 @@ ORDER BY n_name
 
 
 QUERIES = {
-    "bi_gini_revenue": gini_revenue,
-    "bi_market_hhi": market_hhi,
-    "bi_abc_parts": abc_parts,
-    "bi_new_vs_returning": new_vs_returning,
-    "bi_yoy_growth": yoy_growth,
-    "bi_rfm_segments": rfm_segments,
-    "bi_metrics_unpivot": metrics_unpivot,
-    "bi_pricing_rollup": pricing_rollup,
-    "bi_rollup_levels": pricing_rollup_levels,
-    "bi_cube_revenue": revenue_cube,
-    "bi_first_n": first_n_events,
-    "bi_percentiles": order_percentiles,
-    "bi_index_search": index_search,
-    "bi_distinct_counts": distinct_counts,
-    "bi_topk_customers": topk_customers,
-    "bi_time_of_day": time_of_day,
-    "bi_point_lookup": point_lookup,
-    "bi_enrich_join": enrich_join,
-    "bi_dict_enrich": dict_enrich,
-    "bi_pareto_share": pareto_share,
-    "bi_shipping_priority": shipping_priority,
-    "bi_priority_semijoin": priority_semijoin,
-    "bi_idle_customers": idle_customers,
-    "bi_market_share": market_share,
-    "bi_top_supplier": top_supplier,
-    "bi_status_pivot": status_pivot,
-}
-
-ORACLE = {
-    "bi_gini_revenue": _GINI_SQL,
-    "bi_market_hhi": _HHI_SQL,
-    "bi_abc_parts": _ABC_SQL,
-    "bi_new_vs_returning": _NEW_RET_SQL,
-    "bi_yoy_growth": _YOY_SQL,
-    "bi_rfm_segments": _rfm_sql(),
-    "bi_metrics_unpivot": _UNPIVOT_SQL,
-    "bi_pricing_rollup": _PRICING_ROLLUP_SQL,
-    "bi_rollup_levels": _PRICING_ROLLUP_LEVELS_SQL,
-    "bi_cube_revenue": _REVENUE_CUBE_SQL,
-    "bi_first_n": _FIRST_N_SQL,
-    "bi_percentiles": _PERCENTILES_SQL,
-    "bi_index_search": _INDEX_SEARCH_SQL,
-    "bi_distinct_counts": _DISTINCT_SQL,
-    "bi_topk_customers": _TOPK_CUSTOMERS_SQL,
-    "bi_time_of_day": _TIME_OF_DAY_SQL,
-    "bi_point_lookup": _POINT_LOOKUP_SQL,
-    "bi_enrich_join": _ENRICH_JOIN_SQL,
-    "bi_dict_enrich": _DICT_ENRICH_SQL,
-    "bi_pareto_share": _PARETO_SQL,
-    "bi_shipping_priority": _SHIP_SQL,
-    "bi_priority_semijoin": _SEMI_SQL,
-    "bi_idle_customers": _ANTI_SQL,
-    "bi_market_share": _MARKET_SHARE_SQL,
-    "bi_top_supplier": _TOP_SUPPLIER_SQL,
-    "bi_status_pivot": _STATUS_PIVOT_SQL,
+    "bi_gini_revenue": Query(gini_revenue, _GINI_SQL),
+    "bi_market_hhi": Query(market_hhi, _HHI_SQL),
+    "bi_abc_parts": Query(abc_parts, _ABC_SQL),
+    "bi_new_vs_returning": Query(new_vs_returning, _NEW_RET_SQL),
+    "bi_yoy_growth": Query(yoy_growth, _YOY_SQL),
+    "bi_rfm_segments": Query(rfm_segments, _rfm_sql()),
+    "bi_metrics_unpivot": Query(metrics_unpivot, _UNPIVOT_SQL),
+    "bi_pricing_rollup": Query(pricing_rollup, _PRICING_ROLLUP_SQL),
+    "bi_rollup_levels": Query(
+        pricing_rollup_levels, _PRICING_ROLLUP_LEVELS_SQL
+    ),
+    "bi_cube_revenue": Query(revenue_cube, _REVENUE_CUBE_SQL),
+    "bi_first_n": Query(first_n_events, _FIRST_N_SQL),
+    "bi_percentiles": Query(order_percentiles, _PERCENTILES_SQL),
+    "bi_index_search": Query(index_search, _INDEX_SEARCH_SQL),
+    "bi_distinct_counts": Query(distinct_counts, _DISTINCT_SQL),
+    "bi_topk_customers": Query(topk_customers, _TOPK_CUSTOMERS_SQL),
+    "bi_time_of_day": Query(time_of_day, _TIME_OF_DAY_SQL),
+    "bi_point_lookup": Query(point_lookup, _POINT_LOOKUP_SQL),
+    "bi_enrich_join": Query(enrich_join, _ENRICH_JOIN_SQL),
+    "bi_dict_enrich": Query(dict_enrich, _DICT_ENRICH_SQL),
+    "bi_pareto_share": Query(pareto_share, _PARETO_SQL),
+    "bi_shipping_priority": Query(shipping_priority, _SHIP_SQL),
+    "bi_priority_semijoin": Query(priority_semijoin, _SEMI_SQL),
+    "bi_idle_customers": Query(idle_customers, _ANTI_SQL),
+    "bi_market_share": Query(market_share, _MARKET_SHARE_SQL),
+    "bi_top_supplier": Query(top_supplier, _TOP_SUPPLIER_SQL),
+    "bi_status_pivot": Query(status_pivot, _STATUS_PIVOT_SQL),
 }

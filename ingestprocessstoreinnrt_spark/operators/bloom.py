@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.scalars import SQL_STABLE_HASH64, stable_hash64
+from ..registry import Query
 
 BLOOM_M = 16384  # positions (2^14)
 BLOOM_K = 3  # hashes per key
@@ -191,5 +192,8 @@ ORDER BY l_returnflag
 """
 
 
-QUERIES = {"join_bloom_semijoin": bloom_semijoin_audit}
-ORACLE = {"join_bloom_semijoin": _bloom_sql()}
+QUERIES = {
+    "join_bloom_semijoin": Query(
+        bloom_semijoin_audit, _bloom_sql(), impure=True
+    ),
+}

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.scalars import SQL_STABLE_HASH64, stable_hash64
+from ..registry import Query
 
 # --- SCD2 history ----------------------------------------------------------
 
@@ -318,14 +319,8 @@ GROUP BY user_id
 
 
 QUERIES = {
-    "cdc_scd2_history": scd2_history,
-    "cdc_scd2_asof": scd2_asof,
-    "cdc_snapshot_diff": snapshot_diff,
-    "sketch_cms_heavy_hitters": cms_heavy_hitters,
-}
-ORACLE = {
-    "cdc_scd2_history": _SCD2_SQL,
-    "cdc_scd2_asof": _ASOF_SCD2_SQL,
-    "cdc_snapshot_diff": _DIFF_SQL,
-    "sketch_cms_heavy_hitters": _cms_sql(),
+    "cdc_scd2_history": Query(scd2_history, _SCD2_SQL),
+    "cdc_scd2_asof": Query(scd2_asof, _ASOF_SCD2_SQL),
+    "cdc_snapshot_diff": Query(snapshot_diff, _DIFF_SQL),
+    "sketch_cms_heavy_hitters": Query(cms_heavy_hitters, _cms_sql()),
 }

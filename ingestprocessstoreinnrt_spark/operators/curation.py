@@ -32,6 +32,7 @@ from ..catalog import fan_out, load_table
 from ..functions.scalars import SQL_STABLE_HASH64, stable_hash64
 from ..functions.text import tokens
 from ..planmemo import session_memo
+from ..registry import Query
 
 # ---------------------------------------------------------------------------
 # PII detection / redaction
@@ -759,8 +760,8 @@ def _run_bpe(
         lhs, rhs, cnt = best[0].lhs, best[0].rhs, best[0].cnt
         merges.append((k, lhs, rhs, lhs + rhs, cnt))
         vocab = _bpe_apply(vocab, [(lhs, rhs)])
-    memo[key] = (merges, vocab)
-    return merges, vocab
+    got = memo[key] = (merges, vocab)
+    return got
 
 
 def bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2177,46 +2178,30 @@ HAVING COUNT(*) >= {SPAN_MIN_RUN}
 
 
 QUERIES = {
-    "curation_dup_ngrams": xdoc_dup_ngrams,
-    "curation_dup_spans": dup_spans,
-    "curation_pack_sequences": pack_sequences,
-    "curation_pii_redact": pii_redact,
-    "curation_chunk_windows": chunk_windows,
-    "curation_repetition_stats": repetition_stats,
-    "curation_gopher_repetition": gopher_repetition,
-    "curation_ngram_contamination": ngram_contamination,
-    "curation_substr_contamination": substring_contamination,
-    "curation_bpe_pairs": bpe_pair_counts,
-    "curation_bpe_train": bpe_train,
-    "curation_bpe_train_batched": bpe_train_batched,
-    "curation_bpe_encode": bpe_encode,
-    "curation_bpe_fertility": bpe_fertility,
-    "curation_url_strip": url_strip,
-    "curation_mix_sources": mix_weighted_sources,
-    "curation_train_split": train_test_split,
-    "curation_remove_repetition": remove_repetition,
-    "curation_strip_boilerplate": strip_boilerplate,
-    "curation_decontaminate": decontaminate,
-}
-ORACLE = {
-    "curation_dup_ngrams": _XDOC_SQL,
-    "curation_dup_spans": _DUP_SPANS_SQL,
-    "curation_pack_sequences": _PACK_SQL,
-    "curation_pii_redact": _PII_SQL,
-    "curation_chunk_windows": _CHUNK_SQL,
-    "curation_repetition_stats": _REPETITION_SQL,
-    "curation_gopher_repetition": _GOPHER_SQL,
-    "curation_ngram_contamination": _CONTAM_SQL,
-    "curation_substr_contamination": _SUBSTR_SQL,
-    "curation_bpe_pairs": _BPE_SQL,
-    "curation_bpe_train": _bpe_train_sql(),
-    "curation_bpe_train_batched": _bpe_train_batched_sql(),
-    "curation_bpe_encode": _bpe_encode_sql(),
-    "curation_bpe_fertility": _bpe_fertility_sql(),
-    "curation_url_strip": _URL_SQL,
-    "curation_mix_sources": _MIX_SQL,
-    "curation_train_split": _SPLIT_SQL,
-    "curation_remove_repetition": _REMOVE_REP_SQL,
-    "curation_strip_boilerplate": _strip_boiler_sql(),
-    "curation_decontaminate": _DECONTAM_SQL,
+    "curation_dup_ngrams": Query(xdoc_dup_ngrams, _XDOC_SQL),
+    "curation_dup_spans": Query(dup_spans, _DUP_SPANS_SQL),
+    "curation_pack_sequences": Query(pack_sequences, _PACK_SQL),
+    "curation_pii_redact": Query(pii_redact, _PII_SQL),
+    "curation_chunk_windows": Query(chunk_windows, _CHUNK_SQL),
+    "curation_repetition_stats": Query(repetition_stats, _REPETITION_SQL),
+    "curation_gopher_repetition": Query(gopher_repetition, _GOPHER_SQL),
+    "curation_ngram_contamination": Query(ngram_contamination, _CONTAM_SQL),
+    "curation_substr_contamination": Query(
+        substring_contamination, _SUBSTR_SQL
+    ),
+    "curation_bpe_pairs": Query(bpe_pair_counts, _BPE_SQL),
+    "curation_bpe_train": Query(bpe_train, _bpe_train_sql()),
+    "curation_bpe_train_batched": Query(
+        bpe_train_batched, _bpe_train_batched_sql(), impure=True
+    ),
+    "curation_bpe_encode": Query(bpe_encode, _bpe_encode_sql()),
+    "curation_bpe_fertility": Query(bpe_fertility, _bpe_fertility_sql()),
+    "curation_url_strip": Query(url_strip, _URL_SQL),
+    "curation_mix_sources": Query(mix_weighted_sources, _MIX_SQL),
+    "curation_train_split": Query(train_test_split, _SPLIT_SQL),
+    "curation_remove_repetition": Query(remove_repetition, _REMOVE_REP_SQL),
+    "curation_strip_boilerplate": Query(
+        strip_boilerplate, _strip_boiler_sql()
+    ),
+    "curation_decontaminate": Query(decontaminate, _DECONTAM_SQL),
 }

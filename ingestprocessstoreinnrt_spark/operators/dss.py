@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.scalars import davg, dsum, sql_davg, sql_dsum, sql_dsum_expr
 from ..plans.hints import maybe_broadcast
+from ..registry import Query
 
 # ---------------------------------------------------------------------------
 # Q13 — customer order-count distribution (left outer join + double agg)
@@ -921,36 +922,19 @@ LIMIT {CHEAPEST_TOPK}
 
 
 QUERIES = {
-    "bi_cohort_ltv": cohort_ltv,
-    "bi_order_count_dist": order_count_dist,
-    "bi_promo_share": promo_share,
-    "bi_small_qty_revenue": small_qty_revenue,
-    "bi_forecast_revenue": forecast_revenue,
-    "bi_large_orders": large_orders,
-    "bi_nation_profit": nation_profit,
-    "bi_sole_late_supplier": sole_late_supplier,
-    "bi_priority_check": order_priority_check,
-    "bi_nation_volume": nation_volume,
-    "bi_returned_topk": returned_topk,
-    "bi_shipdelay_priority": shipdelay_priority,
-    "bi_disjunctive_revenue": disjunctive_revenue,
-    "bi_dormant_prospects": dormant_prospects,
-    "bi_cheapest_supplier": cheapest_supplier,
-}
-ORACLE = {
-    "bi_cohort_ltv": _COHORT_LTV_SQL,
-    "bi_order_count_dist": _ORDER_COUNT_DIST_SQL,
-    "bi_promo_share": _PROMO_SHARE_SQL,
-    "bi_small_qty_revenue": _SMALL_QTY_SQL,
-    "bi_forecast_revenue": _FORECAST_REVENUE_SQL,
-    "bi_large_orders": _LARGE_ORDERS_SQL,
-    "bi_nation_profit": _NATION_PROFIT_SQL,
-    "bi_sole_late_supplier": _SOLE_LATE_SQL,
-    "bi_priority_check": _PRIORITY_CHECK_SQL,
-    "bi_nation_volume": _NATION_VOLUME_SQL,
-    "bi_returned_topk": _RETURNED_SQL,
-    "bi_shipdelay_priority": _SHIPDELAY_SQL,
-    "bi_disjunctive_revenue": _DISJUNCTIVE_SQL,
-    "bi_dormant_prospects": _PROSPECTS_SQL,
-    "bi_cheapest_supplier": _CHEAPEST_SQL,
+    "bi_cohort_ltv": Query(cohort_ltv, _COHORT_LTV_SQL),
+    "bi_order_count_dist": Query(order_count_dist, _ORDER_COUNT_DIST_SQL),
+    "bi_promo_share": Query(promo_share, _PROMO_SHARE_SQL),
+    "bi_small_qty_revenue": Query(small_qty_revenue, _SMALL_QTY_SQL),
+    "bi_forecast_revenue": Query(forecast_revenue, _FORECAST_REVENUE_SQL),
+    "bi_large_orders": Query(large_orders, _LARGE_ORDERS_SQL),
+    "bi_nation_profit": Query(nation_profit, _NATION_PROFIT_SQL),
+    "bi_sole_late_supplier": Query(sole_late_supplier, _SOLE_LATE_SQL),
+    "bi_priority_check": Query(order_priority_check, _PRIORITY_CHECK_SQL),
+    "bi_nation_volume": Query(nation_volume, _NATION_VOLUME_SQL),
+    "bi_returned_topk": Query(returned_topk, _RETURNED_SQL),
+    "bi_shipdelay_priority": Query(shipdelay_priority, _SHIPDELAY_SQL),
+    "bi_disjunctive_revenue": Query(disjunctive_revenue, _DISJUNCTIVE_SQL),
+    "bi_dormant_prospects": Query(dormant_prospects, _PROSPECTS_SQL),
+    "bi_cheapest_supplier": Query(cheapest_supplier, _CHEAPEST_SQL),
 }

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.scalars import davg, dsum, sql_davg, sql_dsum, sql_dsum_expr
+from ..registry import Query
 
 # status -> column stem; mirrors the payment-type dictionary
 # (NyTaxiYellowTripStreaming.scala:24-29)
@@ -127,5 +128,6 @@ def merge_entities(*parts: DataFrame) -> DataFrame:
     )
 
 
-QUERIES = {"entity_customer_rollup": customer_entity}
-ORACLE = {"entity_customer_rollup": _entity_sql()}
+QUERIES = {
+    "entity_customer_rollup": Query(customer_entity, _entity_sql()),
+}

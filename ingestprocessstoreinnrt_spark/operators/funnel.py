@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..registry import Query
 
 FUNNEL_STAGES = ("view", "click", "purchase")
 
@@ -253,12 +254,7 @@ GROUP BY cw, wk - cw
 
 
 QUERIES = {
-    "funnel_ordered": funnel_counts,
-    "funnel_conversion_latency": conversion_latency,
-    "funnel_retention_cohorts": retention_cohorts,
-}
-ORACLE = {
-    "funnel_ordered": _funnel_sql(),
-    "funnel_conversion_latency": _latency_sql(),
-    "funnel_retention_cohorts": _RETENTION_SQL,
+    "funnel_ordered": Query(funnel_counts, _funnel_sql()),
+    "funnel_conversion_latency": Query(conversion_latency, _latency_sql()),
+    "funnel_retention_cohorts": Query(retention_cohorts, _RETENTION_SQL),
 }

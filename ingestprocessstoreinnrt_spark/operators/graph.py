@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..registry import Query
 
 PR_SCALE = 1_000_000
 PR_D_NUM, PR_D_DEN = 85, 100  # damping 0.85 as an exact integer ratio
@@ -667,18 +668,10 @@ ORDER BY n_nodes DESC, component_id ASC
 
 
 QUERIES = {
-    "graph_pagerank": pagerank_shipments,
-    "graph_components": components,
-    "graph_bfs_landmarks": bfs_landmarks,
-    "graph_kcore_peel": kcore_peel,
-    "graph_bellman_ford": bellman_ford,
-    "graph_harmonic_landmarks": harmonic_landmarks,
-}
-ORACLE = {
-    "graph_pagerank": _pagerank_sql(),
-    "graph_components": _COMPONENTS_SQL,
-    "graph_bfs_landmarks": _bfs_sql(),
-    "graph_kcore_peel": _kcore_sql(),
-    "graph_bellman_ford": _bellman_sql(),
-    "graph_harmonic_landmarks": _harmonic_sql(),
+    "graph_pagerank": Query(pagerank_shipments, _pagerank_sql(), impure=True),
+    "graph_components": Query(components, _COMPONENTS_SQL, impure=True),
+    "graph_bfs_landmarks": Query(bfs_landmarks, _bfs_sql()),
+    "graph_kcore_peel": Query(kcore_peel, _kcore_sql(), impure=True),
+    "graph_bellman_ford": Query(bellman_ford, _bellman_sql()),
+    "graph_harmonic_landmarks": Query(harmonic_landmarks, _harmonic_sql()),
 }

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.scalars import quantize, sql_davg
+from ..registry import Query
 
 _DELTA_MOD = 10  # orders with o_orderkey % 10 == 9 play the delta batch
 
@@ -161,10 +162,6 @@ ORDER BY n_name
 """
 
 QUERIES = {
-    "incremental_customer_agg": incremental_customer_agg,
-    "ivm_join_delta": ivm_join_delta,
-}
-ORACLE = {
-    "incremental_customer_agg": _INCR_SQL,
-    "ivm_join_delta": _IVM_JOIN_SQL,
+    "incremental_customer_agg": Query(incremental_customer_agg, _INCR_SQL),
+    "ivm_join_delta": Query(ivm_join_delta, _IVM_JOIN_SQL),
 }

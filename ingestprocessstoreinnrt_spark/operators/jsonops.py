@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..registry import Query
 
 
 def json_props_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -123,10 +124,6 @@ GROUP BY key
 
 
 QUERIES = {
-    "json_props_rollup": json_props_rollup,
-    "json_key_profile": json_key_profile,
-}
-ORACLE = {
-    "json_props_rollup": _PROPS_SQL,
-    "json_key_profile": _KEYS_SQL,
+    "json_props_rollup": Query(json_props_rollup, _PROPS_SQL),
+    "json_key_profile": Query(json_key_profile, _KEYS_SQL),
 }

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..registry import Query
 
 Z_BITS = 16
 DAY_US = 86_400_000_000
@@ -139,5 +140,6 @@ FROM d
 """
 
 
-QUERIES = {"layout_zorder": zorder_orders}
-ORACLE = {"layout_zorder": _ZORDER_SQL}
+QUERIES = {
+    "layout_zorder": Query(zorder_orders, _ZORDER_SQL),
+}

@@ -30,6 +30,7 @@ from ..catalog import fan_out, load_table
 from ..functions.scalars import quantize
 from ..planmemo import session_memo
 from ..plans.hints import maybe_broadcast
+from ..registry import Query
 from .artifacts import json_artifact
 
 FEATURES = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
@@ -3601,67 +3602,41 @@ ORDER BY event_type
 
 
 QUERIES = {
-    "ml_target_encoding": target_encoding,
-    "ml_logistic_score": logistic_score,
-    "ml_km_survival": km_survival,
-    "ml_calibration_bins": calibration_bins,
-    "ml_log_loss": log_loss_eval,
-    "curation_quality_gate": quality_gate,
-    "ml_welch_ttest": welch_ttest,
-    "ml_chi2_independence": chi2_independence,
-    "ml_decile_lift": decile_lift,
-    "ml_pr_thresholds": pr_at_thresholds,
-    "ml_ols_multi": group_ols_multi,
-    "ml_col_stats": col_stats,
-    "ml_correlation": correlation_pairs,
-    "ml_kmeans": kmeans_lloyd,  # exact Lloyd's, oracle-verified
-    "ml_decision_tree": decision_tree_exact,  # exact CART, oracle-verified
-    "ml_group_ols": group_ols_trend,
-    "ml_regression_metrics": regression_metrics,
-    "ml_zscore_outliers": zscore_outliers,
-    "ml_class_weights": class_weights,
-    "ml_value_histogram": value_histogram,
-    "ml_auc": auc_rank,
-    "ml_covariance_matrix": covariance_matrix,
-    "ml_pca_power": pca_power,
-    "ml_naive_bayes": naive_bayes_confusion,
-    "ml_ridge_regression": ridge_regression,
-    "ml_spearman_corr": spearman_corr,
-    "ml_mutual_information": mutual_information,
-    "ml_brier_decomposition": brier_decomposition,
-    "ml_cramers_v": cramers_v,
-    "ml_mcnemar_gates": mcnemar_gates,
-}
-
-ORACLE = {
-    "ml_target_encoding": _TARGET_ENC_SQL,
-    "ml_logistic_score": _logistic_sql(),
-    "ml_km_survival": _KM_SQL,
-    "ml_calibration_bins": _cal_bins_sql(),
-    "ml_log_loss": _log_loss_sql(),
-    "curation_quality_gate": _quality_gate_sql(),
-    "ml_welch_ttest": _TTEST_SQL,
-    "ml_chi2_independence": _CHI2_SQL,
-    "ml_decile_lift": _lift_sql(),
-    "ml_pr_thresholds": _pr_sql(),
-    "ml_ols_multi": _OLS_MULTI_SQL,
-    "ml_col_stats": _colstats_sql(),
-    "ml_correlation": _corr_sql(),
-    "ml_kmeans": _kmeans_sql(),
-    "ml_decision_tree": _tree_sql(),
-    "ml_group_ols": _OLS_SQL,
-    "ml_regression_metrics": _REG_METRICS_SQL,
-    "ml_zscore_outliers": _ZSCORE_SQL,
-    "ml_class_weights": _CLASSW_SQL,
-    "ml_value_histogram": _HIST_SQL,
-    "ml_auc": _AUC_SQL,
-    "ml_covariance_matrix": _COV_SQL,
-    "ml_pca_power": _pca_sql(),
-    "ml_naive_bayes": _NB_SQL,
-    "ml_ridge_regression": _RIDGE_SQL,
-    "ml_spearman_corr": _SPEARMAN_SQL,
-    "ml_mutual_information": _MI_SQL,
-    "ml_brier_decomposition": _brier_decomp_sql(),
-    "ml_cramers_v": _CRAMERS_SQL,
-    "ml_mcnemar_gates": _mcnemar_sql(),
+    "ml_target_encoding": Query(target_encoding, _TARGET_ENC_SQL),
+    "ml_logistic_score": Query(logistic_score, _logistic_sql()),
+    "ml_km_survival": Query(km_survival, _KM_SQL),
+    "ml_calibration_bins": Query(calibration_bins, _cal_bins_sql()),
+    "ml_log_loss": Query(log_loss_eval, _log_loss_sql()),
+    # the learned quality gate rides this module's cached logistic
+    # features
+    "curation_quality_gate": Query(
+        quality_gate, _quality_gate_sql(), family="ml"
+    ),
+    "ml_welch_ttest": Query(welch_ttest, _TTEST_SQL),
+    "ml_chi2_independence": Query(chi2_independence, _CHI2_SQL),
+    "ml_decile_lift": Query(decile_lift, _lift_sql()),
+    "ml_pr_thresholds": Query(pr_at_thresholds, _pr_sql()),
+    "ml_ols_multi": Query(group_ols_multi, _OLS_MULTI_SQL),
+    "ml_col_stats": Query(col_stats, _colstats_sql()),
+    "ml_correlation": Query(correlation_pairs, _corr_sql()),
+    # exact Lloyd's, oracle-verified; an embeddings-table query, so it
+    # shares the sim family's quantized-vector frames
+    "ml_kmeans": Query(kmeans_lloyd, _kmeans_sql(), impure=True, family="sim"),
+    # exact CART, oracle-verified
+    "ml_decision_tree": Query(decision_tree_exact, _tree_sql(), impure=True),
+    "ml_group_ols": Query(group_ols_trend, _OLS_SQL),
+    "ml_regression_metrics": Query(regression_metrics, _REG_METRICS_SQL),
+    "ml_zscore_outliers": Query(zscore_outliers, _ZSCORE_SQL),
+    "ml_class_weights": Query(class_weights, _CLASSW_SQL),
+    "ml_value_histogram": Query(value_histogram, _HIST_SQL),
+    "ml_auc": Query(auc_rank, _AUC_SQL),
+    "ml_covariance_matrix": Query(covariance_matrix, _COV_SQL),
+    "ml_pca_power": Query(pca_power, _pca_sql(), impure=True),
+    "ml_naive_bayes": Query(naive_bayes_confusion, _NB_SQL),
+    "ml_ridge_regression": Query(ridge_regression, _RIDGE_SQL),
+    "ml_spearman_corr": Query(spearman_corr, _SPEARMAN_SQL),
+    "ml_mutual_information": Query(mutual_information, _MI_SQL),
+    "ml_brier_decomposition": Query(brier_decomposition, _brier_decomp_sql()),
+    "ml_cramers_v": Query(cramers_v, _CRAMERS_SQL),
+    "ml_mcnemar_gates": Query(mcnemar_gates, _mcnemar_sql()),
 }

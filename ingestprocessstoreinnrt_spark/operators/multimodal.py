@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import load_table
+from ..registry import Query
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -601,16 +602,13 @@ ORDER BY media_type
 
 
 QUERIES = {
-    "multimodal_decode": multimodal_decode,
-    "multimodal_content_dedup": multimodal_content_dedup,
-    "multimodal_format_rollup": multimodal_format_rollup,
-    "multimodal_frame_sample": multimodal_frame_sample,
-    "multimodal_resize_plan": multimodal_resize_plan,
-}
-ORACLE = {
-    "multimodal_decode": _DECODE_SQL,
-    "multimodal_content_dedup": _CONTENT_DEDUP_SQL,
-    "multimodal_format_rollup": _FORMAT_ROLLUP_SQL,
-    "multimodal_frame_sample": _FRAME_SQL,
-    "multimodal_resize_plan": _RESIZE_SQL,
+    "multimodal_decode": Query(multimodal_decode, _DECODE_SQL),
+    "multimodal_content_dedup": Query(
+        multimodal_content_dedup, _CONTENT_DEDUP_SQL
+    ),
+    "multimodal_format_rollup": Query(
+        multimodal_format_rollup, _FORMAT_ROLLUP_SQL
+    ),
+    "multimodal_frame_sample": Query(multimodal_frame_sample, _FRAME_SQL),
+    "multimodal_resize_plan": Query(multimodal_resize_plan, _RESIZE_SQL),
 }

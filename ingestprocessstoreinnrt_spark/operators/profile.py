@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.scalars import clamp, davg, sql_davg, sql_davg_expr
+from ..registry import Query
 
 # maintenance-period defaults + clamp bounds
 # (ConnectedCarProfile.scala:21-23,126-131 analog)
@@ -123,5 +124,6 @@ FROM (
 ) scored
 """
 
-QUERIES = {"profile_user_rollup": user_profile}
-ORACLE = {"profile_user_rollup": _PROFILE_SQL_OUTER}
+QUERIES = {
+    "profile_user_rollup": Query(user_profile, _PROFILE_SQL_OUTER),
+}

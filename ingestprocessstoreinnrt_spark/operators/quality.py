@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..registry import Query
 
 _ESCALE = 1_000_000_000.0  # entropy terms quantized to 1e-9
 
@@ -1058,30 +1059,16 @@ ORDER BY event_type
 
 
 QUERIES = {
-    "quality_constraint_audit": constraint_audit,
-    "quality_ts_order_audit": ts_order_audit,
-    "quality_psi_drift": psi_drift,
-    "quality_iqr_outliers": iqr_outliers,
-    "quality_k_anonymity": k_anonymity_audit,
-    "quality_l_diversity": l_diversity_audit,
-    "quality_column_profile": column_profile,
-    "quality_benford": benford_digits,
-    "quality_key_skew": key_skew_profile,
-    "quality_referential_audit": referential_audit,
-    "quality_mad_outliers": mad_outliers,
-    "quality_schema_drift": schema_drift,
-}
-ORACLE = {
-    "quality_constraint_audit": _CONSTRAINT_SQL,
-    "quality_ts_order_audit": _ORDER_AUDIT_SQL,
-    "quality_psi_drift": _PSI_SQL,
-    "quality_iqr_outliers": _IQR_SQL,
-    "quality_k_anonymity": _KANON_SQL,
-    "quality_l_diversity": _LDIV_SQL,
-    "quality_column_profile": _profile_sql(),
-    "quality_benford": _BENFORD_SQL,
-    "quality_key_skew": _KEY_SKEW_SQL,
-    "quality_referential_audit": _audit_sql(),
-    "quality_mad_outliers": _MAD_SQL,
-    "quality_schema_drift": _DRIFT_SQL,
+    "quality_constraint_audit": Query(constraint_audit, _CONSTRAINT_SQL),
+    "quality_ts_order_audit": Query(ts_order_audit, _ORDER_AUDIT_SQL),
+    "quality_psi_drift": Query(psi_drift, _PSI_SQL),
+    "quality_iqr_outliers": Query(iqr_outliers, _IQR_SQL),
+    "quality_k_anonymity": Query(k_anonymity_audit, _KANON_SQL),
+    "quality_l_diversity": Query(l_diversity_audit, _LDIV_SQL),
+    "quality_column_profile": Query(column_profile, _profile_sql()),
+    "quality_benford": Query(benford_digits, _BENFORD_SQL),
+    "quality_key_skew": Query(key_skew_profile, _KEY_SKEW_SQL),
+    "quality_referential_audit": Query(referential_audit, _audit_sql()),
+    "quality_mad_outliers": Query(mad_outliers, _MAD_SQL),
+    "quality_schema_drift": Query(schema_drift, _DRIFT_SQL),
 }

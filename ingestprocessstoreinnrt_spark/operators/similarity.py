@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import fan_out, load_table
 from ..functions.vectors import dot, norm2
+from ..registry import Query
 
 TOP_K = 10
 N_QUERIES = 8  # vec_id < 8 are the demo query vectors
@@ -1968,43 +1969,29 @@ LIMIT {RRF_TOP}
 
 
 QUERIES = {
-    "sim_topk_cosine": ann_topk_cosine,
-    "sim_ann_lsh": ann_lsh_topk,
-    "sim_ann_ivf": ann_ivf_topk,
-    "sim_ann_ivf_multiprobe": ann_ivf_multiprobe,
-    "emb_quantize_int8": emb_quantize_int8,
-    "ml_knn_eval": knn_label_eval,
-    "sim_hybrid_rrf": hybrid_rrf,
-    "sim_pq_quantize": pq_quantize,
-    "sim_pq_search": pq_search,
-    "sim_ann_incremental": ann_incremental,
-    "sim_recall_eval": ann_recall_eval,
-    "sim_ivfpq_search": ivfpq_search,
-    "sim_ivfpq_recall": ivfpq_recall_eval,
-    "sim_ann_lsh_incremental": ann_lsh_incremental,
-    "sim_ivfpq_residual": ivfpq_residual_encode,
-    "sim_ivfpq_residual_search": ivfpq_residual_search,
-    "sim_sq8_search": sq8_search,
-}
-
-ORACLE = {
-    "sim_topk_cosine": _TOPK_SQL,
-    "sim_ann_lsh": _ann_lsh_sql(),
-    "sim_ann_ivf": _ann_ivf_sql(),
-    "sim_ann_ivf_multiprobe": _ann_ivf_sql(IVF_NPROBE_MULTI),
-    "emb_quantize_int8": _quant_sql(),
-    "ml_knn_eval": _KNN_SQL,
-    "sim_hybrid_rrf": _hybrid_rrf_sql(),
-    "sim_pq_quantize": _pq_sql(),
-    "sim_pq_search": _pq_search_sql(),
-    "sim_ann_incremental": _ann_incremental_sql(),
-    "sim_recall_eval": _ann_recall_sql(),
-    "sim_ivfpq_search": _ivfpq_sql(),
-    "sim_ivfpq_recall": _ivfpq_recall_sql(),
+    "sim_topk_cosine": Query(ann_topk_cosine, _TOPK_SQL),
+    "sim_ann_lsh": Query(ann_lsh_topk, _ann_lsh_sql()),
+    "sim_ann_ivf": Query(ann_ivf_topk, _ann_ivf_sql()),
+    "sim_ann_ivf_multiprobe": Query(
+        ann_ivf_multiprobe, _ann_ivf_sql(IVF_NPROBE_MULTI)
+    ),
+    # embeddings-table queries share the sim family's quantized-vector
+    # frames
+    "emb_quantize_int8": Query(emb_quantize_int8, _quant_sql(), family="sim"),
+    "ml_knn_eval": Query(knn_label_eval, _KNN_SQL, family="sim"),
+    "sim_hybrid_rrf": Query(hybrid_rrf, _hybrid_rrf_sql()),
+    "sim_pq_quantize": Query(pq_quantize, _pq_sql()),
+    "sim_pq_search": Query(pq_search, _pq_search_sql()),
+    "sim_ann_incremental": Query(ann_incremental, _ann_incremental_sql()),
+    "sim_recall_eval": Query(ann_recall_eval, _ann_recall_sql()),
+    "sim_ivfpq_search": Query(ivfpq_search, _ivfpq_sql()),
+    "sim_ivfpq_recall": Query(ivfpq_recall_eval, _ivfpq_recall_sql()),
     # row-local signature => maintained index == rebuilt index: the
     # incremental serve twins against the SAME bucket-index SQL
-    "sim_ann_lsh_incremental": _ann_lsh_sql(),
-    "sim_ivfpq_residual": _ivfpq_residual_sql(),
-    "sim_ivfpq_residual_search": _ivfpq_residual_search_sql(),
-    "sim_sq8_search": _sq8_sql(),
+    "sim_ann_lsh_incremental": Query(ann_lsh_incremental, _ann_lsh_sql()),
+    "sim_ivfpq_residual": Query(ivfpq_residual_encode, _ivfpq_residual_sql()),
+    "sim_ivfpq_residual_search": Query(
+        ivfpq_residual_search, _ivfpq_residual_search_sql()
+    ),
+    "sim_sq8_search": Query(sq8_search, _sq8_sql()),
 }

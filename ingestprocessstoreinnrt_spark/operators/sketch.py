@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.scalars import SQL_STABLE_HASH64, stable_hash64
+from ..registry import Query
 
 KMV_K = 256
 _HASH_SPACE = float(1 << 60)  # stable_hash64 is uniform on [0, 2^60)
@@ -776,20 +777,11 @@ FROM th, dc, ex
 
 
 QUERIES = {
-    "sketch_kmv_difference": kmv_set_difference,
-    "sketch_kmv_merge": kmv_union_merge,
-    "sketch_kmv_distinct": kmv_distinct_customers,
-    "sketch_kmv_by_group": kmv_distinct_by_group,
-    "sketch_sample_quantiles": sample_quantiles,
-    "sketch_hll_distinct": hll_distinct,
-    "sketch_hll_intersection": hll_intersection,
-}
-ORACLE = {
-    "sketch_kmv_difference": _KMV_DIFF_SQL,
-    "sketch_kmv_merge": _KMV_MERGE_SQL,
-    "sketch_kmv_distinct": _KMV_SQL,
-    "sketch_kmv_by_group": _KMV_GROUP_SQL,
-    "sketch_sample_quantiles": _SQ_SQL,
-    "sketch_hll_distinct": _HLL_SQL,
-    "sketch_hll_intersection": _hll_ix_sql(),
+    "sketch_kmv_difference": Query(kmv_set_difference, _KMV_DIFF_SQL),
+    "sketch_kmv_merge": Query(kmv_union_merge, _KMV_MERGE_SQL),
+    "sketch_kmv_distinct": Query(kmv_distinct_customers, _KMV_SQL),
+    "sketch_kmv_by_group": Query(kmv_distinct_by_group, _KMV_GROUP_SQL),
+    "sketch_sample_quantiles": Query(sample_quantiles, _SQ_SQL),
+    "sketch_hll_distinct": Query(hll_distinct, _HLL_SQL),
+    "sketch_hll_intersection": Query(hll_intersection, _hll_ix_sql()),
 }

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.scalars import quantize, sql_dsum
+from ..registry import Query
 
 N_SALTS = 8
 
@@ -75,5 +76,6 @@ def salt_join_keys(
     return big_s, small_s, [F.col(key), F.col("_salt")]
 
 
-QUERIES = {"scale_salted_rollup": salted_rollup}
-ORACLE = {"scale_salted_rollup": _SALTED_SQL}
+QUERIES = {
+    "scale_salted_rollup": Query(salted_rollup, _SALTED_SQL),
+}

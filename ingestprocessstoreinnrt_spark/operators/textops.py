@@ -24,6 +24,7 @@ from ..functions.text import (
     token_count,
     tokens,
 )
+from ..registry import Query
 
 # ---------------------------------------------------------------------------
 # quality / counting statistics
@@ -2196,59 +2197,38 @@ LIMIT {BURST_TOPK}
 
 
 QUERIES = {
-    "text_readability": text_readability,
-    "text_winnowing": text_winnowing,
-    "text_vocab_growth": vocab_growth,
-    "curation_token_budget": token_budget_fill,
-    "text_langid_confusion": langid_confusion,
-    "curation_gate_funnel": curation_gate_funnel,
-    "text_ngram_novelty": ngram_novelty,
-    "text_stats": text_stats,
-    "text_zipf_slope": zipf_slope,
-    "text_pmi_collocations": pmi_collocations,
-    "text_hash_features": hash_features,
-    "text_rake_keywords": rake_keywords,
-    "text_unigram_entropy": unigram_entropy,
-    "text_langid": text_langid,
-    "text_fingerprint": text_fingerprint,
-    "text_bm25": text_bm25,
-    "text_tfidf_topterms": text_tfidf_topterms,
-    "pipeline_curated_corpus": curated_corpus,
-    "sample_stratified": sample_balanced_corpus,
-    "sample_weighted": weighted_sample,
-    "text_bigram_lm": bigram_lm,
-    "text_bigram_surprisal": bigram_surprisal,
-    "text_keyness_llr": keyness_llr,
-    "text_source_vocab_overlap": source_vocab_overlap,
-    "text_term_burstiness": term_burstiness,
-    "text_js_divergence": js_divergence,
-}
-
-ORACLE = {
-    "text_readability": _READABILITY_SQL,
-    "text_winnowing": _winnowing_sql(),
-    "text_vocab_growth": _VOCAB_SQL,
-    "curation_token_budget": _budget_sql(),
-    "text_langid_confusion": _langid_confusion_sql(),
-    "curation_gate_funnel": _gate_funnel_sql(),
-    "text_ngram_novelty": _NOVELTY_SQL,
-    "text_stats": _STATS_SQL,
-    "text_zipf_slope": _ZIPF_SQL,
-    "text_pmi_collocations": _PMI_SQL,
-    "text_hash_features": _HASH_FEATURES_SQL,
-    "text_rake_keywords": _rake_sql(),
-    "text_unigram_entropy": _ENTROPY_SQL,
-    "text_langid": _langid_sql(),
-    "text_fingerprint": _FP_SQL,
-    "text_bm25": _bm25_sql(),
-    "text_tfidf_topterms": _TFIDF_SQL,
-    "pipeline_curated_corpus": _curated_sql(),
-    "sample_stratified": _sample_sql(),
-    "sample_weighted": _weighted_sql(),
-    "text_bigram_lm": _BIGRAM_SQL,
-    "text_bigram_surprisal": _SURPRISAL_SQL,
-    "text_keyness_llr": _KEYNESS_SQL,
-    "text_source_vocab_overlap": _VOCAB_OVERLAP_SQL,
-    "text_term_burstiness": _BURST_SQL,
-    "text_js_divergence": _JS_SQL,
+    "text_readability": Query(text_readability, _READABILITY_SQL),
+    "text_winnowing": Query(text_winnowing, _winnowing_sql()),
+    "text_vocab_growth": Query(vocab_growth, _VOCAB_SQL),
+    "curation_token_budget": Query(token_budget_fill, _budget_sql()),
+    "text_langid_confusion": Query(langid_confusion, _langid_confusion_sql()),
+    "curation_gate_funnel": Query(curation_gate_funnel, _gate_funnel_sql()),
+    "text_ngram_novelty": Query(ngram_novelty, _NOVELTY_SQL),
+    "text_stats": Query(text_stats, _STATS_SQL),
+    "text_zipf_slope": Query(zipf_slope, _ZIPF_SQL),
+    "text_pmi_collocations": Query(pmi_collocations, _PMI_SQL),
+    "text_hash_features": Query(hash_features, _HASH_FEATURES_SQL),
+    "text_rake_keywords": Query(rake_keywords, _rake_sql()),
+    "text_unigram_entropy": Query(unigram_entropy, _ENTROPY_SQL),
+    "text_langid": Query(text_langid, _langid_sql()),
+    "text_fingerprint": Query(text_fingerprint, _FP_SQL),
+    "text_bm25": Query(text_bm25, _bm25_sql()),
+    "text_tfidf_topterms": Query(text_tfidf_topterms, _TFIDF_SQL),
+    # the curation family rides this module's cached token stats
+    "pipeline_curated_corpus": Query(
+        curated_corpus, _curated_sql(), family="curation"
+    ),
+    # the samplers share the text family's token frame
+    "sample_stratified": Query(
+        sample_balanced_corpus, _sample_sql(), family="text"
+    ),
+    "sample_weighted": Query(weighted_sample, _weighted_sql(), family="text"),
+    "text_bigram_lm": Query(bigram_lm, _BIGRAM_SQL),
+    "text_bigram_surprisal": Query(bigram_surprisal, _SURPRISAL_SQL),
+    "text_keyness_llr": Query(keyness_llr, _KEYNESS_SQL),
+    "text_source_vocab_overlap": Query(
+        source_vocab_overlap, _VOCAB_OVERLAP_SQL
+    ),
+    "text_term_burstiness": Query(term_burstiness, _BURST_SQL),
+    "text_js_divergence": Query(js_divergence, _JS_SQL),
 }

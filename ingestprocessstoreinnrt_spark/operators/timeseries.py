@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.scalars import davg, dsum, sql_davg, sql_dsum
+from ..registry import Query
 
 HOUR_US = 3_600_000_000
 # Deterministic user gate keeps the dense grid bounded.  32 users keeps
@@ -1714,40 +1715,21 @@ ORDER BY event_type, hour_us
 
 
 QUERIES = {
-    "ts_stl_decompose": stl_decompose,
-    "ts_rolling_corr": rolling_corr,
-    "ts_cusum_changepoint": cusum_changepoint,
-    "ts_hourly_autocorr": hourly_autocorr,
-    "ts_ohlc_bars": ohlc_bars,
-    "ts_seasonal_anomaly": seasonal_anomaly,
-    "ts_resample_ffill": resample_ffill,
-    "ml_quantile_bins": quantile_bins,
-    "ts_interpolate_linear": resample_interpolate,
-    "ts_ewma": ewma_smooth,
-    "ts_lttb_downsample": lttb_downsample,
-    "ts_peaks": ts_peaks,
-    "ts_periodogram": periodogram,
-    "ts_mann_kendall": mann_kendall,
-    "ts_theil_sen": theil_sen,
-    "ts_sma_crossover": sma_crossover,
-    "ts_bollinger_breakouts": bollinger_breakouts,
-}
-ORACLE = {
-    "ts_stl_decompose": _STL_SQL,
-    "ts_rolling_corr": _ROLLING_CORR_SQL,
-    "ts_cusum_changepoint": _CUSUM_SQL,
-    "ts_hourly_autocorr": _AUTOCORR_SQL,
-    "ts_ohlc_bars": _OHLC_SQL,
-    "ts_seasonal_anomaly": _SEASONAL_SQL,
-    "ts_resample_ffill": _RESAMPLE_SQL,
-    "ml_quantile_bins": _bins_sql(),
-    "ts_interpolate_linear": _INTERP_SQL,
-    "ts_ewma": _EWMA_SQL,
-    "ts_lttb_downsample": _LTTB_SQL,
-    "ts_peaks": _peaks_sql(),
-    "ts_periodogram": _PERIODOGRAM_SQL,
-    "ts_mann_kendall": _MK_SQL,
-    "ts_theil_sen": _THEIL_SEN_SQL,
-    "ts_sma_crossover": _SMA_CROSS_SQL,
-    "ts_bollinger_breakouts": _BOLL_SQL,
+    "ts_stl_decompose": Query(stl_decompose, _STL_SQL),
+    "ts_rolling_corr": Query(rolling_corr, _ROLLING_CORR_SQL),
+    "ts_cusum_changepoint": Query(cusum_changepoint, _CUSUM_SQL),
+    "ts_hourly_autocorr": Query(hourly_autocorr, _AUTOCORR_SQL),
+    "ts_ohlc_bars": Query(ohlc_bars, _OHLC_SQL),
+    "ts_seasonal_anomaly": Query(seasonal_anomaly, _SEASONAL_SQL),
+    "ts_resample_ffill": Query(resample_ffill, _RESAMPLE_SQL),
+    "ml_quantile_bins": Query(quantile_bins, _bins_sql()),
+    "ts_interpolate_linear": Query(resample_interpolate, _INTERP_SQL),
+    "ts_ewma": Query(ewma_smooth, _EWMA_SQL),
+    "ts_lttb_downsample": Query(lttb_downsample, _LTTB_SQL),
+    "ts_peaks": Query(ts_peaks, _peaks_sql()),
+    "ts_periodogram": Query(periodogram, _PERIODOGRAM_SQL),
+    "ts_mann_kendall": Query(mann_kendall, _MK_SQL),
+    "ts_theil_sen": Query(theil_sen, _THEIL_SEN_SQL),
+    "ts_sma_crossover": Query(sma_crossover, _SMA_CROSS_SQL),
+    "ts_bollinger_breakouts": Query(bollinger_breakouts, _BOLL_SQL),
 }

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.scalars import davg, dsum, sql_davg, sql_dsum
+from ..registry import Query
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min
 
@@ -699,31 +700,16 @@ FROM daily ORDER BY day_us
 
 
 QUERIES = {
-    "win_event_transitions": event_transitions,
-    "win_gap_distribution": gap_distribution,
-    "win_running_totals": running_totals,
-    "win_user_sessions": user_sessions,
-    "win_session_rollup": session_window_rollup,
-    "win_tumbling_hourly": tumbling_hourly,
-    "win_hopping_quarter": hopping_quarter,
-    "win_user_event_ranks": user_event_ranks,
-    "win_rolling_24h": rolling_24h,
-    "win_active_users": rolling_active_users,
-    "win_activity_streaks": activity_streaks,
-    "win_reach_curve": reach_curve,
-}
-
-ORACLE = {
-    "win_event_transitions": _TRANSITIONS_SQL,
-    "win_gap_distribution": _GAPS_SQL,
-    "win_running_totals": _RUNNING_SQL,
-    "win_user_sessions": _SESSIONS_SQL,
-    "win_session_rollup": _SESSION_WINDOW_SQL,
-    "win_tumbling_hourly": _TUMBLING_SQL,
-    "win_hopping_quarter": _HOPPING_SQL,
-    "win_user_event_ranks": _RANKS_SQL,
-    "win_rolling_24h": _ROLLING_SQL,
-    "win_active_users": _ACTIVE_SQL,
-    "win_activity_streaks": _STREAKS_SQL,
-    "win_reach_curve": _REACH_SQL,
+    "win_event_transitions": Query(event_transitions, _TRANSITIONS_SQL),
+    "win_gap_distribution": Query(gap_distribution, _GAPS_SQL),
+    "win_running_totals": Query(running_totals, _RUNNING_SQL),
+    "win_user_sessions": Query(user_sessions, _SESSIONS_SQL),
+    "win_session_rollup": Query(session_window_rollup, _SESSION_WINDOW_SQL),
+    "win_tumbling_hourly": Query(tumbling_hourly, _TUMBLING_SQL),
+    "win_hopping_quarter": Query(hopping_quarter, _HOPPING_SQL),
+    "win_user_event_ranks": Query(user_event_ranks, _RANKS_SQL),
+    "win_rolling_24h": Query(rolling_24h, _ROLLING_SQL),
+    "win_active_users": Query(rolling_active_users, _ACTIVE_SQL),
+    "win_activity_streaks": Query(activity_streaks, _STREAKS_SQL),
+    "win_reach_curve": Query(reach_curve, _REACH_SQL),
 }

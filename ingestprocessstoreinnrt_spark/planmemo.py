@@ -38,10 +38,11 @@ at sf0.1 (r13 profile; ~44 s per 240-query sweep pass) that recompute
 NOTHING; handing the second invocation the same lazy frame removes
 that cost.  It never shades into result caching: only queries whose
 repeat construction triggers ZERO Spark jobs are memoized — the ones
-that run fits, collects or localCheckpoint rounds while building are
-in PLAN_IMPURE and always rebuild, so their warm reps keep measuring
-the recompute (tests/test_planmemo.py pins this) — and every action
-still executes the full lazy plan.
+that run fits, collects, localCheckpoint rounds or artifact reads
+while building are declared ``impure=True`` on their registry entry
+and always rebuild, so their warm reps keep measuring the recompute
+(tests/test_planmemo.py pins both directions) — and every action still
+executes the full lazy plan.
 """
 
 from __future__ import annotations
@@ -53,44 +54,6 @@ from typing import TypeVar
 from pyspark.sql import SparkSession
 
 T = TypeVar("T")
-
-# Queries whose construction RUNS Spark jobs (fits, collects,
-# localCheckpoint iterations, artifact reads) — never memoized: their
-# construction cost is real computation the warm rep must re-measure.
-# Derived by the r13 classifier (setJobGroup around a repeat
-# construction; zero job ids => pure) and pinned by
-# tests/test_planmemo.py.
-PLAN_IMPURE = frozenset(
-    {
-        # r14: construction opens the persisted basket pair artifact
-        # (a parquet read) when the session's basket pair memo is cold —
-        # the same treatment as the dedup artifact openers below
-        "bi_basket_lift",
-        "graph_degree_stats",
-        "curation_bpe_train_batched",
-        "dedup_best_match",
-        "dedup_clusters",
-        "dedup_incremental",
-        "dedup_jaccard_full",
-        "dedup_keep_longest",
-        "dedup_keep_longest_lsh",
-        "graph_assortativity",
-        "graph_clustering_coeff",
-        "graph_components",
-        "graph_jaccard_neighbors",
-        "graph_kcore_peel",
-        "graph_pagerank",
-        "graph_pref_attachment",
-        "graph_resource_allocation",
-        "graph_rich_club",
-        "graph_triangles",
-        "join_bloom_semijoin",
-        "ml_decision_tree",
-        "ml_kmeans",
-        "ml_pca_power",
-        "pipeline_dedup_corpus",
-    }
-)
 
 # (applicationId, session UUID) -> memo name -> entries; holds at most
 # one session's memos
@@ -163,10 +126,10 @@ def _wrap(name: str, fn):
     return wrapped
 
 
-def memoize_pure(qdict: dict) -> dict:
-    """Wrap every pure-plan query in the registry dict; PLAN_IMPURE
-    entries pass through untouched."""
+def memoize_pure(registry: dict) -> dict:
+    """Each registry entry's builder by name, wrapped in the plan memo
+    unless the entry is declared impure."""
     return {
-        name: (fn if name in PLAN_IMPURE else _wrap(name, fn))
-        for name, fn in qdict.items()
+        name: (q.build if q.impure else _wrap(name, q.build))
+        for name, q in registry.items()
     }

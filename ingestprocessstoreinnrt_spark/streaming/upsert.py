@@ -6,10 +6,10 @@ row, NyTaxiYellowTripStreaming.scala:223-229).
 
 Design for 100 TB:
   * rows live under hash-bucket partitions (`_bucket=NN/`); an upsert
-    rewrites ONLY the buckets its keys touch (per-write dynamic
-    partition overwrite), so cost scales with the update's key spread,
-    not table size.  Bucket count is the knob — same role as Kudu's
-    hash buckets.
+    rewrites ONLY the buckets its keys touch (staged, then swapped in
+    by renames — see below), so cost scales with the update's key
+    spread, not table size.  Bucket count is the knob — same role as
+    Kudu's hash buckets.
   * point lookups filter on the derivable `_bucket` value, so Catalyst
     partition-prunes to one directory.
   * exactly-once under micro-batch replay: `apply_batch` is guarded by

@@ -1,5 +1,5 @@
 """Market-basket + triangle invariants; exact values are the DuckDB
-oracle's job (operators/basket.py ORACLE)."""
+oracle's job (the QUERIES oracles in operators/basket.py)."""
 
 from __future__ import annotations
 

@@ -1,6 +1,6 @@
 """Change-tracking operators: SCD2 invariants, snapshot-diff key
 partition, count-min overestimate property.  Cross-engine value
-equality is the driver oracle's job (operators/cdc.py ORACLE); these
+equality is the driver oracle's job (operators/cdc.py QUERIES); these
 check the semantic contracts directly."""
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Corpus-curation operators: semantic contracts (the cross-engine
-value equality is the driver oracle's job — operators/curation.py
-ORACLE)."""
+value equality is the driver oracle's job — the QUERIES oracles in
+operators/curation.py)."""
 
 from __future__ import annotations
 

@@ -1,7 +1,8 @@
-"""Driver-contract meta-guards: every registered query must carry an
-oracle and build a deterministic schema — catches a future operator
-added to QUERIES but not ORACLE (the driver would record a weaker
-rows-only check silently)."""
+"""Driver-contract meta-guards: every registered query carries a
+non-empty oracle and builds a deterministic schema.  A query without
+an oracle would get a weaker rows-only check from the driver; each
+registry entry now declares builder and oracle together, and these
+assertions keep the derived contract dicts in step."""
 
 from __future__ import annotations
 

@@ -1,5 +1,5 @@
 """PageRank invariants on smoke data; exact values are the DuckDB
-oracle's job (operators/graph.py ORACLE)."""
+oracle's job (the QUERIES oracles in operators/graph.py)."""
 
 from __future__ import annotations
 

@@ -1,5 +1,5 @@
 """Semi-structured JSON operator invariants; exact values are the
-DuckDB oracle's job (operators/jsonops.py ORACLE)."""
+DuckDB oracle's job (the QUERIES oracles in operators/jsonops.py)."""
 
 from __future__ import annotations
 

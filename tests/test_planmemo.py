@@ -1,10 +1,12 @@
 """Pin the plan-memo invariants (ingestprocessstoreinnrt_spark.planmemo).
 
-1. Every memoized (non-PLAN_IMPURE) query is a PURE plan builder:
-   repeat construction triggers zero Spark jobs.  A query that starts
-   running fits/collects during construction must move to PLAN_IMPURE,
-   or its warm bench reps would silently stop re-measuring the
-   recompute.
+1. Every memoized query (registry entry with ``impure`` false) is a
+   PURE plan builder: repeat construction triggers zero Spark jobs.  A
+   query that starts running fits/collects during construction must be
+   declared ``impure=True``, or its warm bench reps would silently stop
+   re-measuring the recompute.  Conversely every ``impure=True`` query
+   runs at least one job when rebuilt after ``clear()``; one that has
+   become pure would lose its memo for nothing.
 2. The memo hands repeat invocations the SAME frame object, and a
    memoized frame still computes (lazy plan only — no result capture).
 3. clear() forgets every session memo, so a family-cold rebuild
@@ -41,7 +43,7 @@ def spark():
 def test_memoized_queries_are_pure_plan_builders(spark):
     import __spark_entry__ as e
 
-    qs = e.queries()
+    qs, reg = e.queries(), e.registry()
     sc = spark.sparkContext
     # first pass builds everything (fit memos populate, artifact reads
     # run) — job activity here is expected and uncounted
@@ -49,7 +51,7 @@ def test_memoized_queries_are_pure_plan_builders(spark):
         fn(spark, SF)
     impure_hits = []
     for name, fn in qs.items():
-        if name in planmemo.PLAN_IMPURE:
+        if reg[name].impure:
             continue
         # repeat construction must be a memo hit: same object, no jobs
         sc.setJobGroup(f"pm-{name}", name)
@@ -67,8 +69,8 @@ def test_memoized_queries_are_pure_plan_builders(spark):
         if sc.statusTracker().getJobIdsForGroup(f"pm-{name}"):
             impure_hits.append(name)
     assert not impure_hits, (
-        "queries ran Spark jobs during memoized construction — move "
-        f"them to PLAN_IMPURE: {impure_hits}"
+        "queries ran Spark jobs during memoized construction — declare "
+        f"them impure=True: {impure_hits}"
     )
 
 
@@ -76,8 +78,32 @@ def test_impure_queries_are_not_memoized(spark):
     import __spark_entry__ as e
 
     qs = e.queries()
-    for name in sorted(planmemo.PLAN_IMPURE):
-        assert not getattr(qs[name], "__wrapped__", None), name
+    for name, q in e.registry().items():
+        if q.impure:
+            assert not getattr(qs[name], "__wrapped__", None), name
+
+
+def test_impure_queries_run_jobs_when_rebuilt(spark):
+    import __spark_entry__ as e
+
+    qs = e.queries()
+    impure = sorted(n for n, q in e.registry().items() if q.impure)
+    assert impure
+    sc = spark.sparkContext
+    pure_now = []
+    for name in impure:
+        # a cold rebuild: with warm fit memos some builders (the basket
+        # pair-artifact openers) skip their jobs
+        planmemo.clear()
+        sc.setJobGroup(f"imp-{name}", name)
+        qs[name](spark, SF)
+        sc.setJobGroup(None, None)
+        if not sc.statusTracker().getJobIdsForGroup(f"imp-{name}"):
+            pure_now.append(name)
+    assert not pure_now, (
+        "impure=True queries ran no Spark job when rebuilt after clear() "
+        f"— drop the flag so the plan memo serves them: {pure_now}"
+    )
 
 
 def test_memoized_frame_still_computes_and_clear_forgets(spark):
@@ -86,7 +112,7 @@ def test_memoized_frame_still_computes_and_clear_forgets(spark):
     from ingestprocessstoreinnrt_spark.operators import basket, curation, dedup
 
     qs = e.queries()
-    name = next(n for n in qs if n not in planmemo.PLAN_IMPURE)
+    name = next(n for n, q in e.registry().items() if not q.impure)
     df1 = qs[name](spark, SF)
     n1 = df1.count()
     assert n1 == qs[name](spark, SF).count()
