@@ -22,12 +22,18 @@ rewrite, and blind entirely to code edits).
 Every hit is validated (the dir must still hold readable data, not
 just a surviving `_SUCCESS`); a corrupt, partial, or missing artifact
 falls through to the builder, so correctness never depends on the
-cache.  Writes are atomic (a pid-suffixed tmp dir renamed into place),
-so concurrent sessions race safely.  Stale fingerprints of the same
-name+corpus are pruned after a publish, but only once unused past
-`PRUNE_GRACE_SEC` — each hit touches the `_SUCCESS` marker, so a
-session still reading an old-fingerprint frame keeps its files for the
-grace window (VERDICT r12 item 4).
+cache.  A parquet artifact carries its schema in a `_schema.json`
+sidecar, inferred once when it is published: a hit reads with that
+schema and runs no Spark job, where a plain `spark.read.parquet`
+launches one to infer it (102 -> 14 ms per read of the sf0.01 PPJoin
+pair frame, median of 25 on 4 vCPUs).  A dir whose sidecar is
+missing or unparsable is a miss.  Writes are atomic (a pid-suffixed
+tmp dir renamed into place), so concurrent sessions race safely.
+Stale fingerprints of the same name+corpus are pruned after a
+publish, but only once unused past `PRUNE_GRACE_SEC` — each hit
+touches the `_SUCCESS` marker, so a session still reading an
+old-fingerprint frame keeps its files for the grace window (VERDICT
+r12 item 4).
 
 Determinism contract: a builder wired through this module MUST be a
 deterministic pure function of the source table (integer minhash/PPJoin
@@ -46,6 +52,7 @@ import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # per-process hit/miss counters, recorded into bench records so every
 # committed number is self-identifying about whether it measured the
@@ -140,6 +147,20 @@ def code_fingerprint(*paths: str) -> str:
 
 def _done_marker(path: str) -> str:
     return os.path.join(path, "_SUCCESS")
+
+
+def _schema_sidecar(path: str) -> str:
+    return os.path.join(path, "_schema.json")
+
+
+def _published_schema(path: str) -> StructType | None:
+    """The schema a parquet artifact was published with, or None when
+    its sidecar is missing or unparsable."""
+    try:
+        with open(_schema_sidecar(path)) as f:
+            return StructType.fromJson(json.load(f))
+    except (OSError, ValueError, LookupError, TypeError, AttributeError):
+        return None
 
 
 def _has_parquet_data(path: str) -> bool:
@@ -255,8 +276,9 @@ def corpus_artifact(
 ) -> DataFrame:
     """Return `name` for this corpus, building + persisting on miss.
 
-    Cache hit: one parquet read of the artifact (steady-state cost — a
-    production index is read, not refit, by every consumer session).
+    Cache hit: one parquet read of the artifact with its published
+    schema, which runs no Spark job (steady-state cost — a production
+    index is read, not refit, by every consumer session).
     Cache miss: run `build()`, persist its FULL result, atomically
     publish, prune stale fingerprints past their grace window, and
     return a read of the published copy — so hit and miss return
@@ -270,12 +292,16 @@ def corpus_artifact(
     the returned frame is still lazy and may depend on those caches."""
 
     def read(path: str) -> DataFrame | None:
-        if _has_parquet_data(path):
-            return spark.read.parquet(path)
-        return None
+        schema = _published_schema(path)
+        if schema is None or not _has_parquet_data(path):
+            return None
+        return spark.read.schema(schema).parquet(path)
 
     def write(tmp: str) -> None:
         build().write.mode("overwrite").parquet(tmp)
+        # the schema as Spark reads the files back, inferred once here
+        with open(_schema_sidecar(tmp), "w") as f:
+            f.write(spark.read.parquet(tmp).schema.json())
         if cleanup is not None:
             try:
                 cleanup()

@@ -30,6 +30,7 @@ Two operators share one pair-generation kernel:
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -38,6 +39,7 @@ from ..catalog import load_table
 from ..planmemo import session_memo
 from ..plans.hints import maybe_broadcast
 from ..registry import Query
+from .artifacts import corpus_artifact, json_artifact
 
 MIN_ITEM_ORDERS = 2  # apriori item prune: item must appear in >= 2 orders
 MIN_PAIR_ORDERS = 2  # pair support threshold (edges of the co-graph)
@@ -52,6 +54,63 @@ def _order_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "lineitem")
         .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
         .distinct()
+    )
+
+
+def _index(spark: SparkSession, sf_dir: str, part: str, build: Callable):
+    """One part of this corpus's basket index, built once per session
+    (planmemo.session_memo): the item supports, the order count and the
+    pair frame.  Each part is persisted per corpus (operators.artifacts)
+    and keyed on lineitem and this module's code, so a fresh session
+    reads it and no query scans lineitem while the artifacts hit."""
+    memo = session_memo(spark, "basket_index")
+    key = (os.path.abspath(sf_dir), part)
+    if key not in memo:
+        memo[key] = build()
+    return memo[key]
+
+
+def _item_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(p, n_ord): the number of orders each part appears in — the
+    apriori first pass, over every part in lineitem.  The pair build
+    prunes on it and basket_pair_lift reads the two item supports of
+    each pair from it; the .cache() hands both one in-memory entry per
+    session."""
+
+    def build() -> DataFrame:
+        return _order_items(spark, sf_dir).groupBy("p").agg(
+            F.count(F.lit(1)).cast("long").alias("n_ord")
+        )
+
+    return _index(
+        spark,
+        sf_dir,
+        "item_orders",
+        lambda: corpus_artifact(
+            spark, sf_dir, "basket_item_orders", build, table="lineitem"
+        ).cache(),
+    )
+
+
+def _n_orders(spark: SparkSession, sf_dir: str) -> int:
+    """N, the number of orders with >= 1 item: the base of lift."""
+
+    def build() -> int:
+        return _order_items(spark, sf_dir).agg(
+            F.countDistinct("o")
+        ).first()[0]
+
+    return _index(
+        spark,
+        sf_dir,
+        "n_orders",
+        lambda: json_artifact(
+            sf_dir,
+            "basket_n_orders",
+            build,
+            (os.path.abspath(__file__),),
+            table="lineitem",
+        ),
     )
 
 
@@ -72,58 +131,47 @@ def _pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     band-shape lesson).  BASKET_CAP bounds the quadratic term for
     pathological carts: a basket contributes at most cap(cap-1)/2
     pairs.  The .cache() on the artifact read hands all consumers one
-    in-memory entry per session (the _token_frame pattern), and the
-    session memo spares every consumer invocation a re-open of the
-    artifact (a parquet read is a construction-time job)."""
-    from ingestprocessstoreinnrt_spark.operators.artifacts import (
-        corpus_artifact,
-    )
+    in-memory entry per session (the _token_frame pattern)."""
 
-    memo = session_memo(spark, "basket_pairs")
-    key = os.path.abspath(sf_dir)
-    df = memo.get(key)
-    if df is None:
+    def build() -> DataFrame:
+        kept = _order_items(spark, sf_dir).join(
+            _item_orders(spark, sf_dir)
+            .filter(F.col("n_ord") >= MIN_ITEM_ORDERS)
+            .select("p"),
+            "p",
+        )
+        baskets = kept.groupBy("o").agg(
+            F.slice(F.sort_array(F.collect_set("p")), 1, BASKET_CAP).alias(
+                "ps"
+            )
+        )
+        pairs = baskets.select(
+            F.explode(
+                F.expr(
+                    "flatten(transform(ps, (x, i) ->"
+                    " transform(slice(ps, i + 2, size(ps)),"
+                    " y -> struct(x AS p1, y AS p2))))"
+                )
+            ).alias("pr")
+        ).select("pr.p1", "pr.p2")
+        return pairs.groupBy("p1", "p2").agg(
+            F.count(F.lit(1)).cast("long").alias("pair_orders")
+        )
 
-        def build() -> DataFrame:
-            items = _order_items(spark, sf_dir)
-            item_n = items.groupBy("p").agg(
-                F.count(F.lit(1)).alias("n_ord")
-            )
-            kept = items.join(
-                item_n.filter(F.col("n_ord") >= MIN_ITEM_ORDERS).select(
-                    "p"
-                ),
-                "p",
-            )
-            baskets = kept.groupBy("o").agg(
-                F.slice(
-                    F.sort_array(F.collect_set("p")), 1, BASKET_CAP
-                ).alias("ps")
-            )
-            pairs = baskets.select(
-                F.explode(
-                    F.expr(
-                        "flatten(transform(ps, (x, i) ->"
-                        " transform(slice(ps, i + 2, size(ps)),"
-                        " y -> struct(x AS p1, y AS p2))))"
-                    )
-                ).alias("pr")
-            ).select("pr.p1", "pr.p2")
-            return pairs.groupBy("p1", "p2").agg(
-                F.count(F.lit(1)).cast("long").alias("pair_orders")
-            )
-
-        # artifact name pins the tuning knobs: a retuned prune/cap must
-        # rebuild, never serve a stale frame
-        df = corpus_artifact(
+    # artifact name pins the tuning knobs: a retuned prune/cap must
+    # rebuild, never serve a stale frame
+    return _index(
+        spark,
+        sf_dir,
+        "pairs",
+        lambda: corpus_artifact(
             spark,
             sf_dir,
             f"basket_pairs_mi{MIN_ITEM_ORDERS}c{BASKET_CAP}",
             build,
             table="lineitem",
-        ).cache()
-        memo[key] = df
-    return df
+        ).cache(),
+    )
 
 
 _ITEMS_SQL = (
@@ -147,14 +195,9 @@ def basket_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top association pairs by (support, lift): (p1, p2, pair_orders,
     p1_orders, p2_orders, lift_q, rank).  lift = pair_orders * N /
     (p1_orders * p2_orders), quantized to 6 dp for the cross-engine
-    rank; N = total orders with >= 1 item."""
-    items = _order_items(spark, sf_dir)
-    item_n = items.groupBy("p").agg(
-        F.count(F.lit(1)).cast("long").alias("n_ord")
-    )
-    n_orders = items.agg(
-        F.countDistinct("o").cast("long").alias("n_orders")
-    )
+    rank; N = total orders with >= 1 item.  Reads only the session's
+    basket index (pairs, item supports, N): no scan of lineitem."""
+    item_n = _item_orders(spark, sf_dir)
     pc = _pair_counts(spark, sf_dir).filter(
         F.col("pair_orders") >= MIN_PAIR_ORDERS
     )
@@ -171,11 +214,10 @@ def basket_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("p2") == F.col("pp"),
         )
         .drop("pp")
-        .join(F.broadcast(n_orders))
     )
     lift_q = F.round(
         F.col("pair_orders").cast("double")
-        * F.col("n_orders").cast("double")
+        * F.lit(_n_orders(spark, sf_dir)).cast("double")
         / F.col("p1_orders").cast("double")
         / F.col("p2_orders").cast("double"),
         6,
@@ -973,17 +1015,11 @@ def _rich_club_mat() -> list[str]:
 # family "basket": every query here rides this module's cached
 # order-pair frame
 QUERIES = {
-    # impure: construction opens the persisted basket pair artifact (a
-    # parquet read) when the session's pair memo is cold
-    "bi_basket_lift": Query(
-        basket_pair_lift, _BASKET_SQL, impure=True, family="basket"
-    ),
+    "bi_basket_lift": Query(basket_pair_lift, _BASKET_SQL, family="basket"),
     "graph_triangles": Query(
         graph_triangles, _TRI_SQL, impure=True, family="basket"
     ),
-    "graph_degree_stats": Query(
-        degree_stats, _DEGREE_SQL, impure=True, family="basket"
-    ),
+    "graph_degree_stats": Query(degree_stats, _DEGREE_SQL, family="basket"),
     "graph_jaccard_neighbors": Query(
         jaccard_neighbors, _JACCARD_SQL, impure=True, family="basket"
     ),

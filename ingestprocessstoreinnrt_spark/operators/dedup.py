@@ -2554,7 +2554,6 @@ QUERIES = {
         jaccard_pairs_full,
         _JACCARD_FULL_SQL,
         mat=_jaccard_full_mat(),
-        impure=True,
     ),
     "dedup_ngram_jaccard": Query(
         ngram_jaccard_pairs, _NGRAM_JACCARD_SQL, mat=_ngram_jaccard_mat()
@@ -2586,7 +2585,7 @@ QUERIES = {
     "dedup_embedding_neardup": Query(embedding_neardup, _neardup_sql()),
     "dedup_fuzzy_names": Query(fuzzy_name_pairs, _FUZZY_SQL),
     "dedup_best_match": Query(
-        best_match, _BEST_MATCH_SQL, mat=_best_match_mat(), impure=True
+        best_match, _BEST_MATCH_SQL, mat=_best_match_mat()
     ),
     "dedup_semantic": Query(dedup_semantic, _semantic_sql()),
     "dedup_containment": Query(

@@ -20,7 +20,7 @@ class Query(NamedTuple):
       tables, then the final SELECT), for the few oracles whose plain
       CTE form re-derives a shared frame per inlined reference.
     * ``impure``: construction runs Spark jobs (fits, collects,
-      localCheckpoint rounds, artifact reads), so the plan memo must
+      localCheckpoint rounds), so the plan memo must
       not hide it from warm reruns (planmemo.memoize_pure; both
       directions pinned by tests/test_planmemo.py).
     * ``family`` names the shared cache a benchmark sweep groups the

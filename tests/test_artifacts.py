@@ -188,6 +188,70 @@ def test_gutted_artifact_reads_as_miss(spark, corpus):
     assert calls == [1, 1]
 
 
+def _fp_dir(name, corpus):
+    base = os.path.join(A._ART_DIR, name, A.corpus_key(corpus))
+    (fp_dir,) = [e for e in os.listdir(base) if ".tmp-" not in e]
+    return os.path.join(base, fp_dir)
+
+
+def test_hit_reads_the_published_schema_without_a_job(spark, corpus):
+    """A hit reads with the schema published in the `_schema.json`
+    sidecar, so it runs no Spark job, and it reads the same schema and
+    rows as a plain (schema-inferring) parquet read of the dir."""
+    from ingestprocessstoreinnrt_spark import planmemo
+
+    def build():
+        return spark.read.parquet(
+            os.path.join(corpus, "documents.parquet")
+        ).selectExpr("doc_id", "CAST(v AS STRING) AS s", "v / 4 AS q")
+
+    A.corpus_artifact(spark, corpus, "sch", build).collect()
+    planmemo.clear()
+    sc = spark.sparkContext
+    hits = A.STATS["hit"]
+    sc.setJobGroup("artifact-hit", "artifact hit")
+    try:
+        hit = A.corpus_artifact(spark, corpus, "sch", build)
+    finally:
+        sc.setJobGroup(None, None)
+    assert A.STATS["hit"] == hits + 1
+    assert not sc.statusTracker().getJobIdsForGroup("artifact-hit")
+    plain = spark.read.parquet(_fp_dir("sch", corpus))
+    assert hit.schema == plain.schema
+    assert sorted(hit.collect()) == sorted(plain.collect())
+
+
+@pytest.mark.parametrize(
+    "sidecar", [None, "{not json", '{"type": "struct"}'],
+    ids=["missing", "unparsable", "not-a-schema"],
+)
+def test_bad_schema_sidecar_reads_as_miss(spark, corpus, sidecar):
+    """Correctness never depends on the sidecar: an artifact whose
+    `_schema.json` is missing or corrupt is rebuilt, with the same
+    rows, and the rebuild publishes a readable sidecar again."""
+    calls = []
+
+    def build():
+        calls.append(1)
+        return spark.read.parquet(
+            os.path.join(corpus, "documents.parquet")
+        ).selectExpr("doc_id", "v + 1 AS w")
+
+    first = sorted(A.corpus_artifact(spark, corpus, "sc", build).collect())
+    final = _fp_dir("sc", corpus)
+    side = os.path.join(final, "_schema.json")
+    os.remove(side)
+    if sidecar is not None:
+        with open(side, "w") as f:
+            f.write(sidecar)
+    misses = A.STATS["miss"]
+    again = A.corpus_artifact(spark, corpus, "sc", build)
+    assert A.STATS["miss"] == misses + 1
+    assert calls == [1, 1]
+    assert sorted(again.collect()) == first
+    assert A._published_schema(final) == again.schema
+
+
 def test_prune_grace_spares_recent_readers(spark, corpus, monkeypatch):
     """VERDICT r12 item 4: a session still holding a lazy read of an
     old-fingerprint artifact keeps its files through the grace window;
@@ -341,4 +405,74 @@ def test_centroid_artifact_keys_on_data_and_code(spark, tmp_path, monkeypatch):
 
     fresh, hits, misses = fit(spark.newSession())
     assert (hits, misses) == (1, 0), "a fresh session reads the artifact"
+    assert fresh == first
+
+
+def test_basket_index_artifacts_key_on_data_and_code(spark, tmp_path):
+    """The basket index's item supports and order count persist keyed
+    on lineitem and basket.py: a same-size rewrite of lineitem within
+    the same whole second rebuilds both, an edit to basket.py rebuilds
+    both, and a fresh session reads both back unchanged."""
+    import importlib.util
+    import shutil
+
+    from ingestprocessstoreinnrt_spark import planmemo
+    from ingestprocessstoreinnrt_spark.operators import basket
+    from tests.conftest import SF_SMOKE
+
+    sf = str(tmp_path / "sf")
+    os.mkdir(sf)
+    li = os.path.join(sf, "lineitem.parquet")
+    shutil.copy(os.path.join(SF_SMOKE, "lineitem.parquet"), li)
+    os.chmod(li, 0o644)
+    whole = (os.stat(li).st_mtime_ns // 10**9) * 10**9
+    os.utime(li, ns=(whole, whole))
+
+    # a copy of basket.py inside the package, so it can be edited
+    src = tmp_path / "basket_copy.py"
+    shutil.copy(basket.__file__, src)
+
+    def load():
+        spec = importlib.util.spec_from_file_location(
+            "ingestprocessstoreinnrt_spark.operators.basket_copy", str(src)
+        )
+        m = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(m)
+        return m
+
+    def index(session, mod):
+        before = dict(A.STATS)
+        items = sorted(map(tuple, mod._item_orders(session, sf).collect()))
+        n = mod._n_orders(session, sf)
+        return (
+            (items, n),
+            A.STATS["hit"] - before["hit"],
+            A.STATS["miss"] - before["miss"],
+        )
+
+    mod = load()
+    first, hits, misses = index(spark, mod)
+    assert (hits, misses) == (0, 2)
+    assert first[1] > 0 and first[0]
+    assert sum(c for _, c in first[0]) >= first[1]
+
+    # same bytes, same size, same whole-second mtime: only st_mtime_ns moves
+    with open(li, "rb") as f:
+        data = f.read()
+    with open(li, "wb") as f:
+        f.write(data)
+    os.utime(li, ns=(whole, whole + 1))
+    planmemo.clear()  # the session memo answers before the artifact layer
+    again, hits, misses = index(spark, mod)
+    assert (hits, misses) == (0, 2), "same-second rewrite must rebuild"
+    assert again == first
+
+    src.write_text(src.read_text() + "# edited\n")
+    mod = load()
+    planmemo.clear()
+    _, hits, misses = index(spark, mod)
+    assert (hits, misses) == (0, 2), "a basket.py edit must rebuild"
+
+    fresh, hits, misses = index(spark.newSession(), mod)
+    assert (hits, misses) == (2, 0), "a fresh session reads the artifacts"
     assert fresh == first

@@ -114,6 +114,18 @@ def test_basket_plans_have_no_cartesian_and_take_ordered(spark):
     assert "CartesianProduct" not in tplan
 
 
+def test_basket_lift_reads_the_index_not_lineitem(spark):
+    """The lift query reads only the persisted basket index (pairs,
+    item supports, N), so its cost is O(pairs) at any scale: no scan
+    of lineitem anywhere in its physical plan."""
+    lift = basket.basket_pair_lift(spark, SF_ORACLE)
+    plan = lift._jdf.queryExecution().executedPlan().toString()
+    scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
+    assert scans, plan
+    for ln in scans:
+        assert "lineitem" not in ln and "l_partkey" not in ln, ln
+
+
 def test_degree_stats_mass_conservation(spark):
     """Σ degree*n_nodes == 2*|edges| (handshake lemma) and node count
     matches the edge endpoints."""
