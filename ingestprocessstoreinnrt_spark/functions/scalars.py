@@ -71,13 +71,6 @@ def davg(col: Column | str, alias: str, bounded: bool = False) -> Column:
     ).alias(alias)
 
 
-def lsum(col: Column | str, alias: str) -> Column:
-    """SUM of an integer column as BIGINT (oracle: CAST(SUM(x) AS BIGINT);
-    DuckDB would otherwise widen to HUGEINT)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c).cast("long").alias(alias)
-
-
 def sql_dsum_expr(expr: str) -> str:
     return (
         f"CAST(SUM(CAST(FLOOR(({expr}) * {_SCALE} + 0.5) AS BIGINT)) AS DOUBLE)"
@@ -95,10 +88,6 @@ def sql_dsum(expr: str, alias: str) -> str:
 
 def sql_davg(expr: str, alias: str) -> str:
     return f"{sql_davg_expr(expr)} AS {alias}"
-
-
-def sql_lsum(expr: str, alias: str) -> str:
-    return f"CAST(SUM({expr}) AS BIGINT) AS {alias}"
 
 
 # ---------------------------------------------------------------------------

@@ -44,21 +44,6 @@ def bpe_ish_token_count(col: Column | str) -> Column:
     return F.size(F.regexp_extract_all(c, F.lit(pat), F.lit(0))).cast("long")
 
 
-def char_ngrams(col: Column | str, n: int = 3) -> Column:
-    """Array of lowercase character n-grams (shingles) of the normalized
-    text; whitespace collapsed to single spaces.  Used by MinHash /
-    Jaccard dedup.  Mirrors a DuckDB lambda over range()."""
-    c = F.col(col) if isinstance(col, str) else col
-    norm = F.regexp_replace(F.lower(F.trim(c)), _WS, " ")
-    # sequence over char positions -> substring windows; empty/short text -> []
-    return F.when(F.length(norm) < n, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.length(norm) - (n - 1)),
-            lambda i: norm.substr(i, F.lit(n)),
-        )
-    )
-
-
 def fingerprint(col: Column | str) -> Column:
     """Document fingerprint: 60-bit stable hash of the normalized text
     (lowercased, whitespace-collapsed, trimmed).  Identical in DuckDB via

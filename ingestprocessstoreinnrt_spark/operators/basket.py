@@ -3,28 +3,32 @@ part↔order bipartite projection — the "what sells together" family the
 reference's BI layer gestures at with its group-by batteries
 (nyTaxi impala queries, SURVEY 2.5) but never takes to pair grain.
 
-Two operators share one pair-generation kernel:
+Every query here reads one basket index, built once per session
+(_index): the item supports, the order count N and the co-occurrence
+pair frame, persisted per corpus, plus the support-thresholded
+co-purchase edge set cached on top of the pairs.  No query scans
+lineitem while the artifacts hit.
 
   * basket_pair_lift — association pairs (p1, p2) with support and
-    lift, the apriori primitives.  Scale shape: item counts are
-    aggregated FIRST and items below min support are pruned BEFORE the
-    pair self-join (support is anti-monotone — a pair can't beat the
-    support its rarer item has), so the quadratic step runs on the
-    survivor set only.  Pair expansion is an equi-join on the order
-    key (co-partitioned, never cartesian) and is bounded by basket
-    size squared; the TPC-H-ish baskets here cap at 13 items, and at
-    100 TB a `F.slice` cap on exploded baskets bounds pathological
-    carts the same way.  Lift ranking crosses engines via the proven
-    round-to-6dp + id tie-break pattern (functions.scalars notes).
-  * graph_triangles — triangle participation per part over the
-    support-thresholded co-purchase graph.  Canonical orientation
-    (p1 < p2 on every edge) makes each triangle (a<b<c) countable
-    exactly once by the textbook two-equi-join plan: wedges
-    (a,b)x(a,c) with b<c, closed against the edge set on (b,c).  No
-    cartesian anywhere (plan-tested); at 100 TB you additionally
-    orient edges low-degree -> high-degree so wedge fan-out is
-    bounded by the graph's degeneracy, and the joins bucket on the
-    wedge pivot.
+    lift, the apriori primitives, joined from the pairs, the item
+    supports and N.  Scale shape of the pair build: item counts are
+    aggregated FIRST and items below min support are pruned BEFORE
+    pairs are generated (support is anti-monotone — a pair can't beat
+    the support its rarer item has), so the quadratic step runs on the
+    survivor set only, bounded by basket size squared; the TPC-H-ish
+    baskets here cap at 13 items, and at 100 TB a `F.slice` cap on
+    baskets bounds pathological carts the same way.  Lift ranking
+    crosses engines via the proven round-to-6dp + id tie-break pattern
+    (functions.scalars notes).
+  * the graph queries (triangles, degrees, clustering, link
+    prediction, assortativity, rich club) — all over the one cached
+    edge frame (triangle_edges).  Canonical orientation (p1 < p2 on
+    every edge) makes each triangle (a<b<c) countable exactly once by
+    the textbook two-equi-join plan: wedges (a,b)x(a,c) with b<c,
+    closed against the edge set on (b,c).  No cartesian anywhere
+    (plan-tested); at 100 TB you additionally orient edges low-degree
+    -> high-degree so wedge fan-out is bounded by the graph's
+    degeneracy, and the joins bucket on the wedge pivot.
 """
 
 from __future__ import annotations
@@ -59,10 +63,11 @@ def _order_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _index(spark: SparkSession, sf_dir: str, part: str, build: Callable):
     """One part of this corpus's basket index, built once per session
-    (planmemo.session_memo): the item supports, the order count and the
-    pair frame.  Each part is persisted per corpus (operators.artifacts)
-    and keyed on lineitem and this module's code, so a fresh session
-    reads it and no query scans lineitem while the artifacts hit."""
+    (planmemo.session_memo): the item supports, the order count, the
+    pair frame and the co-purchase edges derived from it.  The first
+    three are persisted per corpus (operators.artifacts) and keyed on
+    lineitem and this module's code, so a fresh session reads them and
+    no query scans lineitem while the artifacts hit."""
     memo = session_memo(spark, "basket_index")
     key = (os.path.abspath(sf_dir), part)
     if key not in memo:
@@ -274,35 +279,75 @@ WHERE rank <= {BASKET_TOPK}
 
 def triangle_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Support-thresholded co-purchase edges, canonically oriented
-    p1 < p2."""
-    return (
-        _pair_counts(spark, sf_dir)
+    p1 < p2: the basket index's graph, which every graph query below
+    reads.  The .cache() hands them one in-memory edge set per
+    session, filled by the first action that reads it; building a
+    query on it runs no Spark job."""
+    return _index(
+        spark,
+        sf_dir,
+        "edges",
+        lambda: _pair_counts(spark, sf_dir)
         .filter(F.col("pair_orders") >= MIN_PAIR_ORDERS)
         .select("p1", "p2")
+        .cache(),
+    )
+
+
+def _adjacency(e: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The edges in both directions, (a, n), and each node's degree,
+    (a, deg)."""
+    adj = e.union(e.select(F.col("p2"), F.col("p1"))).toDF("a", "n")
+    deg = adj.groupBy("a").agg(F.count(F.lit(1)).cast("long").alias("deg"))
+    return adj, deg
+
+
+def _per_node_count(df: DataFrame, cols: list[str], alias: str) -> DataFrame:
+    """(part_id, alias): in how many rows of df each part appears
+    among cols — degrees from edges, participation from triangles."""
+    return (
+        df.select(F.explode(F.array(*cols)).alias("part_id"))
+        .groupBy("part_id")
+        .agg(F.count(F.lit(1)).cast("long").alias(alias))
+    )
+
+
+def _triangles(e: DataFrame) -> DataFrame:
+    """(a, b, c), each triangle a<b<c exactly once: wedge join on the
+    lowest vertex (e1=(a,b), e2=(a,c), b<c), closed by an equi-join
+    against the edge set on (b,c)."""
+    e1 = e.select(F.col("p1").alias("a"), F.col("p2").alias("b"))
+    e2 = e.select(F.col("p1").alias("a2"), F.col("p2").alias("c"))
+    wedges = e1.join(
+        e2, (F.col("a") == F.col("a2")) & (F.col("b") < F.col("c"))
+    )
+    return wedges.join(
+        e.select(F.col("p1").alias("b"), F.col("p2").alias("c")),
+        ["b", "c"],
+    ).select("a", "b", "c")
+
+
+def _common_neighbors(adj: DataFrame) -> DataFrame:
+    """(b < c, common): every pair with >= 1 common neighbor and how
+    many, from the wedge join that pivots on the shared neighbor."""
+    w1 = adj.select(F.col("n").alias("pivot"), F.col("a").alias("b"))
+    w2 = adj.select(F.col("n").alias("pivot2"), F.col("a").alias("c"))
+    return (
+        w1.join(
+            w2,
+            (F.col("pivot") == F.col("pivot2")) & (F.col("b") < F.col("c")),
+        )
+        .groupBy("b", "c")
+        .agg(F.count(F.lit(1)).cast("long").alias("common"))
     )
 
 
 def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-part triangle participation over the co-purchase graph:
     (part_id, n_triangles, total_triangles, rank), top TRI_TOPK parts.
-
-    Each triangle a<b<c is found exactly once: wedge join on the
-    lowest vertex (e1=(a,b), e2=(a,c), b<c), closed by an equi-join
-    against the edge set on (b,c).  localCheckpoint materializes the
-    edge set once so the three-way self-join reuses one scan."""
-    e = triangle_edges(spark, sf_dir).localCheckpoint(eager=True)
-    e1 = e.select(F.col("p1").alias("a"), F.col("p2").alias("b"))
-    e2 = e.select(F.col("p1").alias("a2"), F.col("p2").alias("c"))
-    wedges = e1.join(e2, (F.col("a") == F.col("a2")) & (F.col("b") < F.col("c")))
-    tri = wedges.join(
-        e.select(F.col("p1").alias("b"), F.col("p2").alias("c")),
-        ["b", "c"],
-    ).select("a", "b", "c")
-    per_node = (
-        tri.select(F.explode(F.array("a", "b", "c")).alias("part_id"))
-        .groupBy("part_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
-    )
+    The three-way self-join reads the session's one cached edge set."""
+    tri = _triangles(triangle_edges(spark, sf_dir))
+    per_node = _per_node_count(tri, ["a", "b", "c"], "n_triangles")
     total = tri.agg(
         F.count(F.lit(1)).cast("long").alias("total_triangles")
     )
@@ -346,16 +391,10 @@ def degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree histogram of the co-purchase graph: (degree, n_nodes) —
     the power-law shape check run before sizing any pairwise stage
     (skew in this histogram is what the salt guards defend against).
-    Reuses the cached pair frame; degrees come from one explode of
-    each edge into both endpoints + two tiny aggregates."""
-    e = _pair_counts(spark, sf_dir).filter(
-        F.col("pair_orders") >= MIN_PAIR_ORDERS
-    )
-    deg = (
-        e.select(F.explode(F.array("p1", "p2")).alias("node"))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("degree"))
-    )
+    Reads the cached edge set; degrees come from one explode of each
+    edge into both endpoints + two tiny aggregates."""
+    e = triangle_edges(spark, sf_dir)
+    deg = _per_node_count(e, ["p1", "p2"], "degree")
     return deg.groupBy("degree").agg(
         F.count(F.lit(1)).cast("long").alias("n_nodes")
     )
@@ -394,24 +433,8 @@ JACCARD_TOPK = 50
 def jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top part pairs by neighbor-set Jaccard: (p1, p2, common,
     degree1, degree2, jaccard_q, rank)."""
-    e = (
-        _pair_counts(spark, sf_dir)
-        .filter(F.col("pair_orders") >= MIN_PAIR_ORDERS)
-        .select("p1", "p2")
-        .localCheckpoint(eager=True)
-    )
-    adj = e.union(e.select(F.col("p2"), F.col("p1"))).toDF("a", "n")
-    deg = adj.groupBy("a").agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    w1 = adj.select(F.col("n").alias("pivot"), F.col("a").alias("b"))
-    w2 = adj.select(F.col("n").alias("pivot2"), F.col("a").alias("c"))
-    common = (
-        w1.join(
-            w2,
-            (F.col("pivot") == F.col("pivot2")) & (F.col("b") < F.col("c")),
-        )
-        .groupBy("b", "c")
-        .agg(F.count(F.lit(1)).cast("long").alias("common"))
-    )
+    adj, deg = _adjacency(triangle_edges(spark, sf_dir))
+    common = _common_neighbors(adj)
     scored = (
         common.join(
             maybe_broadcast(deg.withColumnRenamed("deg", "degree1")),
@@ -511,14 +534,7 @@ def resource_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top part pairs by resource-allocation index over the thresholded
     co-purchase graph: (p1, p2, common, ra_scaled, rank) with
     ra_scaled = Σ RA_SCALE DIV deg(pivot) — exact BIGINT."""
-    e = (
-        _pair_counts(spark, sf_dir)
-        .filter(F.col("pair_orders") >= MIN_PAIR_ORDERS)
-        .select("p1", "p2")
-        .localCheckpoint(eager=True)
-    )
-    adj = e.union(e.select(F.col("p2"), F.col("p1"))).toDF("a", "n")
-    deg = adj.groupBy("a").agg(F.count(F.lit(1)).cast("long").alias("deg"))
+    adj, deg = _adjacency(triangle_edges(spark, sf_dir))
     # stamp each wedge pivot with its exact integer weight up front so
     # the wedge join carries one extra BIGINT, not a second join later
     wadj = adj.join(
@@ -611,26 +627,9 @@ WHERE rank <= {RA_TOPK}
 def clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(part_id, degree, n_triangles, cc_q) for every node with
     degree >= 2, ordered by part_id."""
-    e = triangle_edges(spark, sf_dir).localCheckpoint(eager=True)
-    e1 = e.select(F.col("p1").alias("a"), F.col("p2").alias("b"))
-    e2 = e.select(F.col("p1").alias("a2"), F.col("p2").alias("c"))
-    wedges = e1.join(
-        e2, (F.col("a") == F.col("a2")) & (F.col("b") < F.col("c"))
-    )
-    tri = wedges.join(
-        e.select(F.col("p1").alias("b"), F.col("p2").alias("c")),
-        ["b", "c"],
-    ).select("a", "b", "c")
-    per_node = (
-        tri.select(F.explode(F.array("a", "b", "c")).alias("part_id"))
-        .groupBy("part_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
-    )
-    deg = (
-        e.select(F.explode(F.array("p1", "p2")).alias("part_id"))
-        .groupBy("part_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("degree"))
-    )
+    e = triangle_edges(spark, sf_dir)
+    per_node = _per_node_count(_triangles(e), ["a", "b", "c"], "n_triangles")
+    deg = _per_node_count(e, ["p1", "p2"], "degree")
     return (
         deg.filter(F.col("degree") >= 2)
         .join(per_node, "part_id", "left")
@@ -702,21 +701,8 @@ PA_TOPK = 50
 def pref_attachment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top part pairs by preferential-attachment score over the
     thresholded co-purchase graph: (p1, p2, common, pa_score, rank)."""
-    e = (
-        _pair_counts(spark, sf_dir)
-        .filter(F.col("pair_orders") >= MIN_PAIR_ORDERS)
-        .select("p1", "p2")
-        .localCheckpoint(eager=True)
-    )
-    adj = e.union(e.select(F.col("p2"), F.col("p1"))).toDF("a", "n")
-    deg = adj.groupBy("a").agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    a2 = adj.select(F.col("n").alias("pivot"), F.col("a").alias("b"))
-    b2 = adj.select(F.col("n").alias("pivot2"), F.col("a").alias("c"))
-    cand = (
-        a2.join(b2, (F.col("pivot") == F.col("pivot2")) & (F.col("b") < F.col("c")))
-        .groupBy("b", "c")
-        .agg(F.count(F.lit(1)).cast("long").alias("common"))
-    )
+    adj, deg = _adjacency(triangle_edges(spark, sf_dir))
+    cand = _common_neighbors(adj)
     d1 = deg.select(F.col("a").alias("b"), F.col("deg").alias("deg1"))
     d2 = deg.select(F.col("a").alias("c"), F.col("deg").alias("deg2"))
     scored = (
@@ -799,19 +785,12 @@ WHERE rank <= {PA_TOPK}
 def assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n_edges, assortativity) over the thresholded co-purchase
     graph; n_edges counts directed edges (2x undirected)."""
-    e = (
-        _pair_counts(spark, sf_dir)
-        .filter(F.col("pair_orders") >= MIN_PAIR_ORDERS)
-        .select("p1", "p2")
-        .localCheckpoint(eager=True)
-    )
-    adj = e.union(e.select(F.col("p2"), F.col("p1"))).toDF("a", "b")
-    deg = adj.groupBy("a").agg(F.count(F.lit(1)).cast("long").alias("deg"))
+    adj, deg = _adjacency(triangle_edges(spark, sf_dir))
     da = deg.select(F.col("a"), F.col("deg").alias("dx"))
-    db = deg.select(F.col("a").alias("b"), F.col("deg").alias("dy"))
+    db = deg.select(F.col("a").alias("n"), F.col("deg").alias("dy"))
     g = (
         adj.join(maybe_broadcast(da), "a")
-        .join(maybe_broadcast(db), "b")
+        .join(maybe_broadcast(db), "n")
         .agg(
             F.count(F.lit(1)).cast("long").alias("m"),
             F.sum("dx").cast("long").alias("sx"),
@@ -877,14 +856,8 @@ RICH_CLUB_KS = [2, 4, 8, 16]
 def rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(k, n_nodes, n_edges, phi) per degree cutoff over the
     thresholded co-purchase graph."""
-    e = (
-        _pair_counts(spark, sf_dir)
-        .filter(F.col("pair_orders") >= MIN_PAIR_ORDERS)
-        .select("p1", "p2")
-        .localCheckpoint(eager=True)
-    )
-    adj = e.union(e.select(F.col("p2"), F.col("p1"))).toDF("a", "n")
-    deg = adj.groupBy("a").agg(F.count(F.lit(1)).cast("long").alias("deg"))
+    e = triangle_edges(spark, sf_dir)
+    _, deg = _adjacency(e)
     d1 = deg.select(F.col("a").alias("p1"), F.col("deg").alias("deg1"))
     d2 = deg.select(F.col("a").alias("p2"), F.col("deg").alias("deg2"))
     ej = e.join(maybe_broadcast(d1), "p1").join(maybe_broadcast(d2), "p2")
@@ -1012,34 +985,24 @@ def _rich_club_mat() -> list[str]:
     ]
 
 
-# family "basket": every query here rides this module's cached
-# order-pair frame
+# family "basket": every query here rides this module's cached basket
+# index
 QUERIES = {
     "bi_basket_lift": Query(basket_pair_lift, _BASKET_SQL, family="basket"),
-    "graph_triangles": Query(
-        graph_triangles, _TRI_SQL, impure=True, family="basket"
-    ),
+    "graph_triangles": Query(graph_triangles, _TRI_SQL, family="basket"),
     "graph_degree_stats": Query(degree_stats, _DEGREE_SQL, family="basket"),
     "graph_jaccard_neighbors": Query(
-        jaccard_neighbors, _JACCARD_SQL, impure=True, family="basket"
+        jaccard_neighbors, _JACCARD_SQL, family="basket"
     ),
     "graph_resource_allocation": Query(
-        resource_allocation, _RA_SQL, impure=True, family="basket"
+        resource_allocation, _RA_SQL, family="basket"
     ),
     "graph_clustering_coeff": Query(
-        clustering_coeff, _CLUSTERING_SQL, impure=True, family="basket"
+        clustering_coeff, _CLUSTERING_SQL, family="basket"
     ),
-    "graph_pref_attachment": Query(
-        pref_attachment, _PA_SQL, impure=True, family="basket"
-    ),
-    "graph_assortativity": Query(
-        assortativity, _ASSORT_SQL, impure=True, family="basket"
-    ),
+    "graph_pref_attachment": Query(pref_attachment, _PA_SQL, family="basket"),
+    "graph_assortativity": Query(assortativity, _ASSORT_SQL, family="basket"),
     "graph_rich_club": Query(
-        rich_club,
-        _rich_club_sql(),
-        mat=_rich_club_mat(),
-        impure=True,
-        family="basket",
+        rich_club, _rich_club_sql(), mat=_rich_club_mat(), family="basket"
     ),
 }

@@ -150,23 +150,6 @@ def write_trip_summary_csv(path: str, rows: int = 5_000, seed: int = 42) -> str:
     return path
 
 
-def write_car_props(path: str, cars: int = 100, seed: int = 42) -> str:
-    """Fleet definition CSV (FIXTURES.md §4): vin, starting_miles,
-    avg_speed, avg_accel, avg_decel, avg_handling,
-    illegal_lane_departures_per_100, collision_prob_per_100000."""
-    rng = random.Random(seed)
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "w") as f:
-        for i in range(cars):
-            f.write(
-                f"VIN{i:05d},{rng.randint(1000, 150000)},"
-                f"{rng.randint(25, 80)},{rng.uniform(0.5, 4.0):.2f},"
-                f"{rng.uniform(0.5, 4.0):.2f},{rng.uniform(0.1, 1.0):.2f},"
-                f"{rng.randint(0, 100)},{rng.randint(1, 100)}\n"
-            )
-    return path
-
-
 def write_car_readings_csv(
     path: str,
     cars: int = 100,

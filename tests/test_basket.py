@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from itertools import combinations
 
+import pytest
 from pyspark.sql import functions as F
 
 from ingestprocessstoreinnrt_spark.operators import basket
@@ -114,12 +115,15 @@ def test_basket_plans_have_no_cartesian_and_take_ordered(spark):
     assert "CartesianProduct" not in tplan
 
 
-def test_basket_lift_reads_the_index_not_lineitem(spark):
-    """The lift query reads only the persisted basket index (pairs,
-    item supports, N), so its cost is O(pairs) at any scale: no scan
-    of lineitem anywhere in its physical plan."""
-    lift = basket.basket_pair_lift(spark, SF_ORACLE)
-    plan = lift._jdf.queryExecution().executedPlan().toString()
+@pytest.mark.parametrize("name", sorted(basket.QUERIES))
+def test_basket_query_reads_the_index_not_lineitem(spark, name):
+    """Every basket query reads only the session's basket index (pairs,
+    item supports, N, the cached edge set), so its cost is O(pairs) at
+    any scale: no scan of lineitem anywhere in its physical plan, and
+    no scan of an RDD a per-query checkpoint materialized."""
+    df = basket.QUERIES[name].build(spark, SF_ORACLE)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
     scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
     assert scans, plan
     for ln in scans:

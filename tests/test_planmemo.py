@@ -119,6 +119,7 @@ def test_memoized_frame_still_computes_and_clear_forgets(spark):
     memoized = {
         "lsh_pair_frame": lambda: dedup.lsh_pair_frame(spark, SF),
         "_pair_counts": lambda: basket._pair_counts(spark, SF),
+        "triangle_edges": lambda: basket.triangle_edges(spark, SF),
         "_run_bpe": lambda: curation._run_bpe(spark, SF),
         "load_table": lambda: load_table(spark, SF, "orders"),
     }
