@@ -260,23 +260,15 @@ def main(sf_dir: str = "/root/testdata/sf0.01") -> None:
         import shutil
         import tempfile
 
-        from ingestprocessstoreinnrt_spark.operators import ml
         from ingestprocessstoreinnrt_spark.streaming import compact
         from ingestprocessstoreinnrt_spark.streaming.upsert import (
             UpsertTable,
         )
 
-        # pinned artifacts (memoized from stage 14's serve)
-        _, rcdf = sim._rpq_codebook_row(spark, sf_dir)
+        # pinned artifacts (the vector index, built by stage 14's serve)
+        rcdf = sim.rpq_codebook_row(spark, sf_dir)
+        cdf = sim.coarse_row(spark, sf_dir)
         emb = fan_out(load_table(spark, sf_dir, "embeddings"))
-        cents = ml.fit_centroids(
-            spark,
-            emb.select("vec_id", ml._qvec().alias("qv")),
-            ml.K_CLUSTERS,
-            ml.KMEANS_ITERS,
-            memo_key=sf_dir,
-        )
-        cdf = ml._cdf_of(spark, cents)
         part = F.pmod(F.col("vec_id"), F.lit(8))
         tmp = tempfile.mkdtemp(prefix="demo_ivfadc_")
         try:  # a divergence assert must not leak the temp dir (ADVICE r10)

@@ -47,7 +47,7 @@ def dsum(col: Column | str, alias: str, bounded: bool = False) -> Column:
 
     `bounded=True` keeps the BIGINT accumulator (whole-stage-codegen
     primitive path; decimal summing measured 1.75x slower on the bare
-    aggregate — tools/microbench_decimal.py, PERFORMANCE.md).  The
+    aggregate — PERFORMANCE.md §decimal-accumulators).  The
     CALLER owns the proof obligation: per-group quantized |sum| must
     stay under 2^63 AT 100 TB, i.e. the GROUP's row count must not
     grow with corpus size (entity-keyed rollups where rows-per-entity

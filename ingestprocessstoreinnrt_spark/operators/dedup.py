@@ -1822,13 +1822,10 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume stays ~n * SEM_TARGET_CLUSTER at any corpus size — see the
     block comment above."""
     from . import ml
+    from .similarity import coarse_row
 
     emb = fan_out(load_table(spark, sf_dir, "embeddings"))
-    qv = emb.select("vec_id", ml._qvec().alias("qv")).cache()
-    k = _sem_k(_corpus_n(spark, sf_dir))
-    cents = ml.fit_centroids(
-        spark, qv, k, ml.KMEANS_ITERS, memo_key=sf_dir
-    )
+    cdf = coarse_row(spark, sf_dir, _sem_k(_corpus_n(spark, sf_dir)))
     # Cache only the assignment RESULT (vec_id, cid — ~16 B/row): the
     # n x k nearest-centroid fold is what must not recompute per
     # consumer.  The embedding arrays are NOT cached here — re-reading
@@ -1837,9 +1834,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # family's cache-eviction storm (PERFORMANCE.md r11: the in-sweep
     # warm ran 2x its isolated floor purely from storage pressure).
     assigned = (
-        ml.assign_nearest(
-            emb.withColumn("qv", ml._qvec()), ml._cdf_of(spark, cents)
-        )
+        ml.assign_nearest(emb.withColumn("qv", ml._qvec()), cdf)
         .select("vec_id", "cid")
         .cache()
     )

@@ -28,10 +28,10 @@ from pyspark.sql import functions as F
 
 from ..catalog import fan_out, load_table
 from ..functions.scalars import quantize
+from ..functions.vectors import sq_l2
 from ..planmemo import session_memo
 from ..plans.hints import maybe_broadcast
 from ..registry import Query
-from .artifacts import json_artifact
 
 FEATURES = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
 
@@ -217,40 +217,14 @@ def _qvec():
     )
 
 
-def memo_row_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
-    """One-row artifact frames (centroid/codebook rows) memoized per
-    session by CONTENTS: spark.createDataFrame yields a fresh RDD-backed
-    plan every call, so two invocations of the same query build UNEQUAL
-    plans and Spark's cache manager never dedups anything downstream of
-    the artifact row — the r11 sf10 probe caught dedup_semantic's warm
-    run re-paying the whole n x k assignment fold (46 s) because its
-    cached assignment frame descended from a fresh _cdf_of row.
-    Returning the SAME DataFrame object for the same contents makes
-    downstream plans structurally equal, so .cache() dedup works across
-    invocations."""
-    memo = session_memo(spark, "row_frame")
-    key = (schema, _freeze(rows))
-    df = memo.get(key)
-    if df is None:
-        df = memo[key] = spark.createDataFrame(rows, schema)
-    return df
-
-
-def _freeze(x):
-    if isinstance(x, (list, tuple)):
-        return tuple(_freeze(v) for v in x)
-    return x
-
-
 def _cdf_of(spark: SparkSession, c: list) -> DataFrame:
     """Centroids as ONE broadcastable row holding an array of
     (cid, vector), not as literals: the iteration plan keeps the same
     generated code every pass (codegen cache hit; literal-embedded
-    centroids recompiled ~1.5 s/pass measured at sf0.1).  Memoized by
-    contents (see memo_row_frame) so repeat invocations of a consumer
-    query produce plan-identical frames and hit their caches."""
-    return memo_row_frame(
-        spark,
+    centroids recompiled ~1.5 s/pass measured at sf0.1).  Every call
+    builds a new row; the fitted rows that queries share are built once
+    per session by the vector index (operators.similarity)."""
+    return spark.createDataFrame(
         [([(i, cv) for i, cv in c],)],
         "cents array<struct<cid:int, cv:array<bigint>>>",
     )
@@ -261,14 +235,6 @@ def assign_nearest(q: DataFrame, cdf: DataFrame) -> DataFrame:
     nearest centroid (squared L2 over quantized ints, ties to the
     smallest cid).  A pure per-row fold — no shuffle.  Shared between
     kmeans passes and the IVF coarse quantizer in operators.similarity."""
-
-    def dist(c):
-        return F.aggregate(
-            F.zip_with(F.col("qv"), c["cv"], lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
     init = F.struct(
         F.lit(int(4e18)).cast("long").alias("d"),
         F.lit(-1).cast("int").alias("cid"),
@@ -278,42 +244,41 @@ def assign_nearest(q: DataFrame, cdf: DataFrame) -> DataFrame:
         init,
         # least() on (d, cid) structs == ORDER BY dist, cid
         lambda acc, c: F.least(
-            acc, F.struct(dist(c).alias("d"), c["cid"].alias("cid"))
+            acc,
+            F.struct(sq_l2("qv", c["cv"]).alias("d"), c["cid"].alias("cid")),
         ),
     )
     return q.join(F.broadcast(cdf)).withColumn("cid", best["cid"])
 
 
-def _agg_pass(spark: SparkSession, q: DataFrame, c: list) -> dict:
+def _agg_pass(q: DataFrame, cdf: DataFrame) -> dict:
     """One Lloyd's aggregate: posexplode the vector and sum per
     (cid, pos) — a 2-column codegen aggregate over (k x dim) groups
     instead of a dim-wide one.  Same exact integer sums, but the narrow
     expression tree compiles ~2 s faster on first run, and EVERY pass
     (including the final one) reuses this single plan shape, so
-    whole-stage codegen compiles once for the whole loop."""
-    if not c:  # empty init list (empty/undersized table): no clusters
-        return {}
+    whole-stage codegen compiles once for the whole loop.  Returns
+    {cid: {"n": size, "s": {pos: sum}}} for the non-empty clusters."""
     rows = (
-        assign_nearest(q, _cdf_of(spark, c))
+        assign_nearest(q, cdf)
         .select("cid", F.posexplode("qv").alias("pos", "v"))
         .groupBy("cid", "pos")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("s"))
         .collect()
     )
-    dim = len(c[0][1])  # centroid width, not EMB_DIM: PQ fits subspaces
     got: dict = {}
     for r in rows:
-        e = got.setdefault(r["cid"], {"n": r["n"], "s": [0] * dim})
+        e = got.setdefault(r["cid"], {"n": r["n"], "s": {}})
         e["s"][r["pos"]] = r["s"]
     return got
 
 
 # Source files that shape a frame whose fit is persisted: this module
-# (the Lloyd's fit, kmeans_lloyd's frame), similarity.py (the IVF
+# (the Lloyd's fit), similarity.py (the vector index: the corpus
 # frame, the _ivfbase subset, the _pq/_rpq subspace and residual
-# slices) and dedup.py (SemDeDup's frame).  An edit to any of them
-# refits: PQ ADC lookups depend on centroid order (cid == list index),
-# so a fit written by older code must never be served.
+# slices) and dedup.py (SemDeDup's corpus-adaptive k).  An edit to any
+# of them refits: PQ ADC lookups depend on centroid order (cid == list
+# index), so a fit written by older code must never be served.
 _CENTROID_SOURCES = tuple(
     os.path.join(os.path.dirname(os.path.abspath(__file__)), f)
     for f in ("ml.py", "similarity.py", "dedup.py")
@@ -321,86 +286,58 @@ _CENTROID_SOURCES = tuple(
 
 
 def fit_centroids(
-    spark: SparkSession,
-    q: DataFrame,
-    k: int,
-    iters: int,
-    memo_key: str | None = None,
-    tag: str = "",
+    spark: SparkSession, q: DataFrame, k: int, iters: int
 ) -> list:
-    """Deterministic Lloyd's fit over a cached (vec_id, qv) frame:
-    init = first k vectors by vec_id, then iters-1 update passes.
-    Returns the final centroid list [(cid, [ints])] — metadata-scale.
-    Shared by kmeans_lloyd, the IVF index, and (per-subspace, via
-    `tag`) the PQ codebooks in operators.similarity.
-
-    `memo_key` is the data dir the frame was built from.  Given one,
-    the fit is a FITTED INDEX (the coarse quantizer an IVF system
-    persists next to the data): memoized per session, so whoever runs
-    second skips the iters-1 aggregate passes, and persisted through
-    operators.artifacts keyed on the embeddings table and
-    _CENTROID_SOURCES, so a fresh session reads it instead of refitting."""
-    if memo_key is None:
-        return _lloyd(spark, q, k, iters)
-    memo = session_memo(spark, "centroids")
-    key = (os.path.abspath(memo_key), k, iters, tag)
-    if key not in memo:
-        got = json_artifact(
-            memo_key,
-            f"centroids_k{k}_i{iters}{tag}",
-            lambda: _lloyd(spark, q, k, iters),
-            _CENTROID_SOURCES,
-            table="embeddings",
-        )
-        memo[key] = [(cid, cv) for cid, cv in got]
-    return memo[key]
-
-
-def _lloyd(spark: SparkSession, q: DataFrame, k: int, iters: int) -> list:
+    """Deterministic Lloyd's fit over a (vec_id, qv) frame: init = first
+    k vectors by vec_id, then iters-1 update passes.  Returns the final
+    centroid list [(cid, [ints])] — metadata-scale.  `q` is cached for
+    the passes and unpersisted after them, so nothing of a fit stays
+    registered.  The fits queries share are persisted and memoized by
+    the vector index (operators.similarity)."""
     import math
 
-    cents = [
-        (i, [int(v) for v in r.qv])
-        for i, r in enumerate(q.orderBy("vec_id").limit(k).collect())
-    ]
-    dim = len(cents[0][1]) if cents else EMB_DIM
-    # an undersized table yields len(cents) < k: iterate over the
-    # centroids that EXIST — range(k) would index past the init list
-    for _ in range(iters - 1):
-        got = _agg_pass(spark, q, cents)
+    q = q.cache()
+    try:
         cents = [
-            (
-                i,
-                [
-                    int(math.floor(got[i]["s"][j] / got[i]["n"] + 0.5))
-                    for j in range(dim)
-                ],
-            )
-            if i in got
-            else cents[i]  # empty cluster keeps its centroid
-            for i in range(len(cents))
+            (i, [int(v) for v in r.qv])
+            for i, r in enumerate(q.orderBy("vec_id").limit(k).collect())
         ]
+        # an undersized table yields len(cents) < k: iterate over the
+        # centroids that EXIST — range(k) would index past the init list
+        for _ in range(iters - 1 if cents else 0):
+            got = _agg_pass(q, _cdf_of(spark, cents))
+            cents = [
+                (
+                    i,
+                    [
+                        int(math.floor(got[i]["s"][j] / got[i]["n"] + 0.5))
+                        for j in range(len(cv))
+                    ],
+                )
+                if i in got
+                else (i, cv)  # empty cluster keeps its centroid
+                for i, cv in cents
+            ]
+    finally:
+        q.unpersist()
     return cents
 
 
-def kmeans_lloyd(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = K_CLUSTERS,
-    iters: int = KMEANS_ITERS,
-) -> DataFrame:
+def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A9 — deterministic Lloyd's over the embeddings table; returns
-    (cluster_id, cluster_size, centroid_l1) per non-empty cluster."""
+    (cluster_id, cluster_size, centroid_l1) per non-empty cluster.  The
+    fit is the vector index's coarse quantizer."""
     import math
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.select("vec_id", _qvec().alias("qv")).cache()
-    cents = fit_centroids(spark, q, k, iters, memo_key=sf_dir)
+    from .similarity import coarse_row
 
+    emb = load_table(spark, sf_dir, "embeddings")
     # final pass reuses the same aggregate plan; the k-row summary
     # (sizes + centroid L1) is finalized on the driver — metadata-scale,
     # like the centroid updates themselves
-    got = _agg_pass(spark, q, cents)
+    got = _agg_pass(
+        emb.select("vec_id", _qvec().alias("qv")), coarse_row(spark, sf_dir)
+    )
     out_rows = [
         (
             int(i),
@@ -414,7 +351,6 @@ def kmeans_lloyd(
         )
         for i in sorted(got)
     ]
-    q.unpersist()
     return spark.createDataFrame(
         out_rows, "cluster_id int, cluster_size long, centroid_l1 long"
     )

@@ -1,8 +1,9 @@
 """The one home for in-process memos.
 
 Every frame or fit memo in the package (declared-query plans, table
-loads, fitted pair and tokenizer frames, centroid lists, the logistic
-fit) is a dict from ``session_memo(spark, name)``, with one lifecycle:
+loads, the basket and vector indexes, fitted pair and tokenizer
+frames, the logistic fit) is a dict from ``session_memo(spark, name)``,
+with one lifecycle:
 
 * Entries live as long as the Spark session that built them.  The
   first call from another application or session drops every entry of

@@ -349,15 +349,16 @@ def test_json_artifact_unwritable_cache_serves_the_fit_once(tmp_path, monkeypatc
 
 
 def test_centroid_artifact_keys_on_data_and_code(spark, tmp_path, monkeypatch):
-    """fit_centroids persists through json_artifact: a same-size
-    rewrite of embeddings.parquet within the same whole second refits,
-    an edit to a source that shapes the fit refits, and a fresh session
-    reads the persisted fit back unchanged."""
+    """The vector index's coarse quantizer persists through
+    json_artifact: a same-size rewrite of embeddings.parquet within the
+    same whole second refits, an edit to a source that shapes the fit
+    refits, and a fresh session reads the persisted fit back
+    unchanged."""
     import shutil
 
     from ingestprocessstoreinnrt_spark import planmemo
-    from ingestprocessstoreinnrt_spark.catalog import load_table
     from ingestprocessstoreinnrt_spark.operators import ml
+    from ingestprocessstoreinnrt_spark.operators import similarity as sim
     from tests.conftest import SF_SMOKE
 
     here = os.path.dirname(os.path.abspath(ml.__file__))
@@ -377,10 +378,8 @@ def test_centroid_artifact_keys_on_data_and_code(spark, tmp_path, monkeypatch):
 
     def fit(session):
         before = dict(A.STATS)
-        q = load_table(session, sf, "embeddings").select(
-            "vec_id", ml._qvec().alias("qv")
-        )
-        cents = ml.fit_centroids(session, q, 4, 2, memo_key=sf)
+        row = sim.coarse_row(session, sf, 4).first()
+        cents = [(c.cid, c.cv) for c in row.cents]
         return cents, A.STATS["hit"] - before["hit"], A.STATS["miss"] - before["miss"]
 
     first, hits, misses = fit(spark)

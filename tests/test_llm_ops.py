@@ -974,11 +974,17 @@ def test_ann_incremental_maintained_index_equals_rebuilt(spark, tmp_path):
     corpus rescan) — answers top-k EXACTLY like an index rebuilt from
     scratch over the same data, and exactly like the oracled
     sim_ann_incremental composition."""
+    from ingestprocessstoreinnrt_spark.catalog import fan_out, load_table
     from ingestprocessstoreinnrt_spark.operators import similarity as sim
     from ingestprocessstoreinnrt_spark.streaming.upsert import UpsertTable
     from pyspark.sql import functions as F
 
-    emb, base, cdf = sim.fit_base_quantizer(spark, SF_ORACLE)
+    emb = fan_out(load_table(spark, SF_ORACLE, "embeddings"))
+    base = emb.filter(
+        F.pmod(F.col("vec_id"), F.lit(sim.ANN_INC_MOD))
+        != F.lit(sim.ANN_INC_REM)
+    )
+    cdf = sim.base_coarse_row(spark, SF_ORACLE)
     table = UpsertTable(
         spark, str(tmp_path / "ivf"), ["vec_id"], num_buckets=4
     )
@@ -1016,11 +1022,13 @@ def test_pq_codes_incremental_upsert_equals_rebuilt(spark, tmp_path):
     batch encoded with the SAME pinned codebooks and upserted — equals
     a one-pass re-encode of everything (encoding is a pure per-row
     function of the pinned codebook artifact)."""
+    from ingestprocessstoreinnrt_spark.catalog import fan_out, load_table
     from ingestprocessstoreinnrt_spark.operators import similarity as sim
     from ingestprocessstoreinnrt_spark.streaming.upsert import UpsertTable
     from pyspark.sql import functions as F
 
-    emb, cdf = sim._pq_codebook_row(spark, SF_ORACLE)
+    emb = fan_out(load_table(spark, SF_ORACLE, "embeddings"))
+    cdf = sim.pq_codebook_row(spark, SF_ORACLE)
     is_batch = (
         F.pmod(F.col("vec_id"), F.lit(sim.ANN_INC_MOD))
         == F.lit(sim.ANN_INC_REM)
@@ -1101,17 +1109,13 @@ def test_ivfpq_maintained_index_equals_rebuilt(spark, tmp_path):
     one-pass rebuild (both constituent folds are pure per-row
     functions of the pinned quantizer/codebooks)."""
     from ingestprocessstoreinnrt_spark.catalog import fan_out, load_table
-    from ingestprocessstoreinnrt_spark.operators import ml
     from ingestprocessstoreinnrt_spark.operators import similarity as sim
     from ingestprocessstoreinnrt_spark.streaming.upsert import UpsertTable
     from pyspark.sql import functions as F
 
-    emb, pq_cdf = sim._pq_codebook_row(spark, SF_ORACLE)
-    qv = emb.select("vec_id", ml._qvec().alias("qv"))
-    cents = ml.fit_centroids(
-        spark, qv, ml.K_CLUSTERS, ml.KMEANS_ITERS, memo_key=SF_ORACLE
-    )
-    cdf = ml._cdf_of(spark, cents)
+    emb = fan_out(load_table(spark, SF_ORACLE, "embeddings"))
+    pq_cdf = sim.pq_codebook_row(spark, SF_ORACLE)
+    cdf = sim.coarse_row(spark, SF_ORACLE)
     is_batch = (
         F.pmod(F.col("vec_id"), F.lit(sim.ANN_INC_MOD))
         == F.lit(sim.ANN_INC_REM)
@@ -1164,16 +1168,15 @@ def test_residual_pq_beats_raw_pq_fidelity(spark):
         for r in sim.ivfpq_residual_encode(spark, SF_ORACLE)
         .select("vec_id", "cid").collect()
     }
-    emb, pq_cdf = sim._pq_codebook_row(spark, SF_ORACLE)
-    from ingestprocessstoreinnrt_spark.operators import ml
+    from ingestprocessstoreinnrt_spark.catalog import fan_out, load_table
 
-    qv = emb.select("vec_id", ml._qvec().alias("qv"))
-    cents = ml.fit_centroids(
-        spark, qv, ml.K_CLUSTERS, ml.KMEANS_ITERS, memo_key=SF_ORACLE
-    )
+    emb = fan_out(load_table(spark, SF_ORACLE, "embeddings"))
+    pq_cdf = sim.pq_codebook_row(spark, SF_ORACLE)
     icids = {
         (r.vec_id, r.cid)
-        for r in sim.ivfpq_index_rows(emb, ml._cdf_of(spark, cents), pq_cdf)
+        for r in sim.ivfpq_index_rows(
+            emb, sim.coarse_row(spark, SF_ORACLE), pq_cdf
+        )
         .select("vec_id", "cid").collect()
     }
     assert rcids == icids
@@ -1211,18 +1214,13 @@ def test_ivfadc_maintained_index_equals_rebuilt(spark, tmp_path):
     refit) equals a one-pass rebuild — closing the incremental story
     for the residual layout like the raw IVF/PQ/LSH tiers."""
     from ingestprocessstoreinnrt_spark.catalog import fan_out, load_table
-    from ingestprocessstoreinnrt_spark.operators import ml
     from ingestprocessstoreinnrt_spark.operators import similarity as sim
     from ingestprocessstoreinnrt_spark.streaming.upsert import UpsertTable
     from pyspark.sql import functions as F
 
-    _, rcdf = sim._rpq_codebook_row(spark, SF_ORACLE)
+    rcdf = sim.rpq_codebook_row(spark, SF_ORACLE)
     emb = fan_out(load_table(spark, SF_ORACLE, "embeddings"))
-    qv = emb.select("vec_id", ml._qvec().alias("qv"))
-    cents = ml.fit_centroids(
-        spark, qv, ml.K_CLUSTERS, ml.KMEANS_ITERS, memo_key=SF_ORACLE
-    )
-    cdf = ml._cdf_of(spark, cents)
+    cdf = sim.coarse_row(spark, SF_ORACLE)
     is_batch = (
         F.pmod(F.col("vec_id"), F.lit(sim.ANN_INC_MOD))
         == F.lit(sim.ANN_INC_REM)
@@ -1255,19 +1253,14 @@ def test_ivfadc_streamed_ingest_serves_like_rebuilt(spark, tmp_path):
     compaction — after every batch the maintained table must serve
     EXACTLY what a one-pass rebuild over the same corpus serves."""
     from ingestprocessstoreinnrt_spark.catalog import fan_out, load_table
-    from ingestprocessstoreinnrt_spark.operators import ml
     from ingestprocessstoreinnrt_spark.operators import similarity as sim
     from ingestprocessstoreinnrt_spark.streaming import compact
     from ingestprocessstoreinnrt_spark.streaming.upsert import UpsertTable
     from pyspark.sql import functions as F
 
-    _, rcdf = sim._rpq_codebook_row(spark, SF_ORACLE)
+    rcdf = sim.rpq_codebook_row(spark, SF_ORACLE)
     emb = fan_out(load_table(spark, SF_ORACLE, "embeddings"))
-    qv = emb.select("vec_id", ml._qvec().alias("qv"))
-    cents = ml.fit_centroids(
-        spark, qv, ml.K_CLUSTERS, ml.KMEANS_ITERS, memo_key=SF_ORACLE
-    )
-    cdf = ml._cdf_of(spark, cents)
+    cdf = sim.coarse_row(spark, SF_ORACLE)
 
     part = F.pmod(F.col("vec_id"), F.lit(8))
     table = UpsertTable(

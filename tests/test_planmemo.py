@@ -109,7 +109,12 @@ def test_impure_queries_run_jobs_when_rebuilt(spark):
 def test_memoized_frame_still_computes_and_clear_forgets(spark):
     import __spark_entry__ as e
     from ingestprocessstoreinnrt_spark.catalog import load_table
-    from ingestprocessstoreinnrt_spark.operators import basket, curation, dedup
+    from ingestprocessstoreinnrt_spark.operators import (
+        basket,
+        curation,
+        dedup,
+        similarity,
+    )
 
     qs = e.queries()
     name = next(n for n, q in e.registry().items() if not q.impure)
@@ -120,6 +125,8 @@ def test_memoized_frame_still_computes_and_clear_forgets(spark):
         "lsh_pair_frame": lambda: dedup.lsh_pair_frame(spark, SF),
         "_pair_counts": lambda: basket._pair_counts(spark, SF),
         "triangle_edges": lambda: basket.triangle_edges(spark, SF),
+        "coarse_row": lambda: similarity.coarse_row(spark, SF),
+        "pq_codebook_row": lambda: similarity.pq_codebook_row(spark, SF),
         "_run_bpe": lambda: curation._run_bpe(spark, SF),
         "load_table": lambda: load_table(spark, SF, "orders"),
     }
@@ -132,6 +139,40 @@ def test_memoized_frame_still_computes_and_clear_forgets(spark):
     assert df2.count() == n1
     for m, fn in memoized.items():
         assert fn() is not before[m], f"{m}: clear() must forget it"
+
+
+def test_fitted_index_leaves_no_quantized_frame_cached(spark):
+    """The embedding queries read their fits from the vector index, and
+    a Lloyd's fit caches its input only while its passes run: building
+    the IVF, IVF-PQ, IVFADC and SemDeDup queries leaves no cache entry
+    on the quantized-vector frame, whether their fits ran or were read
+    back from the artifacts."""
+    from pyspark import StorageLevel
+
+    import __spark_entry__ as e
+    from ingestprocessstoreinnrt_spark.catalog import fan_out, load_table
+    from ingestprocessstoreinnrt_spark.operators import ml
+
+    qs = e.queries()
+    names = (
+        "sim_ann_ivf",
+        "sim_ivfpq_search",
+        "sim_ivfpq_residual_search",
+        "dedup_semantic",
+    )
+
+    def quantized_level():
+        emb = fan_out(load_table(spark, SF, "embeddings"))
+        return emb.select("vec_id", ml._qvec().alias("qv")).storageLevel
+
+    for name in names:  # fits on an artifact miss, reads them on a hit
+        qs[name](spark, SF)
+    assert quantized_level() == StorageLevel.NONE
+    planmemo.clear()
+    spark.catalog.clearCache()
+    for name in names:  # the artifacts hit
+        qs[name](spark, SF)
+    assert quantized_level() == StorageLevel.NONE
 
 
 def test_session_columns_shared_across_sessions_until_clear(spark):

@@ -434,8 +434,8 @@ def test_r6_ops_have_clean_plans(spark):
     without any cartesian; SemDeDup's only nested-loop join is the
     single-row broadcast centroid ride-in (metadata-scale, same shape
     as ann_ivf's), and its pair generation is the salted equi-join."""
-    # Plan-SHAPE assertions need uncached plans: since the r11
-    # artifact-row memo (ml.memo_row_frame) repeat plans are EQUAL, so
+    # Plan-SHAPE assertions need uncached plans: the vector index hands
+    # every build the same centroid row, so repeat plans are EQUAL and
     # frames cached by earlier test files dedup into these plans as
     # InMemoryTableScan and hide the join nodes under inspection.
     spark.catalog.clearCache()

@@ -208,7 +208,7 @@ def test_semdedup_design_grain_pair_counts_bounded(spark):
     target = 250
     k = max(8, n // target)
     qv = emb.select("vec_id", ml._qvec().alias("qv"))
-    cents = ml.fit_centroids(spark, qv, k, ml.KMEANS_ITERS, memo_key=None)
+    cents = ml.fit_centroids(spark, qv, k, ml.KMEANS_ITERS)
     assigned = ml.assign_nearest(
         emb.withColumn("qv", ml._qvec()), ml._cdf_of(spark, cents)
     ).select("vec_id", "cid")
@@ -248,14 +248,14 @@ def test_fit_centroids_undersized_table(spark):
 
     rows = [(i, [i * 10] * 4) for i in range(3)]  # 3 rows, ask k=8
     qv = spark.createDataFrame(rows, "vec_id long, qv array<bigint>")
-    cents = ml.fit_centroids(spark, qv, k=8, iters=3, memo_key=None)
+    cents = ml.fit_centroids(spark, qv, k=8, iters=3)
     assert len(cents) == 3
     # each row is its own nearest centroid, so Lloyd's is a fixpoint
     assert [cv for _, cv in cents] == [[0] * 4, [10] * 4, [20] * 4]
 
     # empty table: no clusters, no crash
     empty = qv.filter(F.col("vec_id") < 0)
-    assert ml.fit_centroids(spark, empty, k=8, iters=3, memo_key=None) == []
+    assert ml.fit_centroids(spark, empty, k=8, iters=3) == []
 
 
 def test_quantized_sums_survive_beyond_int64(spark):

@@ -1226,9 +1226,15 @@ def test_streaming_ann_index_upsert_equals_batch(spark, workdir):
     upserted into the UpsertTable-persisted IVF index (exactly-once
     via apply_batch) — no refit, no corpus rescan.  The maintained
     index then serves top-k identically to a one-pass rebuild."""
+    from ingestprocessstoreinnrt_spark.catalog import fan_out
     from ingestprocessstoreinnrt_spark.operators import similarity as sim
 
-    emb, base, cdf = sim.fit_base_quantizer(spark, SF_ORACLE)
+    emb = fan_out(load_table(spark, SF_ORACLE, "embeddings"))
+    base = emb.filter(
+        F.pmod(F.col("vec_id"), F.lit(sim.ANN_INC_MOD))
+        != F.lit(sim.ANN_INC_REM)
+    )
+    cdf = sim.base_coarse_row(spark, SF_ORACLE)
     table = UpsertTable(spark, workdir + "/ivf", ["vec_id"], num_buckets=4)
     table.init(sim.ivf_assign_rows(base, cdf))
     batch = emb.filter(
