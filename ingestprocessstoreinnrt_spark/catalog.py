@@ -60,20 +60,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # every load self-sufficient — on hits too.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    memo = session_memo(spark, "load_table")
-    key = (os.path.abspath(sf_dir), name)
-    got = memo.get(key)
-    if got is not None:
-        return got
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    for col in _TS_COLS.get(name, ()):
-        dt = dict(df.dtypes).get(col)
-        if dt == "bigint":  # nanos-as-long generation
-            df = df.withColumn(col, F.expr(f"timestamp_micros({col} DIV 1000)"))
-        elif dt == "timestamp_ntz":  # NTZ slipped through (pre-set reader conf)
-            df = df.withColumn(col, F.col(col).cast("timestamp"))
-    memo[key] = df
-    return df
+
+    def build() -> DataFrame:
+        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        for col in _TS_COLS.get(name, ()):
+            dt = dict(df.dtypes).get(col)
+            if dt == "bigint":  # nanos-as-long generation
+                df = df.withColumn(
+                    col, F.expr(f"timestamp_micros({col} DIV 1000)")
+                )
+            elif dt == "timestamp_ntz":  # NTZ slipped through (pre-set reader conf)
+                df = df.withColumn(col, F.col(col).cast("timestamp"))
+        return df
+
+    return session_memo(spark, "load_table", sf_dir, name, build)
 
 
 def fan_out(df: DataFrame) -> DataFrame:

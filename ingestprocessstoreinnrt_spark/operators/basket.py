@@ -4,10 +4,10 @@ reference's BI layer gestures at with its group-by batteries
 (nyTaxi impala queries, SURVEY 2.5) but never takes to pair grain.
 
 Every query here reads one basket index, built once per session
-(_index): the item supports, the order count N and the co-occurrence
-pair frame, persisted per corpus, plus the support-thresholded
-co-purchase edge set cached on top of the pairs.  No query scans
-lineitem while the artifacts hit.
+(planmemo.session_memo "basket_index"): the item supports, the order
+count N and the co-occurrence pair frame, persisted per corpus, plus
+the support-thresholded co-purchase edge set cached on top of the
+pairs.  No query scans lineitem while the artifacts hit.
 
   * basket_pair_lift — association pairs (p1, p2) with support and
     lift, the apriori primitives, joined from the pairs, the item
@@ -34,7 +34,6 @@ lineitem while the artifacts hit.
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -61,20 +60,6 @@ def _order_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _index(spark: SparkSession, sf_dir: str, part: str, build: Callable):
-    """One part of this corpus's basket index, built once per session
-    (planmemo.session_memo): the item supports, the order count, the
-    pair frame and the co-purchase edges derived from it.  The first
-    three are persisted per corpus (operators.artifacts) and keyed on
-    lineitem and this module's code, so a fresh session reads them and
-    no query scans lineitem while the artifacts hit."""
-    memo = session_memo(spark, "basket_index")
-    key = (os.path.abspath(sf_dir), part)
-    if key not in memo:
-        memo[key] = build()
-    return memo[key]
-
-
 def _item_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(p, n_ord): the number of orders each part appears in — the
     apriori first pass, over every part in lineitem.  The pair build
@@ -87,8 +72,9 @@ def _item_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("n_ord")
         )
 
-    return _index(
+    return session_memo(
         spark,
+        "basket_index",
         sf_dir,
         "item_orders",
         lambda: corpus_artifact(
@@ -105,8 +91,9 @@ def _n_orders(spark: SparkSession, sf_dir: str) -> int:
             F.countDistinct("o")
         ).first()[0]
 
-    return _index(
+    return session_memo(
         spark,
+        "basket_index",
         sf_dir,
         "n_orders",
         lambda: json_artifact(
@@ -165,8 +152,9 @@ def _pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # artifact name pins the tuning knobs: a retuned prune/cap must
     # rebuild, never serve a stale frame
-    return _index(
+    return session_memo(
         spark,
+        "basket_index",
         sf_dir,
         "pairs",
         lambda: corpus_artifact(
@@ -283,8 +271,9 @@ def triangle_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads.  The .cache() hands them one in-memory edge set per
     session, filled by the first action that reads it; building a
     query on it runs no Spark job."""
-    return _index(
+    return session_memo(
         spark,
+        "basket_index",
         sf_dir,
         "edges",
         lambda: _pair_counts(spark, sf_dir)

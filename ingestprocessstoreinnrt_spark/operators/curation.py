@@ -23,8 +23,6 @@ Scale shapes:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -736,32 +734,29 @@ def _run_bpe(
     """Run the K-merge loop; returns (merge records, final vocabulary
     frame with columns word/ws/wc) — shared by the trainer query and
     the encoder query."""
-    memo = session_memo(spark, "bpe")
-    key = os.path.abspath(sf_dir)
-    got = memo.get(key)
-    if got is not None:
-        return got
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
-    vocab = _bpe_init_vocab(docs)
-    merges: list[tuple] = []
-    for k in range(1, BPE_MERGES + 1):
-        best = (
-            _bpe_pair_frame(vocab)
-            .orderBy(
-                F.col("cnt").desc(),
-                F.col("lhs").asc(),
-                F.col("rhs").asc(),
+
+    def build() -> tuple[list[tuple], DataFrame]:
+        vocab = _bpe_init_vocab(fan_out(load_table(spark, sf_dir, "documents")))
+        merges: list[tuple] = []
+        for k in range(1, BPE_MERGES + 1):
+            best = (
+                _bpe_pair_frame(vocab)
+                .orderBy(
+                    F.col("cnt").desc(),
+                    F.col("lhs").asc(),
+                    F.col("rhs").asc(),
+                )
+                .limit(1)
+                .collect()
             )
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            break
-        lhs, rhs, cnt = best[0].lhs, best[0].rhs, best[0].cnt
-        merges.append((k, lhs, rhs, lhs + rhs, cnt))
-        vocab = _bpe_apply(vocab, [(lhs, rhs)])
-    got = memo[key] = (merges, vocab)
-    return got
+            if not best:
+                break
+            lhs, rhs, cnt = best[0].lhs, best[0].rhs, best[0].cnt
+            merges.append((k, lhs, rhs, lhs + rhs, cnt))
+            vocab = _bpe_apply(vocab, [(lhs, rhs)])
+        return merges, vocab
+
+    return session_memo(spark, "bpe", sf_dir, None, build)
 
 
 def bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:

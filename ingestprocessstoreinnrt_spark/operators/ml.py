@@ -2290,11 +2290,10 @@ def _fitted_logistic(
     IRLS fit instead of paying the LOGISTIC_ROUNDS x 4-aggregate driver
     loop three times."""
     feats = _logi_feats(spark, sf_dir)
-    memo = session_memo(spark, "logistic_beta")
-    key = os.path.abspath(sf_dir)
-    if key not in memo:
-        memo[key] = _fit_logistic(feats)
-    return feats, memo[key]
+    beta = session_memo(
+        spark, "logistic_beta", sf_dir, None, lambda: _fit_logistic(feats)
+    )
+    return feats, beta
 
 
 def logistic_score(spark: SparkSession, sf_dir: str) -> DataFrame:

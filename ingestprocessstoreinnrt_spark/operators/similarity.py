@@ -23,8 +23,8 @@ Serving tiers, each oracled against a DuckDB twin:
     pinned fitted parts to new rows with no refit.
 
 The fitted tiers read one vector index, built once per session
-(_index: planmemo.session_memo "vector_index", keyed by the corpus
-dir and the part).  Its parts:
+(planmemo.session_memo "vector_index", keyed by the corpus dir and
+the part).  Its parts:
   * coarse_row(k) — the coarse quantizer, k Lloyd's centroids of the
     quantized corpus as one broadcastable `cents` row.  k = K_CLUSTERS
     serves IVF, IVF-PQ, IVFADC and ml_kmeans; dedup_semantic's
@@ -52,9 +52,6 @@ on last-ulp engine differences.
 
 from __future__ import annotations
 
-import os
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -69,16 +66,6 @@ TOP_K = 10
 N_QUERIES = 8  # vec_id < 8 are the demo query vectors
 
 # --- the vector index (module docstring) -----------------------------------
-
-
-def _index(spark: SparkSession, sf_dir: str, part, build: Callable):
-    """One part of this corpus's vector index, built once per session
-    (planmemo.session_memo)."""
-    memo = session_memo(spark, "vector_index")
-    key = (os.path.abspath(sf_dir), part)
-    if key not in memo:
-        memo[key] = build()
-    return memo[key]
 
 
 def _fitted(
@@ -113,7 +100,7 @@ def coarse_row(
             spark, _fitted(spark, sf_dir, q, k, ml.KMEANS_ITERS, "")
         )
 
-    return _index(spark, sf_dir, ("coarse", k), build)
+    return session_memo(spark, "vector_index", sf_dir, ("coarse", k), build)
 
 
 def base_coarse_row(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -131,7 +118,7 @@ def base_coarse_row(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return ml._cdf_of(spark, fit)
 
-    return _index(spark, sf_dir, "ivfbase", build)
+    return session_memo(spark, "vector_index", sf_dir, "ivfbase", build)
 
 
 def _subspace_codebooks(
@@ -164,8 +151,9 @@ def pq_codebook_row(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PQ codebooks of the quantized corpus (tags _pq{m}) — shared
     by pq_quantize (encode), pq_search (ADC serve) and the IVF-PQ
     index."""
-    return _index(
+    return session_memo(
         spark,
+        "vector_index",
         sf_dir,
         "pq",
         lambda: _subspace_codebooks(
@@ -181,8 +169,9 @@ def pq_codebook_row(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _residual_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, cid, rv): each vector's coarse cell and its quantized
     residual rv = q(x) - centroid[cid] (exact BIGINTs)."""
-    return _index(
+    return session_memo(
         spark,
+        "vector_index",
         sf_dir,
         "residual",
         lambda: residual_rows(
@@ -194,8 +183,9 @@ def _residual_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def rpq_codebook_row(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PQ codebooks FITTED ON RESIDUAL SLICES (tags _rpq{m})."""
-    return _index(
+    return session_memo(
         spark,
+        "vector_index",
         sf_dir,
         "rpq",
         lambda: _subspace_codebooks(
@@ -209,8 +199,9 @@ def _ivfpq_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     cached: the PQ encode fold is the family's most expensive
     projection, served by both sim_ivfpq_search and sim_ivfpq_recall
     (~|corpus| narrow code rows)."""
-    return _index(
+    return session_memo(
         spark,
+        "vector_index",
         sf_dir,
         "ivfpq_rows",
         lambda: ivfpq_index_rows(
@@ -227,8 +218,9 @@ def _residual_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     verb (sim_ivfpq_residual, which sorts it) and the IVFADC serve
     (sim_ivfpq_residual_search, which drops qerr), so the expensive
     per-row fold runs once per session, not once per verb."""
-    return _index(
+    return session_memo(
         spark,
+        "vector_index",
         sf_dir,
         "residual_codes",
         lambda: _pq_encode(

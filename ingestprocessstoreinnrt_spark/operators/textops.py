@@ -737,16 +737,17 @@ GROUP BY doc_id
 # introduced.  The diversity/yield metric behind "diminishing returns"
 # curves when growing a training corpus.  Plan: one shingle explode,
 # one window min per gram (single shuffle on the gram hash — uniform by
-# construction), one per-doc aggregate.  Reuses dedup's cached
-# _shingle_frame (hashed shingles: equality-preserving, so counts are
-# identical to the oracle's raw-string shingles — the cross-engine
-# match doubles as a collision check, same argument as _shingle_frame).
+# construction), one per-doc aggregate.  Reads the dedup index's
+# cached corpus_shingles (hashed shingles: equality-preserving, so
+# counts are identical to the oracle's raw-string shingles — the
+# cross-engine match doubles as a collision check, same argument as
+# dedup._shingle_frame).
 
 
 def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import _shingle_frame
+    from .dedup import corpus_shingles
 
-    sh = _shingle_frame(fan_out(load_table(spark, sf_dir, "documents")))
+    sh = corpus_shingles(spark, sf_dir)
     # n_new per doc WITHOUT rejoining the exploded frame: min doc per
     # gram (map-side-combinable MIN — a window over gram would instead
     # SORT the whole exploded frame), then count grams per first-owner.

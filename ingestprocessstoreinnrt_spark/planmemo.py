@@ -1,19 +1,31 @@
 """The one home for in-process memos.
 
-Every frame or fit memo in the package (declared-query plans, table
-loads, the basket and vector indexes, fitted pair and tokenizer
-frames, the logistic fit) is a dict from ``session_memo(spark, name)``,
-with one lifecycle:
+Every frame or fit memo in the package goes through one accessor,
+``session_memo(spark, name, sf_dir, part, build)``: it keys the entry
+on ``(os.path.abspath(sf_dir), part)`` inside memo `name`, calls
+``build()`` on a miss and hands back the entry.  The memos:
+
+* ``"plan"`` — the declared queries' frames (``memoize_pure``);
+* ``"load_table"`` — the parquet table frames (catalog.load_table);
+* ``"basket_index"`` — the basket index (operators/basket.py);
+* ``"vector_index"`` — the fitted vector index (operators/similarity.py);
+* ``"dedup_index"`` — the near-duplicate index (operators/dedup.py);
+* ``"bpe"`` and ``"logistic_beta"`` — the tokenizer and logistic fits.
+
+One lifecycle for all of them:
 
 * Entries live as long as the Spark session that built them.  The
   first call from another application or session drops every entry of
   the old one, so dead sessions' DataFrames never pin py4j handles.
-* Callers key entries by ``os.path.abspath(sf_dir)`` plus their own
-  parameters; a hit hands back the identical object, which downstream
-  ``.cache()`` dedup and the benchmark's memo-hit count rely on.
-* ``clear()`` empties every memo, the column memo below included;
-  bench.py and tools/isolated_probe.py call it with
-  ``spark.catalog.clearCache()`` at each family boundary.
+* A hit hands back the identical object, which shared ``.cache()``
+  entries and the benchmark's memo-hit count rely on.  A part that
+  caches its frame does so once, inside its ``build``.
+* ``clear()`` empties every memo, the column memo below included.
+  Callers clear the Spark cache and the memos together
+  (``spark.catalog.clearCache()`` then ``clear()``): after a bare
+  ``clearCache()`` a memoized part stays memoized but uncached, and
+  every later query over it recomputes it on each action.  bench.py
+  and tools/isolated_probe.py do both at each family boundary.
 
 The upsert path's column lists (the taxi entity's aggregates and
 zero-fill map, merge_keyed's requantize map and merge aggregates) live
@@ -82,9 +94,16 @@ def _session_token(spark: SparkSession) -> tuple[str, str]:
     return app, sess
 
 
-def session_memo(spark: SparkSession, name: str) -> dict:
-    """The dict of memo `name` for `spark`'s session.  The first call
-    from a new application or session drops every other session's
+def session_memo(
+    spark: SparkSession,
+    name: str,
+    sf_dir: str,
+    part: object,
+    build: Callable[[], T],
+) -> T:
+    """Entry `part` of memo `name` for the corpus at `sf_dir`, built by
+    `build()` once per session (see the module docstring).  The first
+    call from a new application or session drops every other session's
     entries (ADVICE r13: a stale session UUID of a still-live app would
     otherwise accumulate dead DataFrame handles)."""
     token = _session_token(spark)
@@ -92,7 +111,11 @@ def session_memo(spark: SparkSession, name: str) -> dict:
     if memos is None:
         _MEMOS.clear()
         memos = _MEMOS[token] = {}
-    return memos.setdefault(name, {})
+    memo = memos.setdefault(name, {})
+    key = (os.path.abspath(sf_dir), part)
+    if key not in memo:
+        memo[key] = build()
+    return memo[key]
 
 
 def session_columns(
@@ -121,12 +144,9 @@ def clear() -> None:
 
 def _wrap(name: str, fn):
     def wrapped(spark, sf_dir):
-        memo = session_memo(spark, "plan")
-        key = (name, os.path.abspath(sf_dir))
-        df = memo.get(key)
-        if df is None:
-            df = memo[key] = fn(spark, sf_dir)
-        return df
+        return session_memo(
+            spark, "plan", sf_dir, name, lambda: fn(spark, sf_dir)
+        )
 
     wrapped.__name__ = f"memoized_{name}"
     wrapped.__wrapped__ = fn

@@ -559,25 +559,30 @@ def test_dup_spans_exact_boundaries(spark, tmp_path):
     assert len([g for g in got if g[0] == 3]) == 2
 
 
-def test_run_bpe_memo_hits_and_stays_correct(spark):
+def test_run_bpe_memo_hits_and_stays_correct(spark, monkeypatch):
     """The fitted-tokenizer memo (r13): a second _run_bpe call for the
     same (app, corpus) returns the memoized fit without re-running the
     merge loop, and the memoized merges are the ones bpe_train
     declares; a different corpus key misses independently."""
     from tests.conftest import SF_ORACLE, SF_SMOKE
 
-    memo = planmemo.session_memo(spark, "bpe")
-    memo.clear()
+    fits = []
+    init = curation._bpe_init_vocab
+    monkeypatch.setattr(
+        curation, "_bpe_init_vocab", lambda d: fits.append(1) or init(d)
+    )
+    planmemo.clear()
     m1, v1 = curation._run_bpe(spark, SF_ORACLE)
-    assert len(memo) == 1
+    assert len(fits) == 1
     m2, v2 = curation._run_bpe(spark, SF_ORACLE)
     assert m2 is m1 and v2 is v1  # memo hit, not a re-fit
+    assert len(fits) == 1
     got = [
         (r.merge_idx, r.lhs, r.rhs, r.merged, r.pair_count)
         for r in curation.bpe_train(spark, SF_ORACLE).collect()
     ]
     assert got == sorted(m1)  # the declared result IS the memoized fit
     m3, _ = curation._run_bpe(spark, SF_SMOKE)
-    assert len(memo) == 2  # distinct corpus, distinct key
+    assert len(fits) == 2  # distinct corpus, distinct key
     assert m3 != m1 or m3 == m1  # smoke fit computed (no raise)
-    memo.clear()
+    planmemo.clear()

@@ -85,6 +85,7 @@ def test_impure_queries_are_not_memoized(spark):
 
 def test_impure_queries_run_jobs_when_rebuilt(spark):
     import __spark_entry__ as e
+    from ingestprocessstoreinnrt_spark.catalog import TABLES, load_table
 
     qs = e.queries()
     impure = sorted(n for n, q in e.registry().items() if q.impure)
@@ -93,8 +94,12 @@ def test_impure_queries_run_jobs_when_rebuilt(spark):
     pure_now = []
     for name in impure:
         # a cold rebuild: with warm fit memos some builders (the basket
-        # pair-artifact openers) skip their jobs
+        # pair-artifact openers) skip their jobs.  The tables are loaded
+        # again before the job group opens: a table load's schema
+        # inference job is not construction.
         planmemo.clear()
+        for table in TABLES:
+            load_table(spark, SF, table)
         sc.setJobGroup(f"imp-{name}", name)
         qs[name](spark, SF)
         sc.setJobGroup(None, None)
@@ -122,6 +127,10 @@ def test_memoized_frame_still_computes_and_clear_forgets(spark):
     n1 = df1.count()
     assert n1 == qs[name](spark, SF).count()
     memoized = {
+        "corpus_tokens": lambda: dedup.corpus_tokens(spark, SF),
+        "_cluster_labels": lambda: dedup._cluster_labels(
+            spark, SF, dedup.jaccard_pairs_full
+        ),
         "lsh_pair_frame": lambda: dedup.lsh_pair_frame(spark, SF),
         "_pair_counts": lambda: basket._pair_counts(spark, SF),
         "triangle_edges": lambda: basket.triangle_edges(spark, SF),
@@ -139,6 +148,30 @@ def test_memoized_frame_still_computes_and_clear_forgets(spark):
     assert df2.count() == n1
     for m, fn in memoized.items():
         assert fn() is not before[m], f"{m}: clear() must forget it"
+
+
+def test_dedup_index_builds_each_part_once(spark, monkeypatch):
+    """The dedup queries and text_ngram_novelty read the token and
+    shingle frames from the near-duplicate index: building every one of
+    them twice tokenizes and shingles the corpus once each."""
+    import __spark_entry__ as e
+    from ingestprocessstoreinnrt_spark.operators import dedup
+
+    calls = {"_token_frame": 0, "_shingle_frame": 0}
+    for fn_name in calls:
+        fn = getattr(dedup, fn_name)
+
+        def counted(docs, fn=fn, fn_name=fn_name):
+            calls[fn_name] += 1
+            return fn(docs)
+
+        monkeypatch.setattr(dedup, fn_name, counted)
+    reg = e.registry()
+    planmemo.clear()
+    for _ in range(2):
+        for name in [*dedup.QUERIES, "text_ngram_novelty"]:
+            reg[name].build(spark, SF)
+    assert calls == {"_token_frame": 1, "_shingle_frame": 1}
 
 
 def test_fitted_index_leaves_no_quantized_frame_cached(spark):
@@ -299,5 +332,5 @@ def test_no_memo_outside_planmemo():
                     found.append(f"{rel}:{node.lineno} {name}")
     assert not found, (
         "module-level memo outside planmemo — use "
-        f"planmemo.session_memo(spark, name): {found}"
+        f"planmemo.session_memo(spark, name, sf_dir, part, build): {found}"
     )

@@ -3,6 +3,7 @@ pushdown or a broadcast that degraded to sort-merge — these do."""
 
 from __future__ import annotations
 
+from ingestprocessstoreinnrt_spark import planmemo
 from ingestprocessstoreinnrt_spark.operators import bi, entity
 from ingestprocessstoreinnrt_spark.plans import explain as E
 from tests.conftest import SF_ORACLE
@@ -53,8 +54,10 @@ def test_jaccard_full_avoids_nested_loop_join(spark):
     from ingestprocessstoreinnrt_spark.catalog import fan_out, load_table
 
     plan = E.formatted_plan(
-        dedup._ppjoin_pairs(
-            fan_out(load_table(spark, SF_ORACLE, "documents"))
+        dedup._ppjoin_pairs_from(
+            dedup._token_frame(
+                fan_out(load_table(spark, SF_ORACLE, "documents"))
+            )
         )
     )
     assert "BroadcastNestedLoopJoin" not in plan
@@ -439,55 +442,60 @@ def test_r6_ops_have_clean_plans(spark):
     # frames cached by earlier test files dedup into these plans as
     # InMemoryTableScan and hide the join nodes under inspection.
     spark.catalog.clearCache()
-    from ingestprocessstoreinnrt_spark.operators import curation, dedup
+    try:
+        from ingestprocessstoreinnrt_spark.operators import curation, dedup
 
-    from ingestprocessstoreinnrt_spark.operators import (
-        graph,
-        ml,
-        timeseries,
-    )
-
-    # single-row stat-anchor ride-ins (global sums / centroid rows)
-    # legitimately plan as BNLJ; corpus-scale ops must not
-    for df in (
-        ml.target_encoding(spark, SF_ORACLE),
-    ):
-        body = E.formatted_plan(df).split("== Physical Plan ==")[-1]
-        assert "CartesianProduct" not in body
-
-    for df in (
-        curation.remove_repetition(spark, SF_ORACLE),
-        curation.strip_boilerplate(spark, SF_ORACLE),
-        curation.decontaminate(spark, SF_ORACLE),
-        dedup.containment_pairs(spark, SF_ORACLE),
-        timeseries.stl_decompose(spark, SF_ORACLE),
-        graph.harmonic_landmarks(spark, SF_ORACLE),
-    ):
-        body = E.formatted_plan(df).split("== Physical Plan ==")[-1]
-        assert "CartesianProduct" not in body
-        assert "BroadcastNestedLoopJoin" not in body
-
-    s = E.formatted_plan(dedup.dedup_semantic(spark, SF_ORACLE)).split(
-        "== Physical Plan =="
-    )[-1]
-    assert "CartesianProduct" not in s
-    # The BNLJ lines are all the SAME plan node — the single-row
-    # centroid ride-in (ml._cdf_of: a one-row broadcast, the
-    # whitelisted stat-anchor shape), textually repeated because the
-    # cached assignment frame feeds every arm of the salted pair join.
-    # The corpus-scale joins (pair generation + verify lookups) must
-    # all be equi-joins, so distinct BNLJ node ids stay at 1.
-    import re
-
-    bnlj_ids = {
-        m.group(1)
-        for m in re.finditer(
-            r"BroadcastNestedLoopJoin[^(]*\((\d+)\)", s
+        from ingestprocessstoreinnrt_spark.operators import (
+            graph,
+            ml,
+            timeseries,
         )
-    }
-    # <=2: the ride-in can plan as separate nodes for the fit-frame
-    # arm vs the assignment arm depending on cache materialization
-    assert len(bnlj_ids) <= 2, s
+
+        # single-row stat-anchor ride-ins (global sums / centroid rows)
+        # legitimately plan as BNLJ; corpus-scale ops must not
+        for df in (
+            ml.target_encoding(spark, SF_ORACLE),
+        ):
+            body = E.formatted_plan(df).split("== Physical Plan ==")[-1]
+            assert "CartesianProduct" not in body
+
+        for df in (
+            curation.remove_repetition(spark, SF_ORACLE),
+            curation.strip_boilerplate(spark, SF_ORACLE),
+            curation.decontaminate(spark, SF_ORACLE),
+            dedup.containment_pairs(spark, SF_ORACLE),
+            timeseries.stl_decompose(spark, SF_ORACLE),
+            graph.harmonic_landmarks(spark, SF_ORACLE),
+        ):
+            body = E.formatted_plan(df).split("== Physical Plan ==")[-1]
+            assert "CartesianProduct" not in body
+            assert "BroadcastNestedLoopJoin" not in body
+
+        s = E.formatted_plan(dedup.dedup_semantic(spark, SF_ORACLE)).split(
+            "== Physical Plan =="
+        )[-1]
+        assert "CartesianProduct" not in s
+        # The BNLJ lines are all the SAME plan node — the single-row
+        # centroid ride-in (ml._cdf_of: a one-row broadcast, the
+        # whitelisted stat-anchor shape), textually repeated because the
+        # cached assignment frame feeds every arm of the salted pair join.
+        # The corpus-scale joins (pair generation + verify lookups) must
+        # all be equi-joins, so distinct BNLJ node ids stay at 1.
+        import re
+
+        bnlj_ids = {
+            m.group(1)
+            for m in re.finditer(
+                r"BroadcastNestedLoopJoin[^(]*\((\d+)\)", s
+            )
+        }
+        # <=2: the ride-in can plan as separate nodes for the fit-frame
+        # arm vs the assignment arm depending on cache materialization
+        assert len(bnlj_ids) <= 2, s
+    finally:
+        # the memoized index parts lost their cache above; forget
+        # them so later tests rebuild and re-cache them
+        planmemo.clear()
 
 
 def test_r7_ops_have_clean_plans(spark):
@@ -796,41 +804,46 @@ def test_r9_sim_ops_have_clean_plans(spark):
 
     # uncached plans required — see test_r6_ops_have_clean_plans
     spark.catalog.clearCache()
-    from ingestprocessstoreinnrt_spark.operators import similarity
+    try:
+        from ingestprocessstoreinnrt_spark.operators import similarity
 
-    body = E.formatted_plan(
-        similarity.ivfpq_search(spark, SF_ORACLE)
-    ).split("== Physical Plan ==")[-1]
-    assert "CartesianProduct" not in body, body
-    assert re.search(r"keys \[1\]: \[cid#\d+", body), body
-    assert "BroadcastHashJoin" in body, body
-    # 8 = the 1-row artifact rides only: coarse-centroid row + codebook
-    # row on each of (index build, probe side, dt side) plus the
-    # re-planned qraw arm — every BNLJ build side is <= N_QUERIES rows
-    ids = {
-        m.group(1)
-        for m in re.finditer(r"BroadcastNestedLoopJoin[^(]*\((\d+)\)", body)
-    }
-    assert len(ids) <= 8, body
+        body = E.formatted_plan(
+            similarity.ivfpq_search(spark, SF_ORACLE)
+        ).split("== Physical Plan ==")[-1]
+        assert "CartesianProduct" not in body, body
+        assert re.search(r"keys \[1\]: \[cid#\d+", body), body
+        assert "BroadcastHashJoin" in body, body
+        # 8 = the 1-row artifact rides only: coarse-centroid row + codebook
+        # row on each of (index build, probe side, dt side) plus the
+        # re-planned qraw arm — every BNLJ build side is <= N_QUERIES rows
+        ids = {
+            m.group(1)
+            for m in re.finditer(r"BroadcastNestedLoopJoin[^(]*\((\d+)\)", body)
+        }
+        assert len(ids) <= 8, body
 
-    body2 = E.formatted_plan(
-        similarity.ann_lsh_incremental(spark, SF_ORACLE)
-    ).split("== Physical Plan ==")[-1]
-    assert "CartesianProduct" not in body2, body2
-    ids2 = {
-        m.group(1)
-        for m in re.finditer(r"BroadcastNestedLoopJoin[^(]*\((\d+)\)", body2)
-    }
-    assert len(ids2) <= 1, body2
+        body2 = E.formatted_plan(
+            similarity.ann_lsh_incremental(spark, SF_ORACLE)
+        ).split("== Physical Plan ==")[-1]
+        assert "CartesianProduct" not in body2, body2
+        ids2 = {
+            m.group(1)
+            for m in re.finditer(r"BroadcastNestedLoopJoin[^(]*\((\d+)\)", body2)
+        }
+        assert len(ids2) <= 1, body2
 
-    # IVFADC serve: same cell-pruned shape as the raw-code serve
-    body3 = E.formatted_plan(
-        similarity.ivfpq_residual_search(spark, SF_ORACLE)
-    ).split("== Physical Plan ==")[-1]
-    assert "CartesianProduct" not in body3, body3
-    assert re.search(r"keys \[1\]: \[cid#\d+", body3), body3
-    ids3 = {
-        m.group(1)
-        for m in re.finditer(r"BroadcastNestedLoopJoin[^(]*\((\d+)\)", body3)
-    }
-    assert len(ids3) <= 8, body3
+        # IVFADC serve: same cell-pruned shape as the raw-code serve
+        body3 = E.formatted_plan(
+            similarity.ivfpq_residual_search(spark, SF_ORACLE)
+        ).split("== Physical Plan ==")[-1]
+        assert "CartesianProduct" not in body3, body3
+        assert re.search(r"keys \[1\]: \[cid#\d+", body3), body3
+        ids3 = {
+            m.group(1)
+            for m in re.finditer(r"BroadcastNestedLoopJoin[^(]*\((\d+)\)", body3)
+        }
+        assert len(ids3) <= 8, body3
+    finally:
+        # the memoized index parts lost their cache above; forget
+        # them so later tests rebuild and re-cache them
+        planmemo.clear()

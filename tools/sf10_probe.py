@@ -48,6 +48,7 @@ DEFAULT_DIRS = [
 
 
 def main() -> None:
+    from ingestprocessstoreinnrt_spark import planmemo
     from ingestprocessstoreinnrt_spark.session import get_spark
     import __spark_entry__ as entry
 
@@ -65,6 +66,7 @@ def main() -> None:
         label = os.path.basename(sf_dir.rstrip("/"))
         for op in OPS:
             spark.catalog.clearCache()
+            planmemo.clear()
             t0 = time.perf_counter()
             n = qs[op](spark, sf_dir).count()
             sec = round(time.perf_counter() - t0, 2)
